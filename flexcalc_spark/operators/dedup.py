@@ -399,31 +399,18 @@ def _hashed_tok_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Permutation i re-hashes each token hash with seed i; the whole
-# 64-slot signature is one nested HOF over the pre-hashed tokens.
+# Permutation i re-hashes each token hash with seed i (ANSI-safe —
+# Spark 4's default ANSI mode forbids the wrapping-multiply permutation
+# trick); the whole 64-slot signature is one nested HOF over the
+# pre-hashed tokens: no explode, no shuffle. Token hashing is hoisted
+# OUT of the permutation lambda (htoks), so each token is hashed 1 + 64
+# times, not 2 x 64 — and the generated method stays small (a 64-column
+# min-aggregate version of this spent ~7 s per run just compiling its
+# codegen).
 _SIG_EXPR = f"""
     transform(sequence(0, {N_MINHASH - 1}),
               i -> array_min(transform(htoks, h -> xxhash64(i, h))))
 """
-
-
-def _sig_from_htoks(df: DataFrame) -> DataFrame:
-    """(doc_id, htoks) -> (doc_id, sig: array<long>[64]).
-
-    Permutation i re-hashes each token hash with seed i (ANSI-safe —
-    Spark 4's default ANSI mode forbids the wrapping-multiply permutation
-    trick). One nested higher-order expression: no explode, no shuffle.
-    Token hashing is hoisted OUT of the permutation lambda (htoks), so
-    each token is hashed 1 + 64 times, not 2 x 64 — and the generated
-    method stays small (a 64-column min-aggregate version of this spent
-    ~7 s per run just compiling its codegen)."""
-    return df.select("doc_id", F.expr(_SIG_EXPR).alias("sig"))
-
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig: array<long>[64]): per-doc minima of 64 hash
-    permutations, computed entirely per-row."""
-    return _sig_from_htoks(_hashed_tok_sets(spark, sf_dir))
 
 
 @register(
@@ -531,7 +518,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc's token array (the same shape as the minhash signature):
     no explode, no shuffle, and no 64-column aggregate (the previous
     64-wide HashAggregate formulation spent seconds per run compiling
-    its generated code — same lesson as _sig_from_htoks)."""
+    its generated code — same lesson as _SIG_EXPR)."""
     t = _hashed_tok_sets(spark, sf_dir)
     # sign(sum of ±1) > 0  <=>  2 * popcount_of_bit > n_tokens: counting
     # raw bits keeps the inner lambda to 2 ops per (token, bit) — these

@@ -635,10 +635,9 @@ def q_source_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale_notes=(
         "Avro round-trip WITHOUT the spark-avro jar (an external Spark "
         "module, not loadable offline): sources/avrocodec.py is a "
-        "dependency-free pure-Python implementation of the public Avro "
-        "1.12 spec (full type system, container files, all six spec "
-        "codecs incl. snappy/zstandard via snappycodec.py/"
-        "zstdcodec.py), "
+        "pure-Python implementation of the public Avro 1.12 spec (full "
+        "type system, container files, all six spec codecs; snappy and "
+        "zstandard run on the libsnappy/libzstd that pyarrow bundles), "
         "cross-verified record-exact BOTH directions against the "
         "official Java implementation on Spark's own classpath "
         "(avro-1.12.1.jar via py4j, tests/test_avro.py). Write: one "
@@ -877,15 +876,13 @@ def q_source_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.read.text('*.zst') requires the NATIVE hadoop+libzstd "
         "build (absent in JVM-only deployments — this container's "
         "NativeCodeLoader warning), so this path is binaryFile + the "
-        "pure-Python RFC 8878 decoder (sources/zstdcodec.py, "
+        "libzstd that pyarrow bundles (sources/zstdcodec.py, "
         "cross-verified against zstd-jni) in ONE Arrow-batched "
-        "decompress-and-split pass; the JSON parse then runs JVM-side "
-        "via from_json inside codegen, never in Python. Writes are "
-        "REAL compressed frames (chain-and-lazy LZ77 + Huffman "
-        "literals + predefined-FSE sequence coding, 0.32 of raw on "
-        "this corpus = 1.35x the reference level-1 bytes; raw-block "
-        "fallback when compression would not win) via attempt-unique "
-        "temp + rename; the read "
+        "decompress-and-split pass, capped mid-decode by the shared "
+        "untrusted-bytes output bound; the JSON parse then runs "
+        "JVM-side via from_json inside codegen, never in Python. "
+        "Writes are libzstd level-1 frames carrying a content "
+        "checksum, via attempt-unique temp + rename; the read "
         "side handles any conforming frame — a zstd-jni level-3 shard "
         "is part of the round-trip test. File-granular parallelism like every "
         "container source here: shard count IS the parallelism, and "
@@ -896,7 +893,7 @@ def q_source_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_source_jsonl_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write documents as .jsonl.zst shards (one per partition), read
-    them back distributed (pure-Python zstd decompress, JVM-side JSON
+    them back distributed (pyarrow's libzstd decompress, JVM-side JSON
     parse), and aggregate per (lang, source) — grades the full
     compressed-shard round-trip against the parquet oracle."""
     import json
@@ -1009,7 +1006,7 @@ def _parse_zst_content(content_df: DataFrame, schema: str) -> DataFrame:
 
 def read_jsonl_zst(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Directory of ``.jsonl.zst`` shards -> DataFrame of ``schema``:
-    binaryFile scan, Arrow-batched pure-Python zstd decompress + line
+    binaryFile scan, Arrow-batched libzstd decompress + line
     split (the only Python step), then JVM-side from_json — the parse
     stays inside whole-stage codegen. Accepts any conforming zstd
     frames — shards from external tools, not just our own writes

@@ -5,7 +5,7 @@ not loadable offline in this container (SURVEY.md: "Avro is correctly
 absent: its jar isn't loadable offline"), but Avro remains one of the
 three dominant row-interchange formats real ingest directories ship
 (beside JSON-lines and ORC). This module closes that boundary the same
-way jpegcodec.py closed the image one: a dependency-free pure-Python
+way jpegcodec.py closed the image one: a pure-Python
 implementation of the PUBLIC specification — Apache Avro 1.12.x
 "Specification" (binary encoding + object container files) — with the
 verification standard raised one notch above the JPEG lockstep-encoder
@@ -26,11 +26,12 @@ Supported (the full spec surface minus RPC):
   multi-block files, NEGATIVE block counts on read (the spec's
   size-prefixed variant), and ALL SIX of the spec's codecs: ``null``,
   ``deflate`` (raw RFC 1951 via zlib), ``snappy`` (snappycodec.py —
-  pure-Python raw snappy + the spec's big-endian CRC32 of the
-  uncompressed block), ``bzip2`` and ``xz`` (stdlib bz2/lzma), and
-  ``zstandard`` (zstdcodec.py — pure-Python full RFC 8878 decoder +
-  store-mode encoder, cross-verified both directions against the
-  classpath's zstd-jni; tests/test_zstd.py);
+  raw snappy blocks + the spec's big-endian CRC32 of the uncompressed
+  block), ``bzip2`` and ``xz`` (stdlib bz2/lzma), and ``zstandard``
+  (zstdcodec.py); snappy and zstandard wrap the libsnappy/libzstd that
+  pyarrow bundles, cross-verified both directions against the
+  classpath's snappy-java and zstd-jni (tests/test_snappy.py,
+  tests/test_zstd.py);
 - logical types (the warehouse-interchange workhorses): ``decimal``
   (bytes or fixed two's-complement unscaled), ``uuid``, ``date``,
   ``time-millis/micros``, ``timestamp-millis/micros`` and their

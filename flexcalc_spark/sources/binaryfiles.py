@@ -1176,13 +1176,6 @@ def _resize_half_stack(stack: np.ndarray) -> np.ndarray:
     ) / 4.0
 
 
-def _resize_half(arr: np.ndarray) -> np.ndarray:
-    """2x downsample by 2x2 block mean (odd trailing row/col trimmed)."""
-    h, w = arr.shape[0] // 2 * 2, arr.shape[1] // 2 * 2
-    a = arr[:h, :w].astype(np.float64)
-    return (a[0::2, 0::2] + a[0::2, 1::2] + a[1::2, 0::2] + a[1::2, 1::2]) / 4.0
-
-
 def media_resize(df: DataFrame) -> DataFrame:
     """Resize pass: decode + 2x block-mean downsample per media row.
     Block-mean preserves the global mean exactly (in double math), which

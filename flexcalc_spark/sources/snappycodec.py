@@ -1,181 +1,51 @@
-"""Pure-Python raw Snappy (block format) codec.
+"""Raw Snappy (block format) via the libsnappy that pyarrow bundles.
 
-Snappy is the DEFAULT Avro codec in most production ingest pipelines,
-and neither python-snappy nor cramjam ships in this container — so the
-same closure as avrocodec.py: a dependency-free implementation of the
-PUBLIC format description (google/snappy format_description.txt — the
-raw block format, which is what Avro frames; NOT the streaming/framing
-format), cross-verified both directions against the official
-snappy-java implementation on Spark's classpath
-(snappy-java-1.1.10.8.jar via py4j, tests/test_avro.py): bytes we
-compress decompress exactly under Java, and Java-compressed bytes
-decompress exactly here.
+Snappy is the default Avro codec in most production ingest pipelines;
+Avro frames the raw block format (google/snappy format_description.txt),
+not the streaming/framing format. tests/test_snappy.py cross-verifies
+both directions against the snappy-java on Spark's classpath.
 
 Format: a little-endian varint preamble (uncompressed length), then
-tagged elements — literals (tag & 3 == 0, length in the tag or 1-4
-trailing bytes) and back-references (1/2/4-byte offsets, possibly
-overlapping, copied byte-by-byte per LZ77 semantics).
-
-The compressor mirrors the reference strategy at small scale: input is
-fragmented into 64 KiB blocks, each matched greedily via an exact dict
-keyed on the 4-byte window, emitting 2-byte-offset copies (offsets never exceed the
-fragment, so 2 bytes always suffice) and literals between matches.
-Compression ratio is within ~10-20% of the reference on text; the
-decompressor accepts EVERYTHING the reference can emit (all three copy
-widths, 4-byte literal lengths, overlapping copies).
+tagged literal and copy elements. Corrupt input raises ``ValueError``
+(the repo-wide codec contract).
 """
 
 from __future__ import annotations
 
-_BLOCK = 65536
-_MIN_MATCH = 4
+import pyarrow as pa
 
 
-def _varint_encode(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _varint_decode(buf: bytes, pos: int) -> tuple[int, int]:
+def _varint_decode(buf: bytes) -> tuple[int, int]:
+    """The length preamble -> (value, bytes consumed); at most 5 bytes
+    (the format's 32-bit length)."""
     n = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("snappy: truncated length preamble")
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
+    for i, b in enumerate(buf[:5]):
+        n |= (b & 0x7F) << (7 * i)
         if not b & 0x80:
-            return n, pos
-        shift += 7
-        if shift > 35:
-            raise ValueError("snappy: length varint too long")
+            return n, i + 1
+    if len(buf) < 5:
+        raise ValueError("snappy: truncated length preamble")
+    raise ValueError("snappy: length varint too long")
 
 
 def decompress(data: bytes) -> bytes:
     """Decompress a raw snappy block (the Avro/parquet page framing)."""
-    expected, pos = _varint_decode(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        if len(out) > expected:
-            # Same posture as the zstd decoder: corrupt/crafted input
-            # must fail at the offending op, not after full expansion.
-            raise ValueError(
-                "snappy: output exceeds declared length preamble")
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                extra = ln - 59  # 60..63 -> 1..4 length bytes
-                if pos + extra > n:
-                    raise ValueError("snappy: truncated literal length")
-                ln = int.from_bytes(data[pos : pos + extra], "little")
-                pos += extra
-            ln += 1
-            if pos + ln > n:
-                raise ValueError("snappy: truncated literal")
-            out += data[pos : pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            if pos >= n:
-                raise ValueError("snappy: truncated copy-1")
-            off = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise ValueError("snappy: truncated copy-2")
-            off = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise ValueError("snappy: truncated copy-4")
-            off = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy: copy offset out of range")
-        start = len(out) - off
-        if off >= ln:
-            out += out[start : start + ln]
-        else:  # overlapping copy: byte-by-byte LZ77 semantics
-            for i in range(ln):
-                out.append(out[start + i])
-    if len(out) != expected:
+    n, pos = _varint_decode(data)
+    # The body bounds the output: a 2-byte-offset copy, the densest
+    # element, emits at most 64 bytes per 3 input bytes. Check before
+    # decoding because Arrow allocates the declared size up front.
+    if 3 * n > 64 * (len(data) - pos):
         raise ValueError(
-            f"snappy: decompressed {len(out)} bytes, preamble said {expected}"
-        )
-    return bytes(out)
-
-
-def _emit_literal(out: bytearray, lit: memoryview) -> None:
-    ln = len(lit) - 1
-    if ln < 60:
-        out.append(ln << 2)
-    elif ln < 1 << 8:
-        out.append(60 << 2)
-        out.append(ln)
-    else:  # fragments are <= 64 KiB, so 2 length bytes always suffice
-        out.append(61 << 2)
-        out += ln.to_bytes(2, "little")
-    out += lit
-
-
-def _emit_copy(out: bytearray, off: int, ln: int) -> None:
-    # split long matches: a 2-byte-offset copy carries 1..64 bytes
-    # (only 1-byte-offset copies are restricted to 4..11)
-    while ln > 64:
-        out.append((63 << 2) | 2)
-        out += off.to_bytes(2, "little")
-        ln -= 64
-    out.append(((ln - 1) << 2) | 2)
-    out += off.to_bytes(2, "little")
+            f"snappy: length preamble {n} exceeds what "
+            f"{len(data) - pos} body bytes can produce")
+    try:
+        return pa.decompress(data, decompressed_size=n, codec="snappy",
+                             asbytes=True)
+    except (OSError, pa.ArrowException) as exc:
+        raise ValueError(f"snappy: corrupt or truncated block ({exc})") \
+            from exc
 
 
 def compress(data: bytes) -> bytes:
-    """Compress to a raw snappy block (greedy reference-style matcher)."""
-    out = bytearray(_varint_encode(len(data)))
-    view = memoryview(data)
-    for frag_start in range(0, len(data), _BLOCK):
-        frag = view[frag_start : frag_start + _BLOCK]
-        m = len(frag)
-        if m < _MIN_MATCH:
-            if m:
-                _emit_literal(out, frag)
-            continue
-        table: dict[bytes, int] = {}
-        i = 0
-        lit_start = 0
-        while i + _MIN_MATCH <= m:
-            key = bytes(frag[i : i + _MIN_MATCH])
-            prev = table.get(key)
-            table[key] = i
-            if prev is None:
-                i += 1
-                continue
-            # extend the match forward
-            j = i + _MIN_MATCH
-            k = prev + _MIN_MATCH
-            while j < m and frag[j] == frag[k]:
-                j += 1
-                k += 1
-            if i > lit_start:
-                _emit_literal(out, frag[lit_start:i])
-            _emit_copy(out, i - prev, j - i)
-            i = j
-            lit_start = i
-        if lit_start < m:
-            _emit_literal(out, frag[lit_start:m])
-    return bytes(out)
+    """Compress to a raw snappy block."""
+    return pa.compress(data, codec="snappy", asbytes=True)

@@ -341,17 +341,14 @@ def _drain_shuffle_partitions(spark: SparkSession, sf_dir: str | None = None):
     linearly with input until the core count caps it — at production
     scale the cap binds and behavior is unchanged (state sizing there
     is GB-per-partition, a cluster conf; see OPTIMIZATION_r15.md).
-    Env override: SPARK_GRAFT_STREAM_SHUFFLE. Without ``sf_dir`` the
-    old core-count behavior is kept (test drains)."""
+    Without ``sf_dir`` the old core-count behavior is kept (test
+    drains)."""
     import os
 
     from flexcalc_spark.tables import scoped_shuffle_partitions
 
     n = None
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        n = max(1, int(env))
-    elif sf_dir is not None:
+    if sf_dir is not None:
         # getsize on a DIRECTORY returns the inode size (~4096) without
         # raising, so a partitioned directory layout must be summed
         # explicitly — never sized from the dir entry (r15 review).

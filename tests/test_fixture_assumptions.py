@@ -10,6 +10,8 @@ Run at every round start (part of the default suite).
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -557,7 +559,12 @@ def test_round14_exact_rational_boundary_headroom(duck2, sf):
     assert 24 * int(vi_mag) < lim, f"{sf}: MAD 24*|vi| at {vi_mag}"
 
 
-@pytest.mark.parametrize("sf", SFS + ["/root/testdata/sf0.1"])
+_SF01 = os.path.join(os.path.dirname(SFS[1]), "sf0.1")
+
+
+@pytest.mark.parametrize("sf", SFS + [pytest.param(
+    _SF01, marks=pytest.mark.skipif(not os.path.isdir(_SF01),
+                                    reason="sf0.1 fixture absent"))])
 def test_documents_text_never_null(duck2, sf):
     """r14: q_bm25 derives its document count and per-doc length from
     the token-frequency relation (one tokenize pass) instead of a

@@ -1,9 +1,9 @@
 """Raw snappy block codec vs the official snappy-java implementation.
 
-snappycodec.py implements the public snappy format description in pure
-Python; Spark's classpath ships snappy-java (used for shuffle
-compression), so the cross-implementation tests compress/decompress in
-BOTH directions against ``org.xerial.snappy.Snappy`` via py4j.
+snappycodec.py wraps the libsnappy that pyarrow bundles; Spark's
+classpath ships snappy-java (used for shuffle compression), so the
+cross-implementation tests compress/decompress in BOTH directions
+against ``org.xerial.snappy.Snappy`` via py4j.
 """
 
 from __future__ import annotations
@@ -14,6 +14,16 @@ import random
 import pytest
 
 from flexcalc_spark.sources import snappycodec as sn
+
+
+def _varint(n: int) -> bytes:
+    """The format's little-endian base-128 length preamble."""
+    out = bytearray()
+    while n >= 0x80:
+        out.append((n & 0x7F) | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
 
 
 def _cases() -> list[bytes]:
@@ -43,17 +53,15 @@ def test_compression_actually_compresses():
 
 
 def test_one_byte_offset_and_four_byte_literal_decode():
-    """Our compressor only emits 2-byte-offset copies and short
-    literals; the reference can emit 1-byte-offset copies and 2-4-byte
-    literal lengths — hand-craft those forms so the decoder's full
-    surface is pinned without Java."""
+    """Hand-craft a 1-byte-offset overlapping copy and a 3-byte literal
+    length so those element forms are pinned without Java."""
     # literal "ab", then copy len=5 off=2 with a 1-byte offset tag
     body = bytes([1 << 2]) + b"ab" + bytes([((5 - 4) << 2) | 1 | (0 << 5), 2])
-    data = sn._varint_encode(7) + body
+    data = _varint(7) + body
     assert sn.decompress(data) == b"abababa"
     # a 70000-byte literal needs a 3-byte (tag 62) length encoding
     lit = os.urandom(70_000)
-    data = sn._varint_encode(len(lit)) + bytes([62 << 2]) + (
+    data = _varint(len(lit)) + bytes([62 << 2]) + (
         len(lit) - 1
     ).to_bytes(3, "little") + lit
     assert sn.decompress(data) == lit
@@ -65,10 +73,10 @@ def test_corrupt_raises():
         sn.decompress(good[:-3])  # truncated
     with pytest.raises(ValueError):
         # preamble length lie
-        sn.decompress(sn._varint_encode(999) + good[1:])
+        sn.decompress(_varint(999) + good[1:])
     with pytest.raises(ValueError):
         # copy offset beyond output start
-        sn.decompress(sn._varint_encode(4) + bytes([((4 - 4) << 2) | 1, 9]))
+        sn.decompress(_varint(4) + bytes([((4 - 4) << 2) | 1, 9]))
 
 
 def test_java_cross_implementation(spark):
@@ -102,15 +110,17 @@ def test_corruption_fuzz_raises_only_valueerror():
         # any OTHER exception type propagates and fails the test
 
 
-def test_output_capped_at_declared_length_mid_decode():
-    """Same posture as the zstd decoder (ADVICE r11 class): output past
-    the length preamble must fail at the offending op, not after the
-    whole stream expands."""
-    # preamble says 4 bytes, first literal already emits 10, and a
-    # second op follows so the mid-decode check (not the frame-end
-    # equality check) is what fires
-    crafted = sn._varint_encode(4)
-    crafted += bytes([(10 - 1) << 2]) + b"ABCDEFGHIJ"   # literal(10)
-    crafted += bytes([0 << 2]) + b"Z"                    # literal(1)
-    with pytest.raises(ValueError, match="exceeds declared length"):
+def test_preamble_beyond_body_bound_raises_before_allocation():
+    """Arrow allocates the declared length up front, so a 10-byte body
+    whose preamble claims 4 GiB must be refused before decoding: no
+    body can expand past 64 output bytes per 3 input bytes. The pool's
+    peak shows no 4 GiB output buffer was ever allocated."""
+    import pyarrow as pa
+
+    crafted = _varint((1 << 32) - 1) + bytes([8 << 2]) + b"ABCDEFGHI"
+    with pytest.raises(ValueError, match="preamble"):
         sn.decompress(crafted)
+    assert pa.default_memory_pool().max_memory() < 1 << 32
+    # the densest legal body (long runs of 64-byte copies) still decodes
+    zeros = b"\x00" * 1_000_000
+    assert sn.decompress(sn.compress(zeros)) == zeros

@@ -871,8 +871,6 @@ def test_drain_partitions_size_by_input_bytes(spark, tmp_path):
     on a dir returns the inode size ~4096 WITHOUT raising, so the
     pre-fix code silently sized any partitioned layout to 1 — this
     test fails there), and (c) the missing-file core-count fallback."""
-    import os
-
     cores = spark.sparkContext.defaultParallelism
 
     def scoped_value(sf_dir):
@@ -901,10 +899,3 @@ def test_drain_partitions_size_by_input_bytes(spark, tmp_path):
     empty = tmp_path / "empty"
     empty.mkdir()
     assert scoped_value(str(empty)) == cores
-
-    # env override wins and is clamped to >= 1
-    os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "0"
-    try:
-        assert scoped_value(str(flat)) == 1
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_SHUFFLE"]

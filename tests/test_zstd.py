@@ -1,15 +1,13 @@
 """Zstandard (RFC 8878) codec vs the official zstd-jni implementation.
 
-zstdcodec.py implements the full RFC 8878 decompression grammar plus
-an encoder (chain-and-lazy LZ77, Huffman literals with direct or
-FSE-coded weights, predefined-FSE sequences, raw/RLE store fallback)
-in pure Python; Spark's classpath ships zstd-jni
-(used for shuffle/parquet compression), so the cross-implementation
-tests run BOTH directions against ``com.github.luben.zstd.Zstd`` via
-py4j — the same standard snappycodec/avrocodec are held to. Reference
-frames at levels 1/3/9/19/22 exercise every literals mode (raw, RLE, Huffman
-1/4-stream, treeless), every sequence-table mode (predefined, RLE,
-FSE-compressed, repeat), repeat offsets, and xxh64 content checksums.
+zstdcodec.py wraps the libzstd that pyarrow bundles; Spark's classpath
+ships zstd-jni (used for shuffle/parquet compression), so the
+cross-implementation tests run BOTH directions against
+``com.github.luben.zstd.Zstd`` via py4j — the same standard
+snappycodec/avrocodec are held to. The remaining tests pin the
+wrapper's own contract: every frame we write carries a content checksum,
+and corrupt, truncated, over-window and over-cap input raises
+``ValueError`` only.
 """
 
 from __future__ import annotations
@@ -20,6 +18,8 @@ import random
 import pytest
 
 from flexcalc_spark.sources import zstdcodec as zc
+
+ZSTD_MAGIC = 0xFD2FB528
 
 
 def _cases() -> dict[str, bytes]:
@@ -36,14 +36,9 @@ def _cases() -> dict[str, bytes]:
         "one": b"x",
         "empty": b"",
         "utf": "héllo wörld ünïcode ".encode() * 6000,
-        # few-match ASCII: exercises the encoder's Huffman-literals
-        # path (and the decoder's 4-stream read of our own frames)
         "ascii_nomatch": bytes(rng.choices(b"abcdefgh", k=80_000)),
         "skewed": bytes(rng.choices(
             b"aaaaaaaaaaaaaaaabcdefghijklmnopqrstuvwxyz0123", k=90_000)),
-        # high-byte alphabets (highest literal > 128): the encoder must
-        # emit FSE-COMPRESSED Huffman weights (direct 4-bit form caps
-        # at 128 weight positions) — the UTF-8 corpus shape
         "cyrillic": _cyrillic_text(),
         "high_bytes": bytes(random.Random(13).choices(
             bytes(range(120, 250)), k=80_000)),
@@ -67,18 +62,12 @@ def test_xxh64_spec_vector():
 
 def test_encoder_roundtrip():
     for name, c in _cases().items():
-        for checksum in (True, False):
-            assert zc.decompress(zc.compress(c, checksum=checksum)) == c, (
-                name, checksum)
-        assert zc.decompress(zc.compress(c, store=True)) == c, name
+        assert zc.decompress(zc.compress(c)) == c, name
 
 
 def test_encoder_actually_compresses():
     c = b'{"user": 123, "event": "click", "value": 4.5}\n' * 3000
-    z = zc.compress(c)
-    assert len(z) < len(c) // 2
-    # store mode must NOT entropy-code (raw/RLE blocks only)
-    assert len(zc.compress(c, store=True)) > len(c)
+    assert len(zc.compress(c)) < len(c) // 2
     # incompressible input falls back to raw blocks (no expansion
     # beyond the fixed frame overhead)
     r = _cases()["rand"]
@@ -86,8 +75,8 @@ def test_encoder_actually_compresses():
 
 
 def test_multiblock_and_rle():
-    # > 128 KiB forces multiple blocks; a constant chunk takes the RLE
-    # block path (4 bytes instead of 128K)
+    # > 128 KiB forces multiple blocks; a constant input compresses to
+    # a few bytes per block
     c = b"\x07" * 300_000
     z = zc.compress(c)
     assert len(z) < 64
@@ -106,8 +95,8 @@ def test_multi_frame_and_skippable():
 
 def test_known_reference_frames_decode():
     """Byte-pinned zstd-jni level-3 frames (captured once) so the
-    decoder's sequence/FSE/repeat-offset paths are exercised without a
-    JVM — the Java test below regenerates these live."""
+    sequence/FSE/repeat-offset paths are exercised without a JVM — the
+    Java test below regenerates these live."""
     for hexs, want in [
         ("28b52ffd60e8024d00001000000100e32b8005", b"\x00" * 1000),
         ("28b52ffd6058014d0000106162010053aa1c16", b"ab" * 300),
@@ -119,10 +108,12 @@ def test_known_reference_frames_decode():
 
 def test_corrupt_raises():
     good = zc.compress(b"hello world " * 100)
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="truncated"):
         zc.decompress(good[:-3])  # truncated
     with pytest.raises(ValueError):
         zc.decompress(b"\x00\x00\x00\x00" + good[4:])  # bad magic
+    with pytest.raises(ValueError):
+        zc.decompress(good + b"garbage!")  # trailing bytes
     with pytest.raises(ValueError):
         zc.decompress(b"")
     # checksum mismatch: flip a content byte inside a checksummed frame
@@ -151,10 +142,8 @@ def test_java_cross_implementation(spark):
     for name, c in cases.items():
         if not c:
             continue
-        for kw in ({}, {"store": True}, {"level": 1}):
-            got = bytes(Z.decompress(bytearray(zc.compress(c, **kw)),
-                                     len(c)))
-            assert got == c, (name, kw)
+        got = bytes(Z.decompress(bytearray(zc.compress(c)), len(c)))
+        assert got == c, name
     # long-offset and >64K-match shapes the mixed cases may not hit
     for c in (bytes(random.Random(3).randbytes(50)) * 4000,
               b"X" * 70_000 + b"Y" + b"X" * 70_000):
@@ -163,9 +152,7 @@ def test_java_cross_implementation(spark):
 
 def test_java_checksummed_frames(spark):
     """Reference frames WITH content checksums: decoding them verifies
-    our xxh64 against the reference's on real payloads (and the
-    reference verifies ours on every store-mode frame, which always
-    carries a checksum)."""
+    libzstd's checksum check on real payloads."""
     ctx = spark._jvm.com.github.luben.zstd.ZstdCompressCtx()
     ctx.setLevel(3)
     ctx.setChecksum(True)
@@ -176,57 +163,43 @@ def test_java_checksummed_frames(spark):
         assert zc.decompress(jc) == c, name
 
 
-def test_large_frame_uses_bounded_window(spark):
-    """Frames past 1 MiB must declare a 128 KiB window descriptor, not
-    Single_Segment (whose implied window = content size would exceed
-    default decoder window limits at real shard sizes -- r11 review
-    finding). Pinned structurally AND by the reference decoder."""
+def test_every_frame_carries_checksum_verified_by_zstd_jni(spark):
+    """compress() appends an xxh64 content checksum to libzstd's
+    frame: the flag is set on every frame, zstd-jni accepts the frame,
+    and rejects it once a content byte is flipped."""
+    Z = spark._jvm.com.github.luben.zstd.Zstd
+    for name, c in _cases().items():
+        framed = zc.compress(c)
+        assert (framed[4] >> 2) & 1 == 1, name  # Content_Checksum_flag
+        if not c:
+            continue
+        assert bytes(Z.decompress(bytearray(framed), len(c))) == c, name
+    # incompressible input is stored as a raw block, so the byte before
+    # the 4-byte checksum is plain content only the checksum guards
+    c = random.Random(17).randbytes(10_000)
+    flipped = bytearray(zc.compress(c))
+    flipped[-5] ^= 0x01
+    with pytest.raises(Exception, match="(?i)checksum"):
+        Z.decompress(bytearray(flipped), len(c))
+    with pytest.raises(ValueError):
+        zc.decompress(bytes(flipped))
+
+
+def test_large_frame_decodes_under_zstd_jni(spark):
+    """A > 1 MiB frame we write decodes under the reference decoder
+    with its default window limit (real shards are 100 MB-1 GB)."""
     data = (b"some log line with request id 12345 and a payload\n"
             * 40_000)  # ~2 MB
     framed = zc.compress(data)
-    fhd = framed[4]
-    assert (fhd >> 5) & 1 == 0  # Single_Segment off
-    assert framed[5] == 7 << 3  # window descriptor: 2^17 = 128 KiB
     assert zc.decompress(framed) == data
     Z = spark._jvm.com.github.luben.zstd.Zstd
     assert bytes(Z.decompress(bytearray(framed), len(data))) == data
-    small = zc.compress(b"tiny")
-    assert (small[4] >> 5) & 1 == 1  # small frames stay Single_Segment
-
-
-def test_multiblock_rep_history_carries_across_blocks():
-    """The repeat-offset history is per FRAME, not per block (RFC 8878
-    §3.1.1.5): an encoder that reset it per block emitted rep codes
-    that decode to wrong offsets in block 2+ of varied multi-block
-    input (r11 review finding; silent corruption with checksum=False).
-    This corpus reproduces the failure shape: ~540 KB / 5 blocks of
-    varied JSONL."""
-    import json
-
-    rng = random.Random(7)
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-             "eta", "theta", "iota", "kappa", "request", "response",
-             "click", "view", "purchase"]
-    rows = [json.dumps({
-        "id": i, "user": rng.randrange(10_000),
-        "event": rng.choice(words),
-        "msg": " ".join(rng.choices(words, k=rng.randrange(3, 18))),
-        "value": rng.randrange(10**6) / 100,
-    }, sort_keys=True) for i in range(4000)]
-    payload = ("\n".join(rows) + "\n").encode()
-    assert len(payload) > 4 * 128 * 1024  # genuinely multi-block
-    for lvl in (1, 3):
-        for checksum in (True, False):
-            z = zc.compress(payload, checksum=checksum, level=lvl)
-            assert zc.decompress(z) == payload, (lvl, checksum)
 
 
 def test_roundtrip_property_fuzz():
-    """Hypothesis-style structured fuzz without the JVM: random
-    payloads across the encoder's structural breakpoints (empty /
-    sub-min-match / single-block / exactly-one-block / multi-block /
-    RLE runs / high-byte alphabets), both levels, both checksum
-    settings — every frame must round-trip through our decoder."""
+    """Structured fuzz without the JVM: random payloads across block
+    breakpoints (empty / tiny / exactly-one-block / multi-block / RLE
+    runs / high-byte alphabets) must round-trip."""
     rng = random.Random(0xC0DEC)
     sizes = [0, 1, 3, 4, 5, 63, 64, 1023, 1024,
              128 * 1024 - 1, 128 * 1024, 128 * 1024 + 1, 300_001]
@@ -235,29 +208,24 @@ def test_roundtrip_property_fuzz():
     for size in sizes:
         for alpha in alphabets:
             payload = bytes(rng.choices(alpha, k=size))
-            for lvl in (1, 3):
-                for checksum in (True, False):
-                    z = zc.compress(payload, level=lvl,
-                                    checksum=checksum)
-                    assert zc.decompress(z) == payload, (
-                        size, alpha[:4], lvl, checksum)
+            assert zc.decompress(zc.compress(payload)) == payload, (
+                size, alpha[:4])
 
 
 def test_corruption_fuzz_raises_only_valueerror():
     """The repo-wide codec contract: corrupt bytes raise ValueError so
-    upstream readers can degrade PER ROW — an IndexError/KeyError
-    leaking from any decode path breaks that silently (the r10 'leak
-    through the ValueError contract' class). Deterministic sweep:
-    truncations, bit flips, and byte edits over frames that exercise
-    every block/literals/sequence shape; each mutation must either
-    decode (a mutation may land in an ignored field) or raise
-    ValueError specifically."""
+    upstream readers can degrade PER ROW — an OSError or ArrowException
+    leaking from libzstd breaks that silently. Deterministic sweep:
+    truncations, bit flips, and byte edits over compressed, raw-block,
+    RLE and reference frames; each mutation must either decode (a
+    mutation may land in an ignored field) or raise ValueError
+    specifically."""
     rng = random.Random(0xFADE)
     bases = [
-        zc.compress(b'{"user": 123, "event": "click"}\n' * 2000),  # LZ
-        zc.compress(bytes(rng.choices(b"abcdefgh", k=40_000))),  # Huffman
+        zc.compress(b'{"user": 123, "event": "click"}\n' * 2000),
+        zc.compress(bytes(rng.choices(b"abcdefgh", k=40_000))),
         zc.compress(bytes(rng.choices(bytes(range(128, 250)),
-                                      k=40_000))),  # FSE weights
+                                      k=40_000))),
         zc.compress(random.Random(1).randbytes(10_000)),  # raw blocks
         zc.compress(b"\x07" * 50_000),  # RLE block
         # pinned reference frame (predefined sequence tables)
@@ -278,8 +246,6 @@ def test_corruption_fuzz_raises_only_valueerror():
                 zc.decompress(bytes(mutated))
             except ValueError:
                 pass  # the contract
-            except AssertionError:
-                raise
             # any OTHER exception type propagates and fails the test
             checked += 1
     assert checked == len(bases) * 120
@@ -288,7 +254,7 @@ def test_corruption_fuzz_raises_only_valueerror():
 def _frame_header(fcs_flag: int, window_desc: int | None,
                   fcs_bytes: bytes) -> bytearray:
     """Hand-build a non-single-segment frame header (no checksum)."""
-    out = bytearray(zc.ZSTD_MAGIC.to_bytes(4, "little"))
+    out = bytearray(ZSTD_MAGIC.to_bytes(4, "little"))
     out.append(fcs_flag << 6)
     if window_desc is not None:
         out.append(window_desc)
@@ -301,49 +267,53 @@ def _rle_block(size: int, byte: int, last: bool) -> bytes:
         3, "little") + bytes([byte])
 
 
+_WINDOW_128K = (17 - 10) << 3  # window descriptor: 2^17 bytes
+
+
 def test_output_bound_enforced_during_decode():
-    """ADVICE r11: decompress() must cap output DURING block decode —
-    a crafted frame of chained RLE blocks otherwise expands ~32768:1
-    before any frame-end check fires (measured 806 B -> 25 MiB)."""
+    """Crafted frames whose blocks break the format's size limits fail
+    at the offending block instead of expanding ~32768:1."""
     # (a) declared window 1 KiB (wd=0) but an RLE block regenerating
     # 128 KiB violates Block_Maximum_Size = min(window, 128 KiB)
     attack = _frame_header(0, 0x00, b"")
     for i in range(200):
         attack += _rle_block(131072, 0x41, last=(i == 199))
-    with pytest.raises(ValueError, match="Block_Maximum_Size"):
+    with pytest.raises(ValueError):
         zc.decompress(bytes(attack))
-    # (b) max window: a raw block claiming > 128 KiB is still corrupt
-    big_raw = _frame_header(0, 0xFF, b"")
+    # (b) a raw block claiming > 128 KiB is corrupt whatever the window
+    big_raw = _frame_header(0, _WINDOW_128K, b"")
     big_raw += ((131073 << 3) | 1).to_bytes(3, "little") + b"\x00" * 131073
-    with pytest.raises(ValueError, match="Block_Maximum_Size"):
+    with pytest.raises(ValueError):
         zc.decompress(bytes(big_raw))
-    # (c) output passing the declared FCS raises at the offending
-    # block, not at frame end: fcs_flag=1 declares 256 bytes but the
-    # chained RLE blocks regenerate 128 KiB each
-    lying = _frame_header(1, 0xFF, (0).to_bytes(2, "little"))  # fcs=256
+    # (c) output passing the declared FCS raises: fcs_flag=1 declares
+    # 256 bytes but the chained RLE blocks regenerate 128 KiB each
+    lying = _frame_header(1, _WINDOW_128K, (0).to_bytes(2, "little"))
     for i in range(50):
         lying += _rle_block(131072, 0x42, last=(i == 49))
-    with pytest.raises(ValueError, match="declared frame content size"):
+    with pytest.raises(ValueError):
         zc.decompress(bytes(lying))
-    # legitimate highly-compressible frames still decode (multi-block
-    # RLE path, 300 KiB from < 64 bytes)
-    c = b"\x07" * 300_000
-    assert zc.decompress(zc.compress(c)) == c
 
 
-def test_ncount_writer_rejects_unnormalized_counts():
-    """ADVICE r11: the normalized-counts precondition (violation =
-    infinite loop) must survive python -O — ValueError, not assert."""
-    with pytest.raises(ValueError, match="normalized"):
-        zc._fse_write_ncount([3, 2, 1], 5)  # sums to 6, not 32
+def test_window_above_128_mib_raises():
+    """libzstd refuses frames declaring a window above 128 MiB (only
+    ``zstd --long=28`` and up writes them); that surfaces as the
+    contract's ValueError, while a 128 MiB window still decodes."""
+    def frame(window_log: int) -> bytes:
+        return bytes(_frame_header(0, (window_log - 10) << 3, b"")
+                     + _rle_block(100, 0x41, last=True))
+
+    assert zc.decompress(frame(27)) == b"A" * 100
+    for window_log in (28, 31):
+        with pytest.raises(ValueError):
+            zc.decompress(frame(window_log))
 
 
 def _bomb_compressed_block(n_seq: int, last: bool) -> bytes:
-    """A format-valid btype=2 block that regenerates ~65.5 KiB PER
-    SEQUENCE from ~2 bytes of input each: empty raw literals, RLE
-    sequence tables (0-bit state updates) with ll=0 / of_code=0
-    (repeat-offset) / ML code 52 (base 65539, 16 extra bits, supplied
-    as zeros in the backward bitstream)."""
+    """A btype=2 block that regenerates ~65.5 KiB PER SEQUENCE from ~2
+    bytes of input each: empty raw literals, RLE sequence tables (0-bit
+    state updates) with ll=0 / of_code=0 (repeat-offset) / ML code 52
+    (base 65539, 16 extra bits, supplied as zeros in the backward
+    bitstream)."""
     assert n_seq < 128
     body = bytearray()
     body.append(0x00)               # literals: raw, regenerated size 0
@@ -357,39 +327,36 @@ def _bomb_compressed_block(n_seq: int, last: bool) -> bytes:
 
 
 def test_compressed_block_bomb_capped_mid_decode():
-    """ADVICE r12 (high): the output caps fired only BETWEEN blocks —
-    _decode_block's sequence loop appended matches unbounded, so one
-    <=128 KiB compressed block could regenerate ~8.5 GB before any
-    check (verified PoC: 3 KB in -> 136 MB materialized). The limit
-    must be enforced INSIDE the per-sequence loop: this frame's single
-    compressed block would regenerate ~8.3 MB (127 seqs x 65539 B)
-    against a 128 KiB Block_Maximum_Size, and must raise mid-decode
-    at the offending sequence (the pre-fix code decodes everything and
-    raises the post-hoc 'regenerates past' error instead)."""
-    frame = _frame_header(0, 0xFF, b"")        # no FCS, max window
+    """One compressed block whose sequences would regenerate ~8.3 MB
+    (127 seqs x 65539 B) against a 128 KiB Block_Maximum_Size must
+    raise, capped or not. A format-legal no-FCS bomb (512 RLE blocks,
+    64 MiB from ~2 KB) stops at the caller's cap with the output-bound
+    error instead of materializing."""
+    frame = _frame_header(0, _WINDOW_128K, b"")  # no FCS
     frame += _rle_block(1000, 0x41, last=False)  # history for offsets
     frame += _bomb_compressed_block(127, last=True)
-    with pytest.raises(ValueError, match="mid-decode"):
+    with pytest.raises(ValueError):
         zc.decompress(bytes(frame))
-    # caller max_output binds tighter than Block_Maximum_Size when
-    # smaller: same bomb, cap of 10 KB -> still the mid-decode error
-    with pytest.raises(ValueError, match="mid-decode"):
+    with pytest.raises(ValueError):
         zc.decompress(bytes(frame), max_output=10_000)
+    legal = _frame_header(0, _WINDOW_128K, b"")
+    for i in range(512):
+        legal += _rle_block(131072, 0x41, last=(i == 511))
+    with pytest.raises(ValueError, match="output bound"):
+        zc.decompress(bytes(legal), max_output=1 << 20)
 
 
 def test_no_fcs_frame_bounded_by_caller_max_output():
     """A no-FCS streaming frame is format-legal at ~32768x expansion —
     untrusted-bytes callers pass max_output for a hard mid-decode
     ceiling (the jsonl.zst and Avro readers do)."""
-    frame = _frame_header(0, 0xFF, b"")      # fcs_flag=0: no FCS field
+    frame = _frame_header(0, _WINDOW_128K, b"")  # fcs_flag=0: no FCS
     for i in range(1000):
         frame += _rle_block(100, 0x58, last=(i == 999))
     # uncapped: legal, decodes to 100 KB
     assert zc.decompress(bytes(frame)) == b"\x58" * 100_000
-    # capped: fails at the offending block, not after full expansion
     with pytest.raises(ValueError, match="max_output"):
         zc.decompress(bytes(frame), max_output=50_000)
-    # FCS-bearing frames are capped by their declaration even when the
-    # caller bound is looser
+    # a cap looser than the content leaves decoding unchanged
     assert zc.decompress(zc.compress(b"ok" * 50), max_output=1 << 20) \
         == b"ok" * 50
