@@ -62,10 +62,6 @@ def _tok_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _jaccard(a: Column, b: Column) -> Column:
-    return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
-
-
 @register(
     "q_dedup_exact",
     oracle="""
@@ -84,30 +80,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("cnt"), F.min("doc_id").alias("keeper"))
     )
-
-
-def _prefix_candidates(items: DataFrame, num: int, den: int) -> DataFrame:
-    """PPJoin-style candidate pairs for jaccard >= num/den within group.
-
-    ``items``: (doc_id, grp, items: array<string>). Tokens are hashed
-    (xxhash64 — order-consistent across docs; a collision can only ADD
-    candidates) and ordered rarest-first by document frequency; each doc
-    indexes only its prefix of length |A| - ceil(tau*|A|) + 1. Theorem
-    (Chaudhuri et al.): jac(A,B) >= tau implies |A∩B| >= ceil(tau*|A|),
-    which forces a shared element inside both prefixes — so the equi
-    join on (grp, token) below has GUARANTEED recall; the exact
-    re-score keeps output identical to the all-pairs formulation.
-
-    All threshold arithmetic is integer (ceil(num*s/den) via div): the
-    FP form `least >= 0.95d * greatest` silently over-prunes exact
-    boundary pairs because 0.95d * 20 = 19.000000000000004 > 19.
-
-    Scale: one O(total tokens) narrow shuffle to rank tokens, one equi
-    join on (grp, token) whose bucket sizes follow the token-frequency
-    tail (rare tokens first keeps buckets small on Zipfian corpora),
-    one distinct on integer id pairs. Never O(n²)."""
-    ranked = _ranked_token_arrays(items)
-    return _prefix_candidates_from_ranked(ranked, num, den)
 
 
 SIG_WORDS = 16                    # 64-bit words per doc gram bitmap
@@ -167,7 +139,17 @@ def _ranked_token_arrays(items: DataFrame, with_sig: bool = False) -> DataFrame:
 def _prefix_candidates_from_ranked(
     ranked: DataFrame, num: int, den: int, pair_pred: Column | None = None
 ) -> DataFrame:
-    """``pair_pred`` (over aliases ``a``/``b``) replaces the default
+    """PPJoin-style candidate pairs (id_a, id_b) for jaccard >= num/den
+    within ``grp``, over ``_ranked_token_arrays`` output: each doc
+    indexes only its rarest-first prefix of length |A| - ceil(tau*|A|)
+    + 1. Theorem (Chaudhuri et al.): jac(A,B) >= tau implies |A∩B| >=
+    ceil(tau*|A|), which forces a shared element inside both prefixes,
+    so the equi join on (grp, token) has GUARANTEED recall. Threshold
+    arithmetic is integer (ceil via div): the FP form `least >= 0.95d *
+    greatest` over-prunes exact boundary pairs (0.95d * 20 =
+    19.000000000000004 > 19).
+
+    ``pair_pred`` (over aliases ``a``/``b``) replaces the default
     ``a.doc_id < b.doc_id`` pair orientation — used by the incremental
     variant to emit only corpus-vs-incoming pairs. The prefix theorem is
     orientation-agnostic (it bounds which TOKENS a qualifying pair must
@@ -584,8 +566,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# single source of truth for the HOF dot-product template
-from flexcalc_spark.operators.vectors import _dot as _dot_spark  # noqa: E402
+# single source of truth for the HOF dot-product and sign-band templates
+from flexcalc_spark.operators.vectors import _dot as _dot_spark, sign_band_keys  # noqa: E402
 
 EMBED_BLOCK = 256          # vectors per GEMM block
 GEMM_MARGIN = 1e-9         # candidate slack >> BLAS-vs-fold summation drift
@@ -888,6 +870,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bands with p ~ 2.6e-8.
 
 EMBED_LSH_TAU = 0.9
+EMBED_LSH_SEED = 20260814
 EMBED_LSH_PLANES = 64
 EMBED_LSH_BANDS = 8            # 8 bands x 8 bits
 EMBED_PLANT_N = 200
@@ -917,38 +900,6 @@ def _planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     return base.unionByName(plant)
-
-
-def _embed_band_keys() -> list:
-    """8 band keys (8 sign bits each) under fixed seeded hyperplanes.
-
-    Each key is ONE F.expr over generated SQL text rather than 64
-    py4j-built when/fold Columns: building Column trees call-by-call
-    costs a py4j round trip per node and the giant tree re-analyzes at
-    every later DataFrame step (measured 1.2s -> 0.4s bucket build,
-    identical values — each plane's fold text is unchanged, so the
-    sign bits are bit-identical)."""
-    import numpy as np
-
-    rng = np.random.RandomState(20260814)
-    planes = rng.standard_normal((EMBED_LSH_PLANES, 64)).tolist()
-
-    def bit(plane: list) -> str:
-        arr = ", ".join(repr(v) + "D" for v in plane)
-        return (
-            "(CASE WHEN aggregate(zip_with(embedding, array(" + arr
-            + "), (x, y) -> x * y), CAST(0.0 AS DOUBLE),"
-            " (acc, t) -> acc + t) > 0 THEN 1 ELSE 0 END)"
-        )
-
-    per_band = EMBED_LSH_PLANES // EMBED_LSH_BANDS
-    keys = []
-    for bnd in range(EMBED_LSH_BANDS):
-        txt = "0"
-        for i in range(per_band):
-            txt = f"({txt} * 2 + {bit(planes[bnd * per_band + i])})"
-        keys.append(F.expr(txt))
-    return keys
 
 
 # Exact all-pairs oracle over the planted corpus — shared by BOTH
@@ -1043,9 +994,10 @@ def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         b = c.select(
             "vec_id",
-            F.posexplode(F.array(*_embed_band_keys())).alias(
-                "band", "band_key"
-            ),
+            F.posexplode(F.array(*sign_band_keys(
+                EMBED_LSH_SEED, EMBED_LSH_PLANES, EMBED_LSH_BANDS,
+                EMBED_LSH_PLANES // EMBED_LSH_BANDS,
+            ))).alias("band", "band_key"),
         )
         return c, b
 
@@ -1117,32 +1069,6 @@ EMBED_WIDE_BANDS = 4           # 4 bands x 16 bits over the same planes
 EMBED_WIDE_BITS = 16
 
 
-def _embed_band_keys_wide() -> list:
-    """4 band keys (16 sign bits each) over the SAME seeded hyperplanes
-    as the 8x8 tier (regrouped), as generated-SQL-text F.exprs (the
-    py4j/plan-construction rule — see _embed_band_keys)."""
-    import numpy as np
-
-    rng = np.random.RandomState(20260814)
-    planes = rng.standard_normal((EMBED_LSH_PLANES, 64)).tolist()
-
-    def bit(plane: list) -> str:
-        arr = ", ".join(repr(v) + "D" for v in plane)
-        return (
-            "(CASE WHEN aggregate(zip_with(embedding, array(" + arr
-            + "), (x, y) -> x * y), CAST(0.0 AS DOUBLE),"
-            " (acc, t) -> acc + t) > 0 THEN 1 ELSE 0 END)"
-        )
-
-    keys = []
-    for bnd in range(EMBED_WIDE_BANDS):
-        txt = "0L"
-        for i in range(EMBED_WIDE_BITS):
-            txt = f"({txt} * 2 + {bit(planes[bnd * EMBED_WIDE_BITS + i])})"
-        keys.append(F.expr(txt))
-    return keys
-
-
 @register(
     "q_dedup_embed_lsh_wide",
     oracle=_EMBED_LSH_EXACT_ORACLE,
@@ -1186,9 +1112,10 @@ def q_dedup_embed_lsh_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s = c.select(
             "vec_id",
-            F.posexplode(F.array(*_embed_band_keys_wide())).alias(
-                "band", "bkey"
-            ),
+            F.posexplode(F.array(*sign_band_keys(
+                EMBED_LSH_SEED, EMBED_LSH_PLANES, EMBED_WIDE_BANDS,
+                EMBED_WIDE_BITS,
+            ))).alias("band", "bkey"),
         )
         return c, s
 
@@ -1736,10 +1663,12 @@ def _twostage_candidate_pairs(d: DataFrame) -> DataFrame:
     groupBy leaves ~274k pairs in AQE-byte-coalesced partitions)."""
     spark = d.sparkSession
     items = _twostage_items(d).cache()
+    # per-document sizes grow with the corpus: no broadcast hint, AQE
+    # broadcasts them while they fit
     szs = items.select(F.col("doc_id").alias("id_a"), F.size("items").alias("sz_a"))
     return (
         _twostage_pair_counts(items)
-        .join(F.broadcast(szs), "id_a")
+        .join(szs, "id_a")
         .filter(
             F.col("isz") * TWOSTAGE_CAND_DEN
             >= TWOSTAGE_CAND_NUM * F.col("sz_a")
@@ -1757,10 +1686,11 @@ def _twostage_candidate_pairs(d: DataFrame) -> DataFrame:
     family="dedup",
     scale_notes=(
         "the two-stage containment composition, graded end-to-end as a "
-        "rows-only key: stage 1 generates candidate pairs with the "
-        "word-2-gram shingle machinery (shared _containment_pairs — "
-        "guaranteed-recall rarest-first prefix probe, PPJoin positional "
-        "filter) at candidate tau 0.2, stage 2 re-scores ONLY those "
+        "rows-only key: stage 1 generates candidate pairs from word-2-"
+        "gram shingles at candidate tau 0.2 with the exact inverted-"
+        "index COUNT form (_twostage_candidate_pairs: hashed shingles "
+        "exploded, equi self-joined, COUNT(*) per pair = |A∩B|, kept "
+        "where |A∩B| >= 0.2·|A|), stage 2 re-scores ONLY those "
         "candidates with exact char-5-gram containment at tau 0.8. "
         "Recall is EMPIRICAL, not pigeonhole: a char-gram pair is "
         "emitted iff its word-level containment reaches 0.2, and the "

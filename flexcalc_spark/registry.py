@@ -126,18 +126,19 @@ def register(
 # Rotation applied by scripts/rotate_grade_order.py from
 # CORRECTNESS history through r15 — stalest evidence
 # first, prior relative order preserved inside each tier.
-# Tiers at rotation time (never-graded/failed/changed: 2, r9: 14, r10: 34, r11: 39, r12: 39, r13: 42, r14: 36, r15: 50).
-# Front of the next graded window: q_source_avro, q_source_jsonl_zst, q_join_asof, ...
+# Tiers at rotation time (never-graded/failed/changed: 6, r9: 14, r10: 34, r11: 39, r12: 39, r13: 42, r14: 36, r15: 46).
+# Front of the next graded window: q_source_avro, q_source_jsonl_zst, q_dedup_containment_2stage, ...
 GRADE_ORDER: list[str] = [
-    "q_source_avro", "q_source_jsonl_zst", "q_join_asof", "q_join_salted",
-    "q_agg_distinct", "q_agg_approx", "q_agg_approx_percentile", "q_pivot",
-    "q_unpivot", "q_histogram", "q_agg_collect", "q_agg_minmax_by",
-    "q_agg_global", "q_agg_groupby", "q_agg_stats", "q_agg_percentile",
-    "q_agg_weighted_centroid", "q_rollup", "q_cube", "q_grouping_sets",
-    "q_scan_project", "q_sketch_hll", "q_sliding_distinct",
-    "q_quality_entropy", "q_anomaly_zscore", "q_retention",
-    "q_session_stats", "q_cooccur", "q_agg_skew_distinct", "q_join_bloom",
-    "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
+    "q_source_avro", "q_source_jsonl_zst", "q_dedup_containment_2stage",
+    "q_knn_lsh", "q_dedup_embed_lsh_wide", "q_dedup_embed_lsh",
+    "q_join_asof", "q_join_salted", "q_agg_distinct", "q_agg_approx",
+    "q_agg_approx_percentile", "q_pivot", "q_unpivot", "q_histogram",
+    "q_agg_collect", "q_agg_minmax_by", "q_agg_global", "q_agg_groupby",
+    "q_agg_stats", "q_agg_percentile", "q_agg_weighted_centroid", "q_rollup",
+    "q_cube", "q_grouping_sets", "q_scan_project", "q_sketch_hll",
+    "q_sliding_distinct", "q_quality_entropy", "q_anomaly_zscore",
+    "q_retention", "q_session_stats", "q_cooccur", "q_agg_skew_distinct",
+    "q_join_bloom", "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
     "q_table_checksum", "q_sql_tpch3", "q_ngram_lm", "q_data_audit",
     "q_zorder_layout", "q_inverted_index", "q_sql_tpch10", "q_session_paths",
     "q_skyline", "q_corr_matrix", "q_global_rank", "q_multimodal_frames",
@@ -185,17 +186,15 @@ GRADE_ORDER: list[str] = [
     "q_dedup_incremental", "q_data_profile", "q_incr_mv", "q_dedup_minhash",
     "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw",
     "q_dedup_containment_shingle", "q_dedup_containment", "q_label_prop",
-    "q_dedup_containment_2stage", "q_stream_upsert", "q_stream_join",
-    "q_knn_lsh", "q_dedup_embed_lsh_wide", "q_split_dedup_safe",
-    "q_dedup_neardup", "q_dedup_ngram", "q_dedup_clusters",
-    "q_dedup_embed_lsh", "q_bfs_hops", "q_join_bucketed", "q_pack_sequences",
-    "q_mix_sample", "q_sketch_cms", "q_snapshot_diff", "q_join_nullsafe",
-    "q_agg_weighted_median", "q_sql_tpch22", "q_window_session",
-    "q_ct_centre", "q_ct_histogram", "q_ct_bbox", "q_ct_threshold",
-    "q_ct_moments", "q_ct_preprocess", "q_multimodal_features",
-    "q_multimodal_resize", "q_sample_split", "q_sample_stratified",
-    "q_dedup_simhash", "q_knn_ivf", "q_stream_late", "q_gapfill",
-    "q_udaf_grouped", "q_vector_quantize", "q_agg_regression",
+    "q_stream_upsert", "q_stream_join", "q_split_dedup_safe",
+    "q_dedup_neardup", "q_dedup_ngram", "q_dedup_clusters", "q_bfs_hops",
+    "q_join_bucketed", "q_pack_sequences", "q_mix_sample", "q_sketch_cms",
+    "q_snapshot_diff", "q_join_nullsafe", "q_agg_weighted_median",
+    "q_sql_tpch22", "q_window_session", "q_ct_centre", "q_ct_histogram",
+    "q_ct_bbox", "q_ct_threshold", "q_ct_moments", "q_ct_preprocess",
+    "q_multimodal_features", "q_multimodal_resize", "q_sample_split",
+    "q_sample_stratified", "q_dedup_simhash", "q_knn_ivf", "q_stream_late",
+    "q_gapfill", "q_udaf_grouped", "q_vector_quantize", "q_agg_regression",
     "q_window_tumbling", "q_window_sliding", "q_sessionize",
     "q_stream_enrich", "q_win_lag_lead", "q_win_moving", "q_win_range_time",
     "q_win_firstlast", "q_join_range"

@@ -41,26 +41,29 @@ TABLES = [
 NS_PER_US = 1_000
 NS_PER_SEC = 1_000_000_000
 
-# Per-session scan memo: spark.read.parquet costs ~95-135 ms per call
-# (py4j + DataSource resolution + file listing + footer schema read,
-# measured sf0.1 r14) and multi-table keys pay it per table per
-# construction. DataFrames are immutable, so the resolved scan can be
-# handed out again as long as (a) the session is the same live object
-# (a stopped session's plans must never leak into its successor) and
-# (b) the files underneath have not changed (the signature below;
-# tests rewrite tmp fixture dirs in place). The memo dict lives as an
-# ATTRIBUTE on the session object, not in a module-level registry: a
-# WeakKeyDictionary would never evict, because its values (DataFrames)
-# hold a strong reference to their session — the classic weak-dict
-# value-pins-key cycle, verified live in the r14 review — whereas a
-# session-attribute dict is a pure cycle the collector frees with the
-# session once the caller drops it. Self-joins of a memoized scan are
-# safe: Catalyst's relation deduplication assigns the right side fresh
-# attribute ids, and ambiguous object-column conditions fail loudly
-# under the default failAmbiguousSelfJoin — the full verify sweep
-# covers every key.
-_SCAN_MEMO_ATTR = "_flexcalc_scan_memo"
-_SCAN_MEMO_MAX = 512  # tmp-dir tests could otherwise grow it unbounded
+# Per-session memo, one store for scans and analyzed plans:
+# spark.read.parquet costs ~95-135 ms per call (py4j + DataSource
+# resolution + file listing + footer schema read, measured sf0.1 r14)
+# and multi-table keys pay it per table per construction; the LSH
+# literal banks cost ~0.7-0.9 s of Catalyst analysis per build (r15).
+# DataFrames are immutable, so a resolved scan or a built LAZY plan can
+# be handed out again as long as (a) the session is the same live
+# object (a stopped session's plans must never leak into its
+# successor) and (b) the files underneath have not changed (the
+# signature below; tests rewrite tmp fixture dirs in place). The memo
+# dict lives as an ATTRIBUTE on the session object, not in a
+# module-level registry: a WeakKeyDictionary would never evict, because
+# its values (DataFrames) hold a strong reference to their session —
+# the classic weak-dict value-pins-key cycle, verified live in r14 —
+# whereas a session-attribute dict is a pure cycle the collector frees
+# with the session once the caller drops it. At the cap only the
+# OLDEST entry is dropped (FIFO), never the whole store.
+# Self-joins of a memoized scan are safe: Catalyst's relation
+# deduplication assigns the right side fresh attribute ids, and
+# ambiguous object-column conditions fail loudly under the default
+# failAmbiguousSelfJoin — the full verify sweep covers every key.
+_MEMO_ATTR = "_flexcalc_memo"
+_MEMO_MAX = 512  # tmp-dir tests could otherwise grow it unbounded
 
 
 def _session_live(spark: SparkSession) -> bool:
@@ -119,6 +122,24 @@ def _path_sig(path: str):
         return None
 
 
+def _memo(spark: SparkSession, key: tuple, dep_path: str, build):
+    """``build()``'s result, memoized in the session's store under
+    ``key`` plus the staleness signature of ``dep_path``. An unstatable
+    path or a stopped session skips the memo (``build()`` as-is)."""
+    sig = _path_sig(dep_path)
+    if sig is None or not _session_live(spark):
+        return build()
+    memo = vars(spark).setdefault(_MEMO_ATTR, {})
+    key = (*key, sig)
+    val = memo.get(key)
+    if val is None:
+        if len(memo) >= _MEMO_MAX:
+            memo.pop(next(iter(memo)))
+        val = build()
+        memo[key] = val
+    return val
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table as a plain parquet DataFrame."""
     # Let AQE size the output layout of CACHED plans (off by default).
@@ -172,54 +193,20 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         except Exception:
             pass
     path = f"{sf_dir}/{name}.parquet"
-    sig = _path_sig(path)
-    if sig is None or not _session_live(spark):
-        return spark.read.parquet(path)
-    memo = getattr(spark, _SCAN_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _SCAN_MEMO_ATTR, memo)
-    key = (path, sig)
-    df = memo.get(key)
-    if df is None:
-        if len(memo) >= _SCAN_MEMO_MAX:
-            memo.clear()
-        df = spark.read.parquet(path)
-        memo[key] = df
-    return df
-
-
-_PLAN_MEMO_ATTR = "_flexcalc_plan_memo"
+    return _memo(spark, ("scan", path), path, lambda: spark.read.parquet(path))
 
 
 def session_plan_memo(spark: SparkSession, dep_path: str, tag: str, builder):
-    """Session-scoped PLAN-construction memo — the scan-memo pattern
-    (r14) extended to expensive built frames: ``builder()`` returns a
-    LAZY DataFrame (or tuple of them) whose construction cost is
-    analyzer work (e.g. the 64x64-literal LSH band banks, ~0.7-0.9 s
-    of Catalyst analysis per call — measured r15); the memo returns
-    the already-analyzed objects on repeat calls in the same live
-    session. NO results are captured: the frames stay lazy, every
-    execution (localCheckpoint per query call, bench run, oracle run)
-    computes from the parquet inputs. Keyed on (tag, dep_path,
-    recursive file signature) with the scan memo's staleness and
-    liveness rules; stored as a session attribute (never a module
-    WeakKeyDictionary — the r14 leak lesson)."""
-    sig = _path_sig(dep_path)
-    if sig is None or not _session_live(spark):
-        return builder()
-    memo = getattr(spark, _PLAN_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _PLAN_MEMO_ATTR, memo)
-    key = (tag, dep_path, sig)
-    val = memo.get(key)
-    if val is None:
-        if len(memo) >= _SCAN_MEMO_MAX:
-            memo.clear()
-        val = builder()
-        memo[key] = val
-    return val
+    """Session-scoped PLAN-construction memo — the scan memo's store,
+    staleness and liveness rules applied to expensive built frames:
+    ``builder()`` returns a LAZY DataFrame (or tuple of them) whose
+    construction cost is analyzer work (e.g. the 64x64-literal LSH band
+    banks); repeat calls in the same live session return the
+    already-analyzed objects. NO results are captured: the frames stay
+    lazy, every execution (localCheckpoint per query call, bench run,
+    oracle run) computes from the parquet inputs. Keyed on (tag,
+    dep_path, recursive file signature)."""
+    return _memo(spark, ("plan", tag, dep_path), dep_path, builder)
 
 
 def epoch_us_col(df: DataFrame) -> "F.Column":

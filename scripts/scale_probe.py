@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from flexcalc_spark.operators.dedup import (
     JACCARD_TAU,
     _tok_sets,
-    _jaccard,
 )
 from flexcalc_spark import registry
 from flexcalc_spark.session import get_session
@@ -76,6 +75,10 @@ def gen_corpus(spark, n: int, out_dir: str) -> None:
         )
     )
     df.coalesce(4).write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
+
+
+def _jaccard(a, b):
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
 
 
 def allpairs_neardup(spark, sf_dir: str):

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from flexcalc_spark.operators.vectors import sign_band_keys
+
 PLANT = 500
 PLANT_OFFSET = 10_000_000
 TAU = 0.9
@@ -66,41 +68,15 @@ def _dot(a: str, b: str):
     )
 
 
-def _band_keys_16(corpus_planes: int = 64):
-    """4 bands x 16 bits over the same seeded hyperplanes — the
-    near-exact-tier banding (2^16 buckets/band: candidate density
-    n^2/65536 instead of n^2/256, at the cost of boundary recall)."""
-    import numpy as np
-
-    rng = np.random.RandomState(20260814)
-    planes = rng.standard_normal((corpus_planes, 64)).tolist()
-    bits = [
-        F.when(
-            _dot(
-                "embedding",
-                f"array({', '.join(repr(v) + 'D' for v in plane)})",
-            )
-            > 0,
-            1,
-        ).otherwise(0)
-        for plane in planes
-    ]
-    keys = []
-    for bnd in range(4):
-        key = F.lit(0)
-        for i in range(16):
-            key = key * 2 + bits[bnd * 16 + i]
-        keys.append(key)
-    return keys
-
-
 def lsh_pairs(corpus: DataFrame, wide_bands: bool = False) -> DataFrame:
     """The q_dedup_embed_lsh plan, parameterized by corpus: banded
     candidates -> narrow id-pair dedup -> exact re-score at TAU."""
-    from flexcalc_spark.operators.dedup import _embed_band_keys
-
     corpus = corpus.cache()
-    keys = _band_keys_16() if wide_bands else _embed_band_keys()
+    # 4 bands x 16 bits (2^16 buckets/band: candidate density n^2/65536
+    # instead of n^2/256, at the cost of boundary recall) or the graded
+    # 8x8 banding, both over the same 64 seeded hyperplanes
+    keys = (sign_band_keys(20260814, 64, 4, 16) if wide_bands
+            else sign_band_keys(20260814, 64, 8, 8))
     buckets = corpus.select(
         "vec_id",
         F.posexplode(F.array(*keys)).alias("band", "band_key"),
@@ -136,8 +112,6 @@ def lsh_pairs(corpus: DataFrame, wide_bands: bool = False) -> DataFrame:
 def knn_topk(corpus: DataFrame, exact: bool) -> DataFrame:
     """q_knn_lsh's plan over the synthetic corpus (exact=True swaps the
     banded candidates for the brute-force cross of probes x corpus)."""
-    from flexcalc_spark.operators.dedup import _embed_band_keys
-
     corpus = corpus.cache()
     probes = corpus.filter(F.col("vec_id") < N_PROBES)
     if exact:
@@ -150,7 +124,7 @@ def knn_topk(corpus: DataFrame, exact: bool) -> DataFrame:
     else:
         buckets = corpus.select(
             "vec_id",
-            F.posexplode(F.array(*_embed_band_keys())).alias(
+            F.posexplode(F.array(*sign_band_keys(20260814, 64, 8, 8))).alias(
                 "band", "band_key"
             ),
         )

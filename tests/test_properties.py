@@ -110,7 +110,10 @@ def test_prefix_filter_candidates_are_complete(spark, n_docs, vocab, num_den, se
     """The PPJoin prefix-filter candidate set must contain EVERY pair
     with jaccard >= num/den (the guaranteed-recall theorem the graded
     neardup/ngram plans rely on), on arbitrary random token sets."""
-    from flexcalc_spark.operators.dedup import _prefix_candidates
+    from flexcalc_spark.operators.dedup import (
+        _prefix_candidates_from_ranked,
+        _ranked_token_arrays,
+    )
 
     num, den = num_den
     tau = num / den
@@ -136,7 +139,10 @@ def test_prefix_filter_candidates_are_complete(spark, n_docs, vocab, num_den, se
         docs, "doc_id long, grp string, items array<string>"
     )
     cand = {
-        (r.id_a, r.id_b) for r in _prefix_candidates(items, num, den).collect()
+        (r.id_a, r.id_b)
+        for r in _prefix_candidates_from_ranked(
+            _ranked_token_arrays(items), num, den
+        ).collect()
     }
     missing = exact - cand
     assert not missing, f"prefix filter missed qualifying pairs: {missing}"

@@ -10,6 +10,9 @@ sit under the measured values to be seed-robust but catch regressions.
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
 from flexcalc_spark import registry
 from tests.conftest import SF_DIR
 
@@ -80,6 +83,37 @@ def test_connected_components_log_rounds(spark):
     assert len(rows) == 201
     assert all(r.label == 0 for r in rows)
     assert rounds <= 20, f"chain took {rounds} rounds (expected ~2 log n)"
+
+
+@pytest.mark.parametrize(
+    "seed,n_planes,bands,bits",
+    [(20260813, 16, 4, 4), (20260814, 64, 8, 8), (20260814, 64, 4, 16)],
+    ids=["knn_4x4", "embed_8x8", "embed_wide_4x16"],
+)
+def test_sign_band_keys_match_python_fold(spark, seed, n_planes, bands, bits):
+    """Every band key equals a pure-Python left fold ``acc += x*y`` of
+    the float embedding (widened to double) against the seeded planes,
+    its sign bits packed MSB-first, as a BIGINT."""
+    from flexcalc_spark.operators.vectors import sign_band_keys
+    from flexcalc_spark.tables import table
+
+    keys = sign_band_keys(seed, n_planes, bands, bits)
+    df = table(spark, SF_DIR, "embeddings").select(
+        "vec_id", "embedding", *[k.alias(f"k{b}") for b, k in enumerate(keys)]
+    )
+    assert {t for c, t in df.dtypes if c.startswith("k")} == {"bigint"}
+    planes = np.random.RandomState(seed).standard_normal((n_planes, 64)).tolist()
+    rows = df.collect()
+    assert rows
+    for r in rows:
+        for b in range(bands):
+            want = 0
+            for plane in planes[b * bits:(b + 1) * bits]:
+                acc = 0.0
+                for x, y in zip(r.embedding, plane):
+                    acc += float(x) * y
+                want = want * 2 + (acc > 0)
+            assert r[f"k{b}"] == want, (r.vec_id, b)
 
 
 def test_embed_lsh_full_recall_on_planted_pairs(spark):

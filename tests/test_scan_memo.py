@@ -22,6 +22,8 @@ pass on both and guard against a removal, not the r14 fixes):
                        WeakKeyDictionary) holds DataFrames again
 - symlink / onerror -> signature must be None (skip memo), never a
                        blind or partial tuple
+- FIFO eviction     -> fails if the cap clears the whole store
+                       instead of dropping only the oldest entry
 """
 
 from __future__ import annotations
@@ -121,7 +123,7 @@ def test_memo_lives_on_the_session_object_not_in_the_module(spark):
     # module-level registry whose values pin dead sessions' JVM state
     # — including the original WeakKeyDictionary layout (a Mapping but
     # NOT a dict, and holding DataFrames one level down; the first
-    # version of this test checked isinstance(dict) on _SCAN_MEMO*
+    # version of this test checked isinstance(dict) on the memo-attr
     # names only and could not see the exact pattern it guarded
     # against — r14 second review pass).
     from collections.abc import Mapping
@@ -129,7 +131,7 @@ def test_memo_lives_on_the_session_object_not_in_the_module(spark):
     from pyspark.sql import DataFrame
 
     tables.table(spark, "/root/testdata/sf0.001", "nation")
-    assert isinstance(getattr(spark, tables._SCAN_MEMO_ATTR), dict)
+    assert isinstance(getattr(spark, tables._MEMO_ATTR), dict)
 
     offenders = []
     for name, val in vars(tables).items():
@@ -227,7 +229,7 @@ def test_plan_memo_lives_on_session_not_module(spark):
     # same registry rule as the scan memo: no module-level Mapping may
     # hold DataFrames (the r14 WeakKeyDictionary leak class)
     assert isinstance(
-        getattr(spark, tables._PLAN_MEMO_ATTR, {}), dict
+        getattr(spark, tables._MEMO_ATTR, {}), dict
     )
     import collections.abc as abc
 
@@ -236,3 +238,47 @@ def test_plan_memo_lives_on_session_not_module(spark):
             continue
         if isinstance(val, abc.Mapping) and val:
             raise AssertionError(f"module-level mapping holds state: {name}")
+
+
+# --- the one store: FIFO eviction at the cap -------------------------
+
+
+def test_cap_evicts_only_the_oldest_entry(spark, tmp_path, monkeypatch):
+    # Fill a 3-entry store, overflow it by one: only the OLDEST entry
+    # goes. A wholesale clear would also drop c, the newest entry
+    # before the overflow.
+    monkeypatch.setattr(tables, "_MEMO_MAX", 3)
+    monkeypatch.setattr(spark, tables._MEMO_ATTR, {}, raising=False)
+    dep = os.path.join(str(tmp_path), "embeddings.parquet")
+    _write(dep, [1])
+    builds = []
+
+    def memo(tag):
+        return tables.session_plan_memo(
+            spark, dep, tag, lambda: builds.append(tag) or object()
+        )
+
+    a, b, c, d = (memo(t) for t in "abcd")
+    assert builds == list("abcd")
+    assert memo("c") is c and memo("d") is d and memo("b") is b
+    assert memo("a") is not a  # the oldest was evicted: rebuilt
+    assert builds == list("abcda")
+
+
+def test_scans_and_plans_share_one_capped_store(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "_MEMO_MAX", 4)
+    monkeypatch.setattr(spark, tables._MEMO_ATTR, {}, raising=False)
+    sf = str(tmp_path)
+    for name in ("events", "orders", "nation"):
+        _write(os.path.join(sf, f"{name}.parquet"), [1])
+    store = getattr(spark, tables._MEMO_ATTR)
+    for i in range(3):
+        for name in ("events", "orders", "nation"):
+            tables.table(spark, sf, name)
+            assert len(store) <= 4
+            dep = os.path.join(sf, f"{name}.parquet")
+            tables.session_plan_memo(spark, dep, f"t{i}", object)
+            assert len(store) <= 4
+    kinds = {k[0] for k in store}
+    assert kinds == {"scan", "plan"}
+    assert len(store) == 4
