@@ -16,7 +16,11 @@ merge order (integer sums commute). The oracle unrolls the same three
 iterations as chained CTEs, certifying the distributed loop against a
 direct relational evaluation.
 
-Scale: each iteration is one equi-join (ranks x edges on src) plus one
+Scale: the edge table is built once — both directions of each distinct
+pair from one explode, the out-degree as a window count over src — and
+cached. Round 1 needs no join: every node starts at the same rank, so
+its contributions are ``RANK_UNIT div degree`` straight off the edges.
+Each later iteration is one equi-join (ranks x edges on src) plus one
 aggregation (by dst) — at 100 TB both sides hash-partition by node id,
 and pre-partitioning edges ONCE by src lets every iteration reuse the
 layout so only the (node, rank) table (narrow) reshuffles. Lineage
@@ -34,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from flexcalc_spark.registry import register
 from flexcalc_spark.tables import table
@@ -83,11 +88,15 @@ def _iter_sql(prev: str, out: str) -> str:
     scale_notes=(
         "damped power method in 1e12 fixed-point INTEGER arithmetic "
         "(rank div degree contributions, (85*sum) div 100 damping) — "
-        "bit-exact under any partitioning, no FP reorder hazard. Each "
-        "iteration = one equi-join of the narrow (node, rank) table "
-        "against edges pre-joined with out-degrees + one aggregation by "
-        "dst; at 100 TB partition edges ONCE by src and only the rank "
-        "table reshuffles per round; checkpoint ranks past ~10 rounds "
+        "bit-exact under any partitioning, no FP reorder hazard. The "
+        "cached edge table carries its out-degree as a window count "
+        "over src (one exchange, no degree join); round 1 is closed "
+        "form (every node starts at RANK_UNIT, so contributions are "
+        "RANK_UNIT div degree with no join), and rounds 2-3 are each "
+        "one equi-join of the narrow (node, rank) table against the "
+        "edges + one aggregation by dst; at 100 TB partition edges "
+        "ONCE by src and only the rank table reshuffles per round; "
+        "checkpoint ranks past ~10 rounds "
         "to truncate lineage. The oracle unrolls the identical 3 "
         "iterations as CTEs, certifying the loop relationally"
     ),
@@ -98,46 +107,47 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exact 1e12 fixed-point units."""
     li = table(spark, sf_dir, "lineitem")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
-    fwd = pairs.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    rev = pairs.select(
-        (F.col("l_suppkey") * 2 + 1).alias("src"),
-        (F.col("l_partkey") * 2).alias("dst"),
-    )
-    edges = fwd.unionAll(rev)
-    # One cached (src, dst, d) table: reused by all ITERATIONS joins —
-    # the "partition edges once" posture, and the CLAUDE.md cache rule
-    # (the distinct subtree would otherwise recompute per iteration).
-    # The degree join's output is ALREADY hash-partitioned by src; with
-    # canChangeCachedPlanOutputPartitioning=true (set in tables.table)
-    # AQE coalesces that layout into the cache, so the round-7 explicit
-    # repartition(defaultParallelism, src) — one extra full-edge
-    # exchange — is gone. Measured at sf0.1 (round-9 adjudication,
-    # BASELINE.md): 200-partition session 6.9 s -> 4.5 s; 8-partition
-    # bench session unchanged within noise; plain cache without the
-    # conf was the 45 s hazard case.
-    ed = (
-        edges.join(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")), "src"
-        )
-        .select("src", "dst", "d")
-        .cache()
-    )
-    ranks = ed.select("src").distinct().select(
-        F.col("src").alias("node"), F.lit(RANK_UNIT).cast("bigint").alias("r")
-    )
-    for _ in range(ITERATIONS):
-        contrib = ed.join(ranks, ed.src == ranks.node).select(
-            F.col("dst"), F.expr("r div d").alias("c")
-        )
-        ranks = contrib.groupBy("dst").agg(
+    part = F.col("l_partkey") * 2
+    supp = F.col("l_suppkey") * 2 + 1
+    # both directions of each distinct pair from ONE projection of the
+    # distinct subtree (a unionAll of two projections planned it twice)
+    edges = pairs.select(
+        F.explode(F.array(
+            F.struct(part.alias("src"), supp.alias("dst")),
+            F.struct(supp.alias("src"), part.alias("dst")),
+        )).alias("e")
+    ).select("e.src", "e.dst")
+    # One cached (src, dst, d) table, read by every round — the
+    # "partition edges once" posture, and the CLAUDE.md cache rule (the
+    # distinct + window subtree would otherwise recompute per round).
+    # The out-degree is a window count over src, not a groupBy joined
+    # back: one exchange by src, whose layout AQE coalesces into the
+    # cache (canChangeCachedPlanOutputPartitioning=true, set in
+    # tables.table — plain cache without the conf was the round-9 45 s
+    # 200-partition hazard).
+    ed = edges.select(
+        "src", "dst",
+        F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
+    ).cache()
+
+    def damped(contrib: DataFrame) -> DataFrame:
+        return contrib.groupBy("dst").agg(
             (
                 F.lit(TELEPORT)
                 + F.expr(f"({DAMP_NUM} * sum(c)) div {DAMP_DEN}")
             ).alias("r")
         ).select(F.col("dst").alias("node"), "r")
+
+    # Round 1 in closed form: r0 holds every src exactly once at rank
+    # RANK_UNIT, so ed JOIN r0 ON src = node is ed itself and each
+    # contribution is RANK_UNIT div d — no join, same integers.
+    ranks = damped(ed.select("dst", F.expr(f"{RANK_UNIT} div d").alias("c")))
+    for _ in range(ITERATIONS - 1):
+        ranks = damped(
+            ed.join(ranks, ed.src == ranks.node).select(
+                F.col("dst"), F.expr("r div d").alias("c")
+            )
+        )
     return ranks.select(
         F.col("node").cast("bigint").alias("node"),
         F.col("r").cast("bigint").alias("rank"),
@@ -448,8 +458,6 @@ def _label_prop_oracle() -> str:
 def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-round deterministic label propagation on the part-supplier
     graph; community size census (label, n_nodes)."""
-    from pyspark.sql.window import Window
-
     # The propagation loop runs under a core-count shuffle conf (the
     # checkpoint-layout rule — measured 2.3s -> 1.3s; see q_kcore).
     from flexcalc_spark.tables import scoped_shuffle_partitions

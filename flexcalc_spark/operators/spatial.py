@@ -24,6 +24,7 @@ join with haversine verification.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -145,13 +146,11 @@ def q_join_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" + CAST(floor(lon / {CELL_DEG}) AS BIGINT)"
         ),
     )
+    # the 9 (dx, dy) cell offsets as an Arrow table: a LocalTableScan,
+    # not a pickled-row RDD that runs Python-worker tasks per execution
+    offsets = pa.table({"dx": [-1] * 3 + [0] * 3 + [1] * 3, "dy": [-1, 0, 1] * 3})
     sneigh = store.crossJoin(
-        F.broadcast(
-            spark.createDataFrame(
-                [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
-                "dx long, dy long",
-            )
-        )
+        F.broadcast(spark.createDataFrame(offsets, "dx long, dy long"))
     ).select(
         "s_suppkey",
         "lat",

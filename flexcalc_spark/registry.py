@@ -126,75 +126,75 @@ def register(
 # Rotation applied by scripts/rotate_grade_order.py from
 # CORRECTNESS history through r15 — stalest evidence
 # first, prior relative order preserved inside each tier.
-# Tiers at rotation time (never-graded/failed/changed: 6, r9: 14, r10: 34, r11: 39, r12: 39, r13: 42, r14: 36, r15: 46).
+# Tiers at rotation time (never-graded/failed/changed: 16, r9: 14, r10: 33, r11: 38, r12: 39, r13: 42, r14: 30, r15: 44).
 # Front of the next graded window: q_source_avro, q_source_jsonl_zst, q_dedup_containment_2stage, ...
 GRADE_ORDER: list[str] = [
     "q_source_avro", "q_source_jsonl_zst", "q_dedup_containment_2stage",
-    "q_knn_lsh", "q_dedup_embed_lsh_wide", "q_dedup_embed_lsh",
-    "q_join_asof", "q_join_salted", "q_agg_distinct", "q_agg_approx",
-    "q_agg_approx_percentile", "q_pivot", "q_unpivot", "q_histogram",
-    "q_agg_collect", "q_agg_minmax_by", "q_agg_global", "q_agg_groupby",
-    "q_agg_stats", "q_agg_percentile", "q_agg_weighted_centroid", "q_rollup",
-    "q_cube", "q_grouping_sets", "q_scan_project", "q_sketch_hll",
-    "q_sliding_distinct", "q_quality_entropy", "q_anomaly_zscore",
-    "q_retention", "q_session_stats", "q_cooccur", "q_agg_skew_distinct",
-    "q_join_bloom", "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
+    "q_knn_lsh", "q_dedup_embed_lsh_wide", "q_dedup_embed_lsh", "q_pagerank",
+    "q_join_spatial", "q_sink_compacted", "q_source_csv_dirty",
+    "q_source_xml", "q_source_evolving", "q_sink_partitioned", "q_sink_csv",
+    "q_stream_upsert", "q_stream_join", "q_join_asof", "q_join_salted",
+    "q_agg_distinct", "q_agg_approx", "q_agg_approx_percentile", "q_pivot",
+    "q_unpivot", "q_histogram", "q_agg_collect", "q_agg_minmax_by",
+    "q_agg_global", "q_agg_groupby", "q_agg_stats", "q_agg_percentile",
+    "q_agg_weighted_centroid", "q_rollup", "q_cube", "q_grouping_sets",
+    "q_scan_project", "q_sketch_hll", "q_sliding_distinct",
+    "q_quality_entropy", "q_anomaly_zscore", "q_retention",
+    "q_session_stats", "q_cooccur", "q_agg_skew_distinct", "q_join_bloom",
+    "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
     "q_table_checksum", "q_sql_tpch3", "q_ngram_lm", "q_data_audit",
     "q_zorder_layout", "q_inverted_index", "q_sql_tpch10", "q_session_paths",
     "q_skyline", "q_corr_matrix", "q_global_rank", "q_multimodal_frames",
-    "q_ab_test", "q_regression_multi", "q_pagerank", "q_dedup_chunks",
-    "q_anonymize", "q_sql_tpch5", "q_sql_recursive", "q_join_interval_outer",
+    "q_ab_test", "q_regression_multi", "q_dedup_chunks", "q_anonymize",
+    "q_sql_tpch5", "q_sql_recursive", "q_join_interval_outer",
     "q_multimodal_audio", "q_ct_fbp", "q_ewma", "q_debounce",
     "q_seq_pattern", "q_sample_weighted", "q_scd2_pit",
     "q_percentile_select", "q_join_fuzzy", "q_triangle_count",
     "q_anomaly_rolling", "q_feature_hash", "q_logistic_train",
     "q_interval_coalesce", "q_allocate", "q_locf", "q_dedup_phash",
-    "q_pipeline_e2e", "q_sql_tpch18", "q_join_spatial", "q_knn_incremental",
-    "q_scan_count", "q_project_expr", "q_filter_pred", "q_filter_in_like",
-    "q_filter_null", "q_case_when", "q_join_broadcast", "q_join_inner",
-    "q_join_multiway", "q_join_left", "q_join_full", "q_join_semi",
-    "q_join_anti", "q_join_cross", "q_win_rank", "q_win_topk_group",
-    "q_win_running", "q_win_ntile", "q_sort_multi", "q_topk",
-    "q_limit_offset", "q_set_union", "q_set_intersect", "q_set_except",
-    "q_distinct", "q_text_stats", "q_dedup_substring", "q_pii_redact",
-    "q_topic_terms", "q_sql_tpch7", "q_sql_tpch14", "q_sql_tpch19",
-    "q_win_distribution", "q_benford", "q_degree_dist", "q_kcore",
-    "q_naive_bayes", "q_sql_tpch8", "q_sql_tpch4", "q_pca_embed",
-    "q_market_basket", "q_survival", "q_sql_tpch13", "q_sql_tpch21",
-    "q_debounce_anchor", "q_sql_tpch1", "q_sql_tpch6", "q_sql_tpch9",
-    "q_sql_tpch11", "q_sql_tpch12", "q_sql_tpch16", "q_attribution",
-    "q_period_over_period", "q_str_funcs", "q_sssp_cost", "q_cuped",
-    "q_srm_check", "q_rolling_corr", "q_qte", "q_diff_in_diff",
-    "q_target_encode", "q_link_predict", "q_holt_forecast", "q_cohort_ltv",
-    "q_sql_tpch2", "q_sql_tpch15", "q_sql_tpch17", "q_sql_tpch20",
-    "q_str_regexp", "q_str_distance", "q_date_parts", "q_date_arith",
-    "q_math_funcs", "q_array_ops", "q_array_hof", "q_explode", "q_map_json",
-    "q_subquery_scalar", "q_subquery_correlated", "q_subquery_in",
-    "q_udf_scalar", "q_udtf_expand", "q_lang_id", "q_quality_score",
-    "q_token_count", "q_fingerprint", "q_text_chunks", "q_repetition",
-    "q_vocab", "q_corpus_filter", "q_tfidf", "q_knn_cosine", "q_centroids",
-    "q_kmeans", "q_dedup_exact", "q_dedup_embed", "q_stream_dedup",
-    "q_stateful_sessions", "q_funnel", "q_rfm", "q_transitions",
-    "q_time_rollup", "q_concurrency", "q_source_json", "q_source_orc",
-    "q_sink_compacted", "q_rfm_approx", "q_source_warc", "q_source_archive",
-    "q_source_csv_dirty", "q_source_xml", "q_source_evolving",
+    "q_pipeline_e2e", "q_sql_tpch18", "q_knn_incremental", "q_scan_count",
+    "q_project_expr", "q_filter_pred", "q_filter_in_like", "q_filter_null",
+    "q_case_when", "q_join_broadcast", "q_join_inner", "q_join_multiway",
+    "q_join_left", "q_join_full", "q_join_semi", "q_join_anti",
+    "q_join_cross", "q_win_rank", "q_win_topk_group", "q_win_running",
+    "q_win_ntile", "q_sort_multi", "q_topk", "q_limit_offset", "q_set_union",
+    "q_set_intersect", "q_set_except", "q_distinct", "q_text_stats",
+    "q_dedup_substring", "q_pii_redact", "q_topic_terms", "q_sql_tpch7",
+    "q_sql_tpch14", "q_sql_tpch19", "q_win_distribution", "q_benford",
+    "q_degree_dist", "q_kcore", "q_naive_bayes", "q_sql_tpch8",
+    "q_sql_tpch4", "q_pca_embed", "q_market_basket", "q_survival",
+    "q_sql_tpch13", "q_sql_tpch21", "q_debounce_anchor", "q_sql_tpch1",
+    "q_sql_tpch6", "q_sql_tpch9", "q_sql_tpch11", "q_sql_tpch12",
+    "q_sql_tpch16", "q_attribution", "q_period_over_period", "q_str_funcs",
+    "q_sssp_cost", "q_cuped", "q_srm_check", "q_rolling_corr", "q_qte",
+    "q_diff_in_diff", "q_target_encode", "q_link_predict", "q_holt_forecast",
+    "q_cohort_ltv", "q_sql_tpch2", "q_sql_tpch15", "q_sql_tpch17",
+    "q_sql_tpch20", "q_str_regexp", "q_str_distance", "q_date_parts",
+    "q_date_arith", "q_math_funcs", "q_array_ops", "q_array_hof",
+    "q_explode", "q_map_json", "q_subquery_scalar", "q_subquery_correlated",
+    "q_subquery_in", "q_udf_scalar", "q_udtf_expand", "q_lang_id",
+    "q_quality_score", "q_token_count", "q_fingerprint", "q_text_chunks",
+    "q_repetition", "q_vocab", "q_corpus_filter", "q_tfidf", "q_knn_cosine",
+    "q_centroids", "q_kmeans", "q_dedup_exact", "q_dedup_embed",
+    "q_stream_dedup", "q_stateful_sessions", "q_funnel", "q_rfm",
+    "q_transitions", "q_time_rollup", "q_concurrency", "q_source_json",
+    "q_source_orc", "q_rfm_approx", "q_source_warc", "q_source_archive",
     "q_source_nested", "q_trajectory_dtw_radius", "q_autocorr",
     "q_changepoint", "q_seasonal_decompose", "q_histogram_equidepth",
     "q_mad_outliers", "q_histogram_equidepth_approx",
-    "q_mad_outliers_approx", "q_dpp_prune", "q_sink_partitioned",
-    "q_sink_csv", "q_trajectory_sim", "q_decontaminate",
-    "q_dedup_incremental", "q_data_profile", "q_incr_mv", "q_dedup_minhash",
-    "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw",
+    "q_mad_outliers_approx", "q_dpp_prune", "q_trajectory_sim",
+    "q_decontaminate", "q_dedup_incremental", "q_data_profile", "q_incr_mv",
+    "q_dedup_minhash", "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw",
     "q_dedup_containment_shingle", "q_dedup_containment", "q_label_prop",
-    "q_stream_upsert", "q_stream_join", "q_split_dedup_safe",
-    "q_dedup_neardup", "q_dedup_ngram", "q_dedup_clusters", "q_bfs_hops",
-    "q_join_bucketed", "q_pack_sequences", "q_mix_sample", "q_sketch_cms",
-    "q_snapshot_diff", "q_join_nullsafe", "q_agg_weighted_median",
-    "q_sql_tpch22", "q_window_session", "q_ct_centre", "q_ct_histogram",
-    "q_ct_bbox", "q_ct_threshold", "q_ct_moments", "q_ct_preprocess",
-    "q_multimodal_features", "q_multimodal_resize", "q_sample_split",
-    "q_sample_stratified", "q_dedup_simhash", "q_knn_ivf", "q_stream_late",
-    "q_gapfill", "q_udaf_grouped", "q_vector_quantize", "q_agg_regression",
+    "q_split_dedup_safe", "q_dedup_neardup", "q_dedup_ngram",
+    "q_dedup_clusters", "q_bfs_hops", "q_join_bucketed", "q_pack_sequences",
+    "q_mix_sample", "q_sketch_cms", "q_snapshot_diff", "q_join_nullsafe",
+    "q_agg_weighted_median", "q_sql_tpch22", "q_window_session",
+    "q_ct_centre", "q_ct_histogram", "q_ct_bbox", "q_ct_threshold",
+    "q_ct_moments", "q_ct_preprocess", "q_multimodal_features",
+    "q_multimodal_resize", "q_sample_split", "q_sample_stratified",
+    "q_dedup_simhash", "q_knn_ivf", "q_stream_late", "q_gapfill",
+    "q_udaf_grouped", "q_vector_quantize", "q_agg_regression",
     "q_window_tumbling", "q_window_sliding", "q_sessionize",
     "q_stream_enrich", "q_win_lag_lead", "q_win_moving", "q_win_range_time",
     "q_win_firstlast", "q_join_range"

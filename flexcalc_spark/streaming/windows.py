@@ -18,12 +18,15 @@ state store (RocksDB in production) holds one row per open window.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flexcalc_spark.registry import register
-from flexcalc_spark.tables import epoch_us_col, events_with_time, materialize_local, table
+from flexcalc_spark.tables import (
+    epoch_us_col, events_with_time, materialize_local, scoped_conf, table,
+)
 
 HOUR = 3600
 SLIDE = 900             # 15 min
@@ -325,13 +328,14 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drain_shuffle_partitions(spark: SparkSession, sf_dir: str | None = None):
+def _drain_shuffle_partitions(spark: SparkSession, input_path: str | None = None):
     """Scope spark.sql.shuffle.partitions for a stream drain (streaming
     state partitions freeze from this conf at the first micro-batch;
     these drains use fresh checkpoints, so re-scoping per run is safe).
 
-    With ``sf_dir`` the count is SCALE-ADAPTIVE (r15, guide §2.2 — size
-    partitions by data, never a constant): a stream-stream join builds
+    With ``input_path`` (the drain's source file or directory) the
+    count is SCALE-ADAPTIVE (r15, guide §2.2 — size partitions by
+    data, never a constant): a stream-stream join builds
     4 state-store instances per partition and commits each per batch,
     so at small inputs the per-partition store open/commit overhead
     dominates the per-row puts — measured at sf0.1 (interleaved
@@ -341,27 +345,26 @@ def _drain_shuffle_partitions(spark: SparkSession, sf_dir: str | None = None):
     linearly with input until the core count caps it — at production
     scale the cap binds and behavior is unchanged (state sizing there
     is GB-per-partition, a cluster conf; see OPTIMIZATION_r15.md).
-    Without ``sf_dir`` the old core-count behavior is kept (test
+    Without ``input_path`` the old core-count behavior is kept (test
     drains)."""
     import os
 
     from flexcalc_spark.tables import scoped_shuffle_partitions
 
     n = None
-    if sf_dir is not None:
+    if input_path is not None:
         # getsize on a DIRECTORY returns the inode size (~4096) without
         # raising, so a partitioned directory layout must be summed
         # explicitly — never sized from the dir entry (r15 review).
         try:
-            path = os.path.join(sf_dir, "events.parquet")
-            if os.path.isdir(path):
+            if os.path.isdir(input_path):
                 nbytes = sum(
                     os.path.getsize(os.path.join(root, f))
-                    for root, _dirs, files in os.walk(path)
+                    for root, _dirs, files in os.walk(input_path)
                     for f in files
                 )
             else:
-                nbytes = os.path.getsize(path)
+                nbytes = os.path.getsize(input_path)
             cores = spark.sparkContext.defaultParallelism
             n = max(1, min(cores, -(-nbytes // (512 * 1024))))
         except OSError:
@@ -812,7 +815,7 @@ def run_stream_foreachbatch_upsert(
             .parquet(out_dir)
         )
 
-    with _drain_shuffle_partitions(spark, sf_dir):
+    with _drain_shuffle_partitions(spark, f"{sf_dir}/events.parquet"):
         q = (
             agg.writeStream.foreachBatch(upsert)
             .outputMode("complete")
@@ -909,12 +912,18 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale_notes=(
         "the stream-stream interval join GRADED end-to-end: the real "
         "watermarked double-stream join drains (availableNow, append "
-        "mode) into a memory sink at plan build and the key returns "
-        "the per-user pair census read back — the driver hash "
-        "certifies the streaming state manager emitted exactly the "
-        "batch pair set (inner interval joins emit eagerly; the "
-        "watermark only gates state eviction). At 100 TB the interval "
-        "bound is what keeps the join state finite: each side holds "
+        "mode) through a foreachBatch per-user census at plan build and "
+        "the key returns the merged census as a local Arrow table — the "
+        "driver hash certifies the streaming state manager emitted "
+        "exactly the batch pair set (inner interval joins emit eagerly; "
+        "the watermark only gates state eviction). The drain runs ONE "
+        "micro-batch: with noDataMicroBatches off for this drain only, "
+        "the watermark-advance batch that would emit nothing and evict "
+        "state from a discarded checkpoint is skipped; drains whose "
+        "operators emit or drop rows on watermark advance (append "
+        "windows, outer joins, watermark dedup) keep it. At 100 TB "
+        "the interval bound is what keeps the join state finite: each "
+        "side holds "
         "at most watermark + interval of history per user key, and "
         "state partitions by the user equi key exactly like the "
         "batch shuffle would"
@@ -948,7 +957,22 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    with _drain_shuffle_partitions(spark, sf_dir):
+    # ONE micro-batch: the availableNow trigger reads the whole events
+    # file into batch 0, and an inner interval join emits each pair in
+    # the data batch where the pair's later row arrives — so the data
+    # batches already hold every pair. The trailing no-data batch would
+    # only advance the watermark and evict state from a checkpoint this
+    # drain throws away at termination (recentProgress at sf0.01 on 4
+    # cores: the no-data batch took 0.52-0.69 s of a 1.9-2.3 s drain).
+    # Only THIS drain may skip it: append-mode windows, outer joins and
+    # dropDuplicatesWithinWatermark emit or drop rows on watermark
+    # advance, so run_stream_to_memory and the upsert drain keep their
+    # no-data batches. The conf is read once, at start().
+    with _drain_shuffle_partitions(
+        spark, f"{sf_dir}/events.parquet"
+    ), scoped_conf(
+        spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+    ):
         q = (
             stream_range_join(spark, sf_dir)
             .writeStream.foreachBatch(_census_batch)
@@ -967,10 +991,15 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = merged.setdefault(r["user_id"], [0, 0])
         acc[0] += r["n_pairs"]
         acc[1] += r["gap_us_sum"]
-    rows = [
-        (int(u), int(n), int(g))
-        for u, (n, g) in sorted(merged.items())
-    ]
+    users = sorted(merged)
+    # an int64 Arrow table becomes a LocalTableScan; a Python row list
+    # would be pickled into an RDD whose every execution runs
+    # Python-worker tasks (tables.materialize_local)
+    census = pa.table({
+        "user_id": pa.array(users, pa.int64()),
+        "n_pairs": pa.array([merged[u][0] for u in users], pa.int64()),
+        "gap_us_sum": pa.array([merged[u][1] for u in users], pa.int64()),
+    })
     return spark.createDataFrame(
-        rows, schema="user_id bigint, n_pairs bigint, gap_us_sum bigint"
+        census, schema="user_id bigint, n_pairs bigint, gap_us_sum bigint"
     )

@@ -166,3 +166,43 @@ def test_scoped_shuffle_partitions_restores_on_error(spark):
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == orig
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_materialize_local_is_an_arrow_local_scan(spark, arrow):
+    """materialize_local must rebuild its input as a LocalTableScan of
+    one Arrow table, not a pickled-row RDD scan (ExistingRDD) whose
+    every execution runs Python-worker tasks (fails on the
+    createDataFrame(df.collect()) form). Values and types round-trip
+    exactly under both Arrow settings and a non-UTC session zone,
+    including NULLs, a DST-gap wall-clock TIMESTAMP and TIMESTAMP_NTZ."""
+    from flexcalc_spark.tables import materialize_local
+
+    keys = (
+        "spark.sql.execution.arrow.pyspark.enabled",
+        "spark.sql.session.timeZone",
+    )
+    orig = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], arrow)
+        spark.conf.set(keys[1], "America/New_York")
+        df = spark.sql("""
+            SELECT CAST(1234.5 AS DECIMAL(18,6)) AS d,
+                   CAST(NULL AS BIGINT) AS nb,
+                   TIMESTAMP '2024-03-10 02:30:00' AS ts,
+                   TIMESTAMP_NTZ '2024-03-10 02:30:00' AS ntz,
+                   X'00ff10' AS b,
+                   array(1L, NULL, 3L) AS a,
+                   DATE '2024-01-02' AS dt
+            UNION ALL
+            SELECT NULL, 5L, NULL, NULL, NULL, NULL, NULL
+        """)
+        out = materialize_local(df)
+        plan = plan_text(out)
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
+        assert out.schema == df.schema
+        assert sorted(out.collect(), key=str) == sorted(df.collect(), key=str)
+    finally:
+        for k, v in zip(keys, orig):
+            spark.conf.set(k, v)

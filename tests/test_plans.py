@@ -575,6 +575,21 @@ def test_pagerank_iterations_reuse_cached_edges(spark):
     assert plan.count("InMemoryTableScan") >= 3, plan
 
 
+def test_pagerank_window_degree_and_closed_form_first_round(spark):
+    """The out-degree is a window count over src (no groupBy joined
+    back to the edges) and round 1 needs no join (every src starts at
+    RANK_UNIT, so its contributions are RANK_UNIT div d): the only
+    equi-joins left are rounds 2 and 3. Fails on the join-per-round
+    form (four joins, no Window)."""
+    plan = plan_text(Q["q_pagerank"](spark, SF_DIR))
+    assert re.search(r"\(\d+\) Window\b", plan), plan
+    joins = set(re.findall(
+        r"\((\d+)\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)\b",
+        plan,
+    ))
+    assert len(joins) == 2, plan
+
+
 def test_dedup_chunks_digest_join_no_cartesian(spark):
     """Chunk frequency must be an equi join on the md5 digest — never a
     quadratic pairing; both agg phases keep map-side partials."""

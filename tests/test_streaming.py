@@ -605,6 +605,64 @@ def test_stream_join_drops_its_memory_sink(spark):
     assert name not in [t.name for t in spark.catalog.listTables()]
 
 
+def test_stream_join_drains_in_one_micro_batch(spark, monkeypatch):
+    """The q_stream_join drain skips the trailing no-data micro-batch:
+    availableNow reads the whole input into batch 0, where the inner
+    interval join already emits every pair, and the no-data batch would
+    only advance the watermark of a checkpoint thrown away at
+    termination. Counted with a StreamingQueryListener on the sf0.01
+    fixture (fails on the two-batch drain). The caller's
+    noDataMicroBatches value must be back in place afterwards, also
+    when the drain raises."""
+    import os
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    if not os.path.isdir(sf01):
+        pytest.skip("sf0.01 fixture not present")
+    batches = []
+
+    class _Batches(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            batches.append(event.progress.batchId)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Batches()
+    orig = spark.conf.get(key)
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set(key, "true")  # sentinel: the drain sets "false"
+        assert registry.QUERIES["q_stream_join"](spark, sf01).count() > 0
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        assert batches == [0], batches
+        assert spark.conf.get(key) == "true"
+
+        seen = []
+
+        def _failing_join(spark_, sf_dir_):
+            seen.append(spark_.conf.get(key))
+            raise RuntimeError("drain failed")
+
+        monkeypatch.setattr(sw, "stream_range_join", _failing_join)
+        with pytest.raises(RuntimeError, match="drain failed"):
+            registry.QUERIES["q_stream_join"](spark, sf01)
+        assert seen == ["false"]
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, orig)
+
+
 def test_stream_upsert_scratch_registered_for_cleanup(spark):
     """r13 review: the upsert sink used a hand-rolled seed-salted /tmp
     path no cleanup mechanism knew about — one leaked dir per process.
@@ -630,9 +688,10 @@ def test_stream_upsert_scratch_registered_for_cleanup(spark):
 
 
 def test_stream_join_empty_census_roundtrip(spark, tmp_path):
-    """r13 review: the eager toPandas/createDataFrame round-trip in
-    q_stream_join must survive an EMPTY census (the r11 engineered
-    tiny-corpus precedent) — one lone event forms no 5-minute pair."""
+    """r13 review: the eager census rebuild at the end of
+    q_stream_join (an int64 Arrow table passed to createDataFrame) must
+    survive an EMPTY census (the r11 engineered tiny-corpus precedent)
+    — one lone event forms no 5-minute pair."""
     import pandas as pd_
 
     import datetime
@@ -660,7 +719,8 @@ def test_stream_join_empty_census_roundtrip(spark, tmp_path):
     # carry as None. Property pin, not a fails-on-pre-fix regression:
     # the toPandas form survived HERE (Arrow off -> object-dtype None)
     # but crashed under mixed Arrow configs (NaN into the non-Arrow
-    # createDataFrame); collect() is config-independent (r13 review)
+    # createDataFrame); the Arrow-table rebuild keeps NULL under every
+    # Arrow config (r13 review)
     upsert = registry.QUERIES["q_stream_upsert"](
         spark, str(tmp_path)
     ).toPandas()
@@ -871,10 +931,13 @@ def test_drain_partitions_size_by_input_bytes(spark, tmp_path):
     on a dir returns the inode size ~4096 WITHOUT raising, so the
     pre-fix code silently sized any partitioned layout to 1 — this
     test fails there), and (c) the missing-file core-count fallback."""
+    import os
+
     cores = spark.sparkContext.defaultParallelism
 
     def scoped_value(sf_dir):
-        with sw._drain_shuffle_partitions(spark, sf_dir):
+        events = os.path.join(sf_dir, "events.parquet")
+        with sw._drain_shuffle_partitions(spark, events):
             return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # (a) flat file: 3 MiB -> ceil(3 MiB / 512 KiB) = 6 (cores permitting)
