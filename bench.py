@@ -14,8 +14,8 @@ probes (JVM codegen agg, interpreted HOF eval, Python loop) timed on the
 same box in the same session, so cross-round query-time trends can be
 normalized for box conditions before being read as regressions (rounds
 8-9 measured ~2-4.8x same-code swings). For a deliberate code-vs-code
-adjudication, use the interleaved subprocess worktree A/B protocol in
-scripts/adjudicate_bench_r10.py.
+adjudication, use the interleaved fresh-process A/B of
+``scripts/probe.py --ab``.
 """
 
 from __future__ import annotations

@@ -150,8 +150,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # near-empty tasks (the round-7 q_market_basket lesson; the
     # repartition-before-cache rule is the manual workaround). With it,
     # AQE coalesces the cached layout the same way it does any other
-    # shuffle. Measured on q_pagerank sf0.1 (scripts/
-    # adjudicate_pagerank.py protocol, BASELINE.md round-9): plain
+    # shuffle. Measured on q_pagerank sf0.1 (the A/B protocol now in
+    # scripts/probe.py --ab, BASELINE.md round-9): plain
     # cache goes 45.5 s -> 4.5 s under a 200-partition session, and
     # beats the explicit repartition(32, src) form 6.9 -> 4.5 s by
     # skipping its extra full-edge exchange; bench-session (8

@@ -32,11 +32,12 @@ mode) ever shows up here too.
 
 from __future__ import annotations
 
-import datetime
-import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.verify_keys import canon  # noqa: E402  (the verify sweep's canonicalizer)
 
 AXES: dict[str, tuple[str, str, str]] = {
     "shuffle": ("spark.sql.shuffle.partitions", "2", "37"),
@@ -88,20 +89,6 @@ SF = "/root/testdata/sf0.01"
 # commutative hence layout-independent), stays on the byte-identical
 # contract.
 APPROX_ENV_COUPLED = {"q_histogram_equidepth_approx", "q_rfm_approx"}
-
-
-def canon(v):
-    import numpy as np
-
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    if v is None:
-        return "N"
-    if isinstance(v, float):
-        return "N" if math.isnan(v) else repr(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    return str(v)
 
 
 def run(conf_key: str, conf_val: str, keys: list[str]) -> dict:

@@ -260,8 +260,8 @@ def main() -> int:
     elif not apply:
         print("dry run (pass --apply to rewrite registry.py)")
     else:
-        print(f"rewrote {REGISTRY}; re-run the window pre-time "
-              "(scripts/pretime_window.py) before committing")
+        print(f"rewrote {REGISTRY}; re-time the graded window "
+              "(scripts/probe.py --window --sf <sf0.01>) before committing")
     return 0
 
 

@@ -34,6 +34,7 @@ Run: python /root/repo/scripts/scale_probe_dtw_cluster.py
 """
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
@@ -168,7 +169,7 @@ def spark_census(sizes: list[int], kfn=None, label: str = "fixedK") -> None:
     import tempfile
     import time
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import SparkSession
 
     from flexcalc_spark.registry import QUERIES

@@ -17,9 +17,10 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHUNK_DEFAULT = 90
 
@@ -28,7 +29,6 @@ def _run_chunked(keys: list[str], chunk_size: int) -> int:
     """Spawn a fresh interpreter per chunk (the r12/r13 sweep-OOM
     mitigation, VERDICT r13 #7). Sequential on purpose — two Spark
     JVMs on one box would contend and distort any timing read."""
-    import os
     import subprocess
 
     rc = 0
@@ -99,8 +99,6 @@ def main() -> int:
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as ent
-
-    import os
 
     con = duckdb.connect()
     # SPARK_GRAFT_VERIFY_SF overrides for the sf0.1 spot-check gate

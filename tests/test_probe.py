@@ -1,0 +1,46 @@
+"""scripts/probe.py end to end, and the scripts' import discipline."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import json
+import os
+import subprocess
+import sys
+
+from tests.conftest import SF_DIR
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_probe_default_mode_prints_per_layer_json(tmp_path):
+    out = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "scripts", "probe.py"),
+         "q_agg_groupby", "--sf", SF_DIR, "--runs", "1"],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.splitlines()[-1])["q_agg_groupby"]
+    assert got["wall_s"] > 0
+    assert got["exec.jobs"] >= 1
+    assert got["plan.nodes"] >= 1
+    assert got["self_s"]["operators.construct"] > 0
+
+
+def test_no_script_puts_a_literal_path_on_sys_path():
+    """A script run from another checkout must import that checkout's
+    code: a literal sys.path entry would import whichever tree it names
+    and silently defeat a worktree A/B."""
+    bad = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "scripts", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("insert", "append")
+                    and ast.unparse(node.func.value) == "sys.path"
+                    and any(isinstance(a, ast.Constant) and isinstance(a.value, str)
+                            for a in node.args)):
+                bad.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not bad, f"literal sys.path entries: {bad}"

@@ -470,9 +470,10 @@ def test_containment_shingle_zipf_recall(spark, tmp_path):
     the prefix-filtered word-shingle key must emit EXACTLY the python
     brute-force containment pairs — recall floor 1.0 by construction,
     verified here on the corpus shape the scale claim is made for."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
     from scale_probe_zipf import gen_zipf_corpus
 
     from flexcalc_spark.operators.dedup import CONTAIN_DEN, CONTAIN_NUM
