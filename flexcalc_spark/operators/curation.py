@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flexcalc_spark.operators.dedup import _prefix_filter_pairs
+from flexcalc_spark.operators.dedup import _jaccard_pairs
 from flexcalc_spark.registry import register
 from flexcalc_spark.tables import table, table_parallel
 
@@ -59,9 +59,7 @@ MIX_BUCKETS = 65536
 
 # --- incremental dedup -----------------------------------------------
 INC_MOD = 10            # doc_id % 10 == 0 -> incoming batch (~10%)
-INC_TAU = 0.9
-INC_NUM, INC_DEN = 9, 10
-assert INC_NUM / INC_DEN == INC_TAU
+INC_NUM, INC_DEN = 9, 10  # token Jaccard >= 0.9
 
 
 def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,12 +259,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("grp"),
         F.array_distinct(F.split(F.lower("text"), " ")).alias("items"),
     )
-    corpus_x_incoming = (F.col("a.doc_id") % INC_MOD != 0) & (
-        F.col("b.doc_id") % INC_MOD == 0
-    )
-    return _prefix_filter_pairs(
-        items, INC_NUM, INC_DEN, INC_TAU, "jac", pair_pred=corpus_x_incoming
-    ).select(
+    corpus_x_incoming = (F.col("id_a") % INC_MOD != 0) & (F.col("id_b") % INC_MOD == 0)
+    return _jaccard_pairs(items, INC_NUM, INC_DEN, corpus_x_incoming).select(
         F.col("id_a").alias("id_old"), F.col("id_b").alias("id_new"), "jac"
     )
 

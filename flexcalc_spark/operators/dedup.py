@@ -3,13 +3,15 @@ exact, token-Jaccard, character-n-gram Jaccard, MinHash-LSH, SimHash,
 embedding-cosine — each a ``queries()`` entry over ``documents``.
 
 Scale design (SURVEY §4.3.2): NO graded plan is all-pairs.
-- The exact Jaccard operators (neardup/ngram) generate candidates with a
-  PPJoin-style prefix filter (Chaudhuri et al., ICDE'06; Xiao et al.,
-  WWW'08): tokens ordered rarest-first by document frequency, each set
-  indexes only its first |A| - ceil(tau*|A|) + 1 tokens, and any pair
-  with jaccard >= tau provably shares an indexed token — candidates come
-  from an EQUI join on (group, token) with exact-recall guarantee, then
-  an exact re-score. O(n * prefix) shuffle, never O(n²).
+- The exact set-overlap operators (Jaccard: neardup, ngram, incremental,
+  clusters; containment: containment, shingle, 2stage's stage 1) share
+  one generator, set_sim_pairs: a PPJoin-style prefix filter (Chaudhuri
+  et al., ICDE'06; Xiao et al., WWW'08) with items ordered rarest-first
+  by document frequency, so any qualifying pair provably shares an
+  indexed item — candidates from an EQUI join on (group, item) with
+  exact recall, size and positional prunes, then an exact integer
+  verify. A fat prefix (tau < 1/2) switches to the inverted-index COUNT
+  form. O(n * prefix) shuffle, never O(n²).
 - The hash-sketch operators (MinHash/SimHash) equi-join on band keys —
   probabilistic recall, measured in tests/test_recall.py.
 - The embedding operator at tau=0.4 targets similarity at the ambient
@@ -24,6 +26,8 @@ tests/test_recall.py.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,11 +36,9 @@ from flexcalc_spark.tables import session_plan_memo, table, table_parallel
 
 JACCARD_TAU = 0.95
 JACCARD_NUM, JACCARD_DEN = 19, 20      # == JACCARD_TAU as an exact ratio
-NGRAM_TAU = 0.98
-NGRAM_NUM, NGRAM_DEN = 49, 50          # == NGRAM_TAU as an exact ratio
+NGRAM_NUM, NGRAM_DEN = 49, 50          # char-3-gram Jaccard >= 0.98
 COSINE_TAU = 0.4
 assert JACCARD_NUM / JACCARD_DEN == JACCARD_TAU
-assert NGRAM_NUM / NGRAM_DEN == NGRAM_TAU
 
 # 64 permutations in 8 bands of 8 rows. The fixture corpus is drawn from
 # a 31-token shared vocabulary, so typical inter-doc Jaccard is ~0.7 —
@@ -86,8 +88,15 @@ SIG_WORDS = 16                    # 64-bit words per doc gram bitmap
 SIG_BITS = SIG_WORDS * 64         # 1024-bit signature
 
 
+def _ids(items: DataFrame) -> list[str]:
+    """doc_id, plus the optional blocking column grp: pairs lie within one
+    grp when it is there. Without it no join carries a group key (a
+    constant string key cost 3 of 15 s in the 2stage COUNT join, sf0.1)."""
+    return ["doc_id", "grp"] if "grp" in items.columns else ["doc_id"]
+
+
 def _ranked_token_arrays(items: DataFrame, with_sig: bool = False) -> DataFrame:
-    """(doc_id, grp, hitems: array<long>): each doc's tokens hashed and
+    """(doc_id, [grp,] hitems: array<long>): each doc's tokens hashed and
     sorted rarest-first by (document frequency, hash) — the shared input
     of prefix extraction AND the exact hashed re-score (hashed long
     intersects are ~5x faster than string intersects and produce the
@@ -101,9 +110,10 @@ def _ranked_token_arrays(items: DataFrame, with_sig: bool = False) -> DataFrame:
     provably recall-safe pre-filter (r15, guide §2.3: decide with small
     rows — 128-byte bitmaps — before attaching the ~2.8 KB gram
     arrays)."""
-    tok = items.select(
-        "doc_id", "grp", F.explode("items").alias("tk")
-    ).select("doc_id", "grp", F.xxhash64("tk").alias("it"))
+    ids = _ids(items)
+    tok = items.select(*ids, F.explode("items").alias("tk")).select(
+        *ids, F.xxhash64("tk").alias("it")
+    )
     dfreq = tok.groupBy("it").agg(F.count(F.lit(1)).alias("dfreq"))
     aggs = [F.array_sort(F.collect_list(F.struct("dfreq", "it"))).alias("ps")]
     if with_sig:
@@ -118,10 +128,7 @@ def _ranked_token_arrays(items: DataFrame, with_sig: bool = False) -> DataFrame:
                     F.when(word == k, bit).otherwise(F.lit(0).cast("bigint"))
                 ).alias(f"_sg{k}")
             )
-    out_cols = [
-        F.col("doc_id"), F.col("grp"),
-        F.expr("transform(ps, p -> p.it)").alias("hitems"),
-    ]
+    out_cols = [*ids, F.expr("transform(ps, p -> p.it)").alias("hitems")]
     if with_sig:
         out_cols.append(
             F.array(*[F.col(f"_sg{k}") for k in range(SIG_WORDS)]).alias("sig")
@@ -130,143 +137,204 @@ def _ranked_token_arrays(items: DataFrame, with_sig: bool = False) -> DataFrame:
     # relative to the corpus -> broadcast the frequency dictionary
     return (
         tok.join(F.broadcast(dfreq), "it")
-        .groupBy("doc_id", "grp")
+        .groupBy(*ids)
         .agg(*aggs)
         .select(*out_cols)
     )
 
 
-def _prefix_candidates_from_ranked(
-    ranked: DataFrame, num: int, den: int, pair_pred: Column | None = None
-) -> DataFrame:
-    """PPJoin-style candidate pairs (id_a, id_b) for jaccard >= num/den
-    within ``grp``, over ``_ranked_token_arrays`` output: each doc
-    indexes only its rarest-first prefix of length |A| - ceil(tau*|A|)
-    + 1. Theorem (Chaudhuri et al.): jac(A,B) >= tau implies |A∩B| >=
-    ceil(tau*|A|), which forces a shared element inside both prefixes,
-    so the equi join on (grp, token) has GUARANTEED recall. Threshold
-    arithmetic is integer (ceil via div): the FP form `least >= 0.95d *
-    greatest` over-prunes exact boundary pairs (0.95d * 20 =
-    19.000000000000004 > 19).
+class _Measure(NamedTuple):
+    """What set_sim_pairs needs to know about one set-similarity measure."""
 
-    ``pair_pred`` (over aliases ``a``/``b``) replaces the default
-    ``a.doc_id < b.doc_id`` pair orientation — used by the incremental
-    variant to emit only corpus-vs-incoming pairs. The prefix theorem is
-    orientation-agnostic (it bounds which TOKENS a qualifying pair must
-    share, not which side is which), so recall stays guaranteed."""
-    prefix_len = F.expr(
-        f"size(hitems) - (({num} * size(hitems) + {den - 1}) div {den}) + 1"
-    )
-    pref = ranked.select(
-        "doc_id",
-        "grp",
-        F.size("hitems").alias("sz"),
-        F.posexplode(F.slice(F.col("hitems"), F.lit(1), prefix_len)).alias(
-            "pos0", "it"
-        ),
-    ).select(
-        "doc_id", "grp", "sz", (F.col("pos0") + 1).alias("pos"), "it"
-    )
-    a = pref.alias("a")
-    b = pref.alias("b")
-    if pair_pred is None:
-        pair_pred = F.col("a.doc_id") < F.col("b.doc_id")
-    # exact integer size-ratio prune: jac >= num/den forces
-    # den * min(|A|,|B|) >= num * max(|A|,|B|)
-    size_ok = F.least(F.col("a.sz"), F.col("b.sz")) * den >= F.greatest(
-        F.col("a.sz"), F.col("b.sz")
-    ) * num
-    # PPJoin positional filter (Xiao et al.): a shared prefix token at
-    # sorted positions (pa, pb) bounds the overlap by
-    # 1 + min(|A| - pa, |B| - pb); jac >= tau needs overlap >=
-    # alpha = ceil(num * (|A|+|B|) / (num+den)). For a TRUE pair the
-    # instance at the FIRST shared token always satisfies this, so
-    # pruning later instances never loses a pair (the pair groupBy only
-    # needs one surviving instance) — big cut when hot tokens collide
-    # deep in both prefixes. Integer arithmetic throughout.
-    alpha = F.expr(
-        f"((a.sz + b.sz) * {num} + {num + den - 1}) div {num + den}"
-    )
-    pos_ok = (
-        F.lit(1)
-        + F.least(
-            F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
-        )
-    ) >= alpha
-    return (
-        a.join(
-            b,
-            (F.col("a.grp") == F.col("b.grp"))
-            & (F.col("a.it") == F.col("b.it"))
-            & pair_pred
-            & size_ok
-            & pos_ok,
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.lit(1))
-        .select("id_a", "id_b")
-    )
+    overlap: str        # required |A∩B| as SQL over sz_a, sz_b ({num}, {den})
+    prefix_index: bool  # the index side is a prefix too (else every item)
+    pair: str           # default pair orientation over id_a, id_b
+    sig: bool           # bitmap bound before the exact intersect
 
 
-def _prefix_filter_pairs(
-    items: DataFrame,
-    num: int,
-    den: int,
-    tau: float,
-    out_name: str,
+_MEASURES = {
+    # jac >= num/den <=> |A∩B| * (num+den) >= num * (|A|+|B|): symmetric,
+    # so both sides index only their prefix
+    "jaccard": _Measure(
+        "((sz_a + sz_b) * {num} + {num} + {den} - 1) div ({num} + {den})",
+        True, "id_a < id_b", False,
+    ),
+    # |A∩B| >= num/den * |A| bounds nothing about B: every B item is indexed
+    "containment": _Measure(
+        "(sz_a * {num} + {den} - 1) div {den}", False, "id_a <> id_b", True,
+    ),
+}
+
+
+def _overlap(measure: str, num: int, den: int) -> Column:
+    return F.expr(_MEASURES[measure].overlap.format(num=num, den=den))
+
+
+def set_sim_candidates(
+    ranked: DataFrame, measure: str, num: int, den: int,
     pair_pred: Column | None = None,
 ) -> DataFrame:
-    """Integrated prefix-filter dedup plan: ranked hashed arrays (cached,
-    ONE tokenize+hash scan) -> guaranteed-recall prefix candidates ->
-    exact jaccard re-score on the hashed arrays. |U| = |A|+|B|-|I| uses
-    one array_intersect; identical integers, identical division, so the
-    rounded jac equals the original string-array formulation.
+    """The raw candidate relation of set_sim_pairs, before the exact
+    verify, over (doc_id, [grp,] hitems) arrays (see _ids for grp).
 
-    Both the item arrays AND the ranked arrays are cached: the item
-    expression (tokenize / 3-gram HOF) otherwise re-evaluates inside
-    every consumer of the explode pipeline (measured 5x slower at
-    sf0.1), and both tables are narrow (one array row per doc).
-    `ranked` is groupBy-derived, so it is repartitioned to core count
-    BEFORE caching (the q_pagerank / q_dedup_containment rule: caching
-    a shuffle-derived frame as-is pins the vanilla session's
-    200-partition layout as an InMemoryRelation AQE cannot coalesce —
-    hundreds of near-empty tasks in every downstream stage)."""
-    items = items.cache()
-    ranked = (
-        _ranked_token_arrays(items)
-        .repartition(items.sparkSession.sparkContext.defaultParallelism)
-        .cache()
-    )
-    # Re-score parallelism (r14 optimization): the exact-intersect stage
-    # runs in the candidate distinct's OUTPUT partitions — 8 under the
-    # bench conf, and ~3 under a vanilla 200-partition session after AQE
-    # coalesces the narrow pair stream to its BYTE target — while the
-    # per-pair array_intersect work is compute-bound, not byte-bound.
-    # One cheap narrow exchange of (id_a, id_b) pairs buys full-core
-    # parallelism for the intersect stage in ANY session (measured on
-    # q_dedup_containment at sf0.1: re-score tail 34.4 s -> ~9 s).
-    # Core-count-adaptive, never a tuned constant (guide §2.5). HASH
-    # by the pair key, not round-robin: RoundRobinPartitioning first
-    # locally sorts its whole input (sortBeforeRepartition, on by
-    # default so retries re-deal identically — guide §2.5) while hash
-    # partitioning is natively retry-deterministic and skips that sort;
-    # distinct (id_a, id_b) pairs hash-spread uniformly by construction.
-    cand = _prefix_candidates_from_ranked(ranked, num, den, pair_pred).repartition(
-        items.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
-    )
-    ta = ranked.select(F.col("doc_id").alias("id_a"), F.col("hitems").alias("items_a"))
-    tb = ranked.select(F.col("doc_id").alias("id_b"), F.col("hitems").alias("items_b"))
-    isz = F.size(F.array_intersect(F.col("items_a"), F.col("items_b")))
-    jac = isz.cast("double") / (
-        F.size("items_a") + F.size("items_b") - isz
+    Prefix form (2*num >= den): distinct (id_a, id_b). Each A indexes its
+    first sz - ceil(num*sz/den) + 1 items of ``ranked`` order (rarest-
+    first from _ranked_token_arrays). Theorem (Chaudhuri et al., ICDE'06):
+    |A∩B| >= t forces a shared item inside that prefix, so the equi join
+    on ([grp,] item) has GUARANTEED recall. B indexes the same prefix
+    (Jaccard, symmetric) or every item (containment). Two recall-safe
+    prunes ride the join: the size prune t <= least(sz_a, sz_b) and the
+    PPJoin positional prune (Xiao et al., WWW'08): a shared item at 0-
+    based positions (pa, pb) bounds the overlap by least(sz_a - pa,
+    sz_b - pb); the instance at a true pair's FIRST shared item always
+    passes, so dropping later instances never loses a pair.
+
+    COUNT form (2*num < den, a fat prefix): every item on both sides, no
+    prune, (id_a, id_b, isz) with isz = COUNT(*) per pair = |A∩B| (items
+    are distinct) for every pair sharing an item. At tau 0.2 the prefix
+    is ~80% of each set, so probing all of it costs ~25% more join
+    instances while the count replaces the whole ranked-array attach and
+    intersect (2x on the fixture). Sizes are attached after the count:
+    carrying them through the 73M-instance join cost 1.7 s of 12 (sf0.1).
+
+    ``pair_pred`` over id_a/id_b replaces the measure's default
+    orientation; the bounds say which ITEMS a qualifying pair shares,
+    not which side is which, so recall holds for any orientation.
+    Threshold arithmetic is integer: the FP form `least >= 0.95d *
+    greatest` over-prunes exact boundary pairs (0.95d * 20 > 19)."""
+    m = _MEASURES[measure]
+    count_form = 2 * num < den
+    ids = _ids(ranked)
+    on = ids[1:] + ["it"]
+
+    def postings(side: str, prefix: bool) -> DataFrame:
+        cols = [F.col("doc_id").alias(f"id_{side}"), *ids[1:]]
+        if count_form:
+            return ranked.select(*cols, F.explode("hitems").alias("it"))
+        arr = F.col("hitems")
+        if prefix:
+            arr = F.slice(arr, F.lit(1), F.expr(
+                f"size(hitems) - (({num} * size(hitems) + {den - 1}) div {den}) + 1"
+            ))
+        return ranked.select(
+            *cols,
+            F.size("hitems").alias(f"sz_{side}"),
+            F.posexplode(arr).alias(f"p{side}", "it"),
+        )
+
+    keep = F.expr(m.pair) if pair_pred is None else pair_pred
+    if count_form:
+        return (
+            postings("a", False).join(postings("b", False), on)
+            .filter(keep)
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("isz"))
+        )
+    t = _overlap(measure, num, den)
+    keep = keep & (t <= F.least("sz_a", "sz_b")) & (
+        F.least(F.col("sz_a") - F.col("pa"), F.col("sz_b") - F.col("pb")) >= t
     )
     return (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .filter(jac >= tau)
-        .select("id_a", "id_b", F.round(jac, 4).alias(out_name))
+        postings("a", True).join(postings("b", m.prefix_index), on)
+        .filter(keep)
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def set_sim_pairs(
+    items: DataFrame, measure: str, num: int, den: int,
+    pair_pred: Column | None = None,
+) -> DataFrame:
+    """(id_a, id_b, isz, sz_a, sz_b): EXACTLY the pairs (within one grp,
+    if ``items`` has one) whose set overlap isz = |A∩B| reaches the
+    measure's integer threshold t — ceil(num*(sz_a+sz_b)/(num+den)) for
+    "jaccard" (jac >= num/den), ceil(num*sz_a/den) for "containment"
+    (|A∩B|/|A| >= num/den, directed) — over (doc_id, [grp,] items: array
+    of distinct items). Candidates from set_sim_candidates, then the
+    integer verify isz >= t on 64-bit item hashes (hashed long
+    intersects are ~5x faster than string ones; collisions are absent at
+    corpus scale).
+
+    Caching: ``items`` (hashed, in the COUNT form) is cached (its item
+    expression would re-evaluate in every consumer of the explode
+    pipeline; measured 5x at sf0.1), and the ranked arrays are
+    repartitioned to core count BEFORE caching: caching a groupBy-derived
+    frame as-is pins the vanilla session's 200-partition layout as an
+    InMemoryRelation AQE cannot coalesce."""
+    spark = items.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    out = ["id_a", "id_b", "isz", "sz_a", "sz_b"]
+    t = _overlap(measure, num, den)
+    if 2 * num < den:
+        hashed = items.select(
+            *_ids(items), F.expr("transform(items, x -> xxhash64(x))").alias("hitems")
+        ).cache()
+        sizes = hashed.select("doc_id", F.size("hitems").alias("sz"))
+        return (
+            set_sim_candidates(hashed, measure, num, den, pair_pred)
+            .join(sizes.toDF("id_a", "sz_a"), "id_a")
+            .join(sizes.toDF("id_b", "sz_b"), "id_b")
+            .filter(F.col("isz") >= t)
+            .select(*out)
+        )
+    sig = _MEASURES[measure].sig
+    items = items.cache()
+    ranked = _ranked_token_arrays(items, with_sig=sig).repartition(par).cache()
+    # Re-score parallelism (r14): the intersect stage would run in the
+    # candidate distinct's byte-coalesced OUTPUT partitions (~3 under a
+    # vanilla session) while the per-pair intersect is compute-bound; one
+    # narrow exchange of id pairs buys full-core parallelism (q_dedup_
+    # containment at sf0.1: re-score tail 34.4 s -> ~9 s). Hash by the
+    # pair key, not round-robin: RoundRobinPartitioning first sorts its
+    # input locally (sortBeforeRepartition) for retry determinism.
+    cand = set_sim_candidates(ranked, measure, num, den, pair_pred).repartition(
+        par, "id_a", "id_b"
+    )
+
+    def attach(side: str) -> DataFrame:
+        cols = [F.col("doc_id").alias(f"id_{side}"), F.col("hitems").alias(f"items_{side}")]
+        if sig:
+            cols.append(F.col("sig").alias(f"sig_{side}"))
+        return ranked.select(*cols)
+
+    scored = (
+        cand.join(attach("a"), "id_a")
+        .join(attach("b"), "id_b")
+        .withColumn("isz", F.size(F.array_intersect("items_a", "items_b")))
+        .withColumn("sz_a", F.size("items_a"))
+        .withColumn("sz_b", F.size("items_b"))
+    )
+    keep = F.col("isz") >= t
+    if sig:
+        # RECALL-SAFE bitmap bound, the FIRST conjunct so a pruned pair
+        # never pays the intersect. Every item of A∩B sets its bit in
+        # sig_b, so a bit of (sig_a & ~sig_b) can only come from A\B:
+        #   popcount(sig_a & ~sig_b) <= |A\B| = sz_a - isz <= sz_a - t
+        # for every qualifying pair, at any bitmap width. 16 AND-NOT +
+        # bit_count terms on 128-byte sigs vs a hash set over ~350-item
+        # arrays; the sigs ride the item-array attach (two separate sig
+        # joins cost more than they saved). Jaccard builds no sig: there
+        # the bound prunes to exactly the final pairs but building the
+        # sig costs more than the small-array intersects it saves
+        # (measured, ROADMAP).
+        excess = " + ".join(
+            f"bit_count(element_at(sig_a, {k + 1}) & ~element_at(sig_b, {k + 1}))"
+            for k in range(SIG_WORDS)
+        )
+        keep = (F.expr(excess) <= F.col("sz_a") - t) & keep
+    return scored.filter(keep).select(*out)
+
+
+def _jaccard_pairs(
+    items: DataFrame, num: int, den: int, pair_pred: Column | None = None
+) -> DataFrame:
+    """(id_a, id_b, jac): set_sim_pairs' Jaccard pairs with jac = |I| /
+    (|A| + |B| - |I|) rounded to 4 places."""
+    return set_sim_pairs(items, "jaccard", num, den, pair_pred).select(
+        "id_a", "id_b",
+        F.round(F.col("isz") / (F.col("sz_a") + F.col("sz_b") - F.col("isz")), 4)
+        .alias("jac"),
     )
 
 
@@ -280,7 +348,7 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tok_sets(spark, sf_dir).select(
         "doc_id", F.col("lang").alias("grp"), F.col("toks").alias("items")
     )
-    return _prefix_filter_pairs(t, JACCARD_NUM, JACCARD_DEN, JACCARD_TAU, "jac")
+    return _jaccard_pairs(t, JACCARD_NUM, JACCARD_DEN)
 
 
 @register(
@@ -367,7 +435,7 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").alias("grp"),
         F.array_distinct(grams_expr).alias("items"),
     )
-    return _prefix_filter_pairs(g, NGRAM_NUM, NGRAM_DEN, NGRAM_TAU, "jac3")
+    return _jaccard_pairs(g, NGRAM_NUM, NGRAM_DEN).withColumnRenamed("jac", "jac3")
 
 
 def _hashed_tok_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,7 +537,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # AQE) while array_intersect over ~350-long arrays is
         # compute-bound — one narrow (id_a, id_b) exchange buys
         # full-core parallelism in any session (the
-        # _prefix_filter_pairs precedent, same measured shape; hash by
+        # set_sim_pairs precedent, same measured shape; hash by
         # the pair key, not round-robin — skips sortBeforeRepartition).
         .repartition(spark.sparkContext.defaultParallelism, "id_a", "id_b")
     )
@@ -1019,7 +1087,7 @@ def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (64-double zip_with/aggregate per pair, interpreted) is
         # compute-bound but ran in the distinct's byte-sized output
         # layout — repartition the narrow id-pair stream to core count
-        # before the vector re-attach (the _prefix_filter_pairs rule;
+        # before the vector re-attach (the set_sim_pairs rule;
         # hash by the pair key — skips sortBeforeRepartition).
         .repartition(spark.sparkContext.defaultParallelism, "id_a", "id_b")
     )
@@ -1219,7 +1287,8 @@ CONTAIN_GRAM = 5
         "shingles — the sub-document-overlap complement to the symmetric "
         "Jaccard keys (a short doc duplicated inside a long one scores "
         "containment ~1 but Jaccard ~|A|/|B|, invisible to them). "
-        "Candidates: containment >= tau forces overlap >= ceil(tau*|A|), "
+        "One generator with the Jaccard keys (set_sim_pairs, measure "
+        "'containment'). Candidates: containment >= tau forces overlap >= ceil(tau*|A|), "
         "so by pigeonhole A's rarest-first prefix of |A|-ceil(tau*|A|)+1 "
         "grams must hit the intersection — the probe side explodes only "
         "that prefix (~20% of grams at tau=0.8) while the indexed side "
@@ -1228,7 +1297,10 @@ CONTAIN_GRAM = 5
         "the gram hash has GUARANTEED recall and the exact hashed-array "
         "re-score keeps output identical to all-pairs. PPJoin positional "
         "filter (suffix bound vs ceil(tau*|A|)) prunes instances before "
-        "the pair distinct; size prune |B| >= ceil(tau*|A|). HONEST "
+        "the pair distinct; size prune |B| >= ceil(tau*|A|). Before the "
+        "exact intersect, a recall-safe 1024-bit bitmap bound "
+        "popcount(sig_A & ~sig_B) <= |A| - ceil(tau*|A|) drops pairs; the "
+        "128-byte sigs ride the item-array attach, no join of their own. HONEST "
         "census (same caveat as the LSH keys): candidates measure ~47% "
         "of all-pairs on this fixture AND a flat ~15% on a synthetic "
         "Zipf(1) corpus (scripts/scale_probe_zipf.py, n=2k-32k) — "
@@ -1255,155 +1327,20 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     items = d.filter(F.length("text") >= CONTAIN_GRAM).select(
         "doc_id",
-        F.lit("all").alias("grp"),
         F.array_distinct(grams_expr).alias("items"),
     )
-    return _containment_pairs(items, CONTAIN_NUM, CONTAIN_DEN)
+    return _containment_ppm(items)
 
 
-def _containment_pairs(items: DataFrame, num: int, den: int) -> DataFrame:
-    """Directed containment pairs |A∩B| >= (num/den)·|A| over per-doc
-    item sets — the machinery shared by the char-gram and word-shingle
-    containment keys (the gram UNIT is the caller's choice and, per the
-    round-8 Zipf census, the scale lever). Guaranteed-recall prefix
-    probe vs full index, PPJoin positional filter, exact hashed
-    re-score; emits (id_a, id_b, cont_ppm)."""
-    spark = items.sparkSession
-    # cache the narrow per-doc item-array table: _ranked_token_arrays
-    # consumes its subtree twice (token-frequency aggregate + re-join)
-    # and the gram HOF otherwise re-evaluates per consumer (the
-    # _prefix_filter_pairs rule; scan-derived, so caching as-is is fine)
-    items = items.cache()
-    # Bitmap pre-filter (r15, guide §2.3/§4.2): only at HIGH tau — the
-    # bound below is popcount(sig_a & ~sig_b) <= sz_a - ceil(tau*sz_a),
-    # and at low tau the slack exceeds any real popcount, so the filter
-    # would prune nothing and the sig would be pure cost. Both current
-    # callers (containment 4/5, shingle 4/5) take the use_sig branch;
-    # the low-tau branch is kept for the regime-dependent form choice
-    # the 2stage scale_notes document (its stage 1 now runs the count
-    # form and bypasses this function entirely).
-    use_sig = 2 * num >= den
-    # repartition to core count BEFORE caching: the groupBy-derived table
-    # would otherwise pin the vanilla session's 200-partition layout into
-    # the InMemoryRelation for all three consumers (CLAUDE.md cache rule)
-    ranked = (
-        _ranked_token_arrays(items, with_sig=use_sig)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    # re-score parallelism: same narrow repartition as _prefix_filter_pairs
-    # (the candidate distinct's byte-sized output layout starves the
-    # compute-bound intersect stage — measured 34.4 s -> ~9 s at sf0.1)
-    cand = _containment_candidates(ranked, num, den).repartition(
-        spark.sparkContext.defaultParallelism, "id_a", "id_b"
-    )
-    if use_sig:
-        # RECALL-SAFE bitmap pre-filter over the candidate pair stream.
-        # Proof: every hashed item of A∩B is an item of B, so its bit is
-        # set in sig_b; a bit set in (sig_a & ~sig_b) can therefore only
-        # come from items of A\B, and distinct bits <= distinct items:
-        #   popcount(sig_a & ~sig_b) <= |A\B| = sz_a - isz.
-        # A qualifying pair has isz >= t_a = ceil(num*sz_a/den), hence
-        # popcount <= sz_a - t_a — keeping exactly those pairs loses NO
-        # qualifying pair at any bitmap width; false positives just pay
-        # the exact intersect below, so output is identical. Cost per
-        # pair: 16 AND-NOT+bit_count codegen terms on 128-byte sigs vs
-        # array_intersect's per-pair hash set over ~350-element ~2.8 KB
-        # arrays (r14 VERDICT item 1; measured at sf0.1 in
-        # OPTIMIZATION_r15.md). Unrolled generated text, ONE F.expr —
-        # the r7 build-banks-as-SQL-text lesson; 16 flat O(1) terms, not
-        # the 64x64 nested-fold bank that lost in r14.
-        excess = " + ".join(
-            f"bit_count(element_at(sig_a, {k + 1}) & ~element_at(sig_b, {k + 1}))"
-            for k in range(SIG_WORDS)
-        )
-        slack = f"sz_a - (({num} * sz_a + {den - 1}) div {den})"
-        pa = ranked.select(
-            F.col("doc_id").alias("id_a"),
-            F.size("hitems").alias("sz_a"),
-            F.col("sig").alias("sig_a"),
-        )
-        pb = ranked.select(
-            F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b")
-        )
-        cand = (
-            cand.join(pa, "id_a")
-            .join(pb, "id_b")
-            .filter(F.expr(f"({excess}) <= {slack}"))
-            .select("id_a", "id_b")
-        )
-    ta = ranked.select(F.col("doc_id").alias("id_a"), F.col("hitems").alias("items_a"))
-    tb = ranked.select(F.col("doc_id").alias("id_b"), F.col("hitems").alias("items_b"))
-    isz = F.size(F.array_intersect(F.col("items_a"), F.col("items_b")))
-    return (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .filter(isz * den >= num * F.size("items_a"))
-        .select(
-            "id_a",
-            "id_b",
-            # CAST the size to BIGINT BEFORE the 1e6 multiply: size()
-            # is INT and INT*1000000 wraps at isz >= 2148 in non-ANSI
-            # Spark (fixture max is ~350 grams/doc — only 6x headroom;
-            # canary in test_fixture_assumptions.py)
-            F.expr(
-                f"(CAST(size(array_intersect(items_a, items_b)) AS BIGINT)"
-                f" * 1000000) div size(items_a)"
-            ).cast("bigint").alias("cont_ppm"),
-        )
-    )
-
-
-def _containment_candidates(ranked: DataFrame, num: int, den: int) -> DataFrame:
-    """The raw prefix-probe x full-index candidate relation of
-    _containment_pairs, BEFORE the exact re-score — factored out so the
-    census probes (scripts/scale_probe_zipf.py) count the graded
-    machinery's own join rather than a reconstruction of it. ``ranked``
-    is _ranked_token_arrays output."""
-    # probe side: A's rarest-first prefix of sz - ceil(tau*sz) + 1 grams,
-    # with 1-based global positions (the slice is the array head, so
-    # posexplode positions ARE positions in the full ranked array)
-    prefix_len = F.expr(
-        f"size(hitems) - (({num} * size(hitems) + {den - 1})"
-        f" div {den}) + 1"
-    )
-    probe = ranked.select(
-        F.col("doc_id").alias("id_a"),
-        F.size("hitems").alias("sz_a"),
-        F.posexplode(F.slice(F.col("hitems"), F.lit(1), prefix_len)).alias(
-            "pa0", "it"
-        ),
-    ).select("id_a", "sz_a", (F.col("pa0") + 1).alias("pa"), "it")
-    # index side: ALL grams (no prefix — containment bounds only A),
-    # also with positions for the positional filter below
-    index = ranked.select(
-        F.col("doc_id").alias("id_b"),
-        F.size("hitems").alias("sz_b"),
-        F.posexplode("hitems").alias("pb0", "it"),
-    ).select("id_b", "sz_b", (F.col("pb0") + 1).alias("pb"), "it")
-    t_a = F.expr(f"({num} * sz_a + {den - 1}) div {den}")
-    # PPJoin positional filter, containment form: a shared gram at
-    # global-rank positions (pa, pb) bounds the overlap by
-    # 1 + min(sz_a - pa, sz_b - pb) >= t_a = ceil(tau * sz_a). For a
-    # TRUE pair the instance at the FIRST shared gram always passes
-    # (all common grams sit at positions >= pa in A resp. >= pb in B,
-    # so overlap <= both suffix lengths), and the FIRST shared gram is
-    # inside A's prefix by pigeonhole — pruning later instances never
-    # loses a pair. Measured at sf0.1: join instances 55.1M -> 35.2M
-    # (the distinct's shuffle input), distinct pairs 11.9M -> 11.0M —
-    # on this fixture most pruned instances belong to pairs that also
-    # share an early rare gram, so the census cut is modest; on a
-    # Zipf-tailed corpus the hot-gram instances ARE the census and
-    # this filter is the standard lever (Xiao et al.). See SCALE.md.
-    pos_ok = (
-        F.lit(1) + F.least(F.col("sz_a") - F.col("pa"), F.col("sz_b") - F.col("pb"))
-        >= t_a
-    )
-    return (
-        probe.join(index, "it")
-        .filter((F.col("id_a") != F.col("id_b")) & (F.col("sz_b") >= t_a) & pos_ok)
-        .select("id_a", "id_b")
-        .distinct()
+def _containment_ppm(items: DataFrame) -> DataFrame:
+    """(id_a, id_b, cont_ppm): set_sim_pairs' containment pairs at
+    CONTAIN_NUM/CONTAIN_DEN, scored in parts per million of |A|. The size
+    is CAST to BIGINT BEFORE the 1e6 multiply: INT*1000000 wraps at isz
+    >= 2148 in non-ANSI Spark (fixture max is ~350 grams/doc — only 6x
+    headroom; canary in test_fixture_assumptions.py)."""
+    return set_sim_pairs(items, "containment", CONTAIN_NUM, CONTAIN_DEN).select(
+        "id_a", "id_b",
+        F.expr("(CAST(isz AS BIGINT) * 1000000) div sz_a").alias("cont_ppm"),
     )
 
 
@@ -1437,8 +1374,9 @@ def _containment_candidates(ranked: DataFrame, num: int, den: int) -> DataFrame:
     scale_notes=(
         "the GRADED scale-safe containment tier the round-8 Zipf census "
         "prescribed: identical machinery to q_dedup_containment "
-        "(guaranteed-recall rarest-first prefix probe vs full index, "
-        "PPJoin positional filter, exact hashed re-score) with the gram "
+        "(set_sim_pairs: guaranteed-recall rarest-first prefix probe vs "
+        "full index, PPJoin positional filter, bitmap bound, exact hashed "
+        "re-score) with the gram "
         "UNIT moved from char-5-grams to WORD-2-GRAM shingles — the "
         "measured lever. Char-5-gram candidates census flat ~15% of "
         "all-pairs on every corpus shape tried (hot-word grams have "
@@ -1475,11 +1413,10 @@ def q_dedup_containment_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("words") >= 2)
         .select(
             "doc_id",
-            F.lit("all").alias("grp"),
-            F.array_distinct(shingles).alias("items"),
+                F.array_distinct(shingles).alias("items"),
         )
     )
-    return _containment_pairs(items, CONTAIN_NUM, CONTAIN_DEN)
+    return _containment_ppm(items)
 
 
 # --- Leakage-safe train/eval split: whole clusters to one side ----------
@@ -1611,72 +1548,9 @@ def _twostage_items(d: DataFrame) -> DataFrame:
     # candidate reach — see the key's scale_notes (r10 review finding).
     return d.select("doc_id", F.split("text", " ").alias("words")).select(
         "doc_id",
-        F.lit("all").alias("grp"),
         F.array_distinct(
             F.when(F.size("words") >= 2, shingles).otherwise(F.col("words"))
         ).alias("items"),
-    )
-
-
-def _twostage_pair_counts(items: DataFrame) -> DataFrame:
-    """(id_a, id_b, isz): EXACT directed shingle-overlap counts for
-    every doc pair sharing >= 1 item — the inverted-index COUNT form
-    (explode hashed items, equi self-join, COUNT(*) per pair; the
-    oracle-side shape of the dedup family, r7). Factored out so the
-    Zipf census probe counts the graded plan's own raw relation
-    (r13 extraction rule)."""
-    ex = items.select(
-        "doc_id", F.explode("items").alias("tk")
-    ).select("doc_id", F.xxhash64("tk").alias("it"))
-    return (
-        ex.select(F.col("doc_id").alias("id_a"), "it")
-        .join(ex.select(F.col("doc_id").alias("id_b"), "it"), "it")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("isz"))
-    )
-
-
-def _twostage_candidate_pairs(d: DataFrame) -> DataFrame:
-    """Stage 1 of q_dedup_containment_2stage: word-2-gram shingle
-    candidate pairs at the low candidate tau (0.2), via the exact
-    inverted-index COUNT form (r15 rewrite, guide §2.3 "aggregate
-    before you shuffle").
-
-    WHY the count form here and the prefix+intersect form elsewhere:
-    the prefix probe is sz - ceil(tau*sz) + 1 items — at tau 0.8 that
-    is ~20% of each doc (thin probe, so the r14 full-count attempt
-    cost 1.54 BILLION char-gram instances and lost), but at tau 0.2
-    it is ~80% (fat probe), so probing ALL items costs only ~25% more
-    join instances (73M at sf0.1) while COUNT(*) per pair replaces the
-    ENTIRE re-score: no ranked arrays, no 17.9M-pair distinct, no
-    array attach, no 17.9M array_intersects. Survivors are provably
-    identical: COUNT(*) over the hashed-item equi join IS
-    |A∩B| at the hash level (items are array_distinct'd), the same
-    quantity size(array_intersect(hitems_a, hitems_b)) computed — and
-    the measured survivor count at sf0.1 is byte-equal (273,882 both
-    forms; stage-1 wall 13.1 -> 5.4 s). Pinned against brute force in
-    tests/test_recall.py::test_twostage_stage1_count_form_equivalence.
-
-    The survivor stream is hash-repartitioned to core count for stage
-    2's compute-bound char-gram attach (the r14 unstarve rule: the
-    groupBy leaves ~274k pairs in AQE-byte-coalesced partitions)."""
-    spark = d.sparkSession
-    items = _twostage_items(d).cache()
-    # per-document sizes grow with the corpus: no broadcast hint, AQE
-    # broadcasts them while they fit
-    szs = items.select(F.col("doc_id").alias("id_a"), F.size("items").alias("sz_a"))
-    return (
-        _twostage_pair_counts(items)
-        .join(szs, "id_a")
-        .filter(
-            F.col("isz") * TWOSTAGE_CAND_DEN
-            >= TWOSTAGE_CAND_NUM * F.col("sz_a")
-        )
-        .select("id_a", "id_b")
-        .repartition(
-            spark.sparkContext.defaultParallelism, "id_a", "id_b"
-        )
     )
 
 
@@ -1688,7 +1562,7 @@ def _twostage_candidate_pairs(d: DataFrame) -> DataFrame:
         "the two-stage containment composition, graded end-to-end as a "
         "rows-only key: stage 1 generates candidate pairs from word-2-"
         "gram shingles at candidate tau 0.2 with the exact inverted-"
-        "index COUNT form (_twostage_candidate_pairs: hashed shingles "
+        "index COUNT form (set_sim_pairs at 1/5: hashed shingles "
         "exploded, equi self-joined, COUNT(*) per pair = |A∩B|, kept "
         "where |A∩B| >= 0.2·|A|), stage 2 re-scores ONLY those "
         "candidates with exact char-5-gram containment at tau 0.8. "
@@ -1709,8 +1583,8 @@ def _twostage_candidate_pairs(d: DataFrame) -> DataFrame:
         "not substitutes — the round-9 lesson, now stated for the "
         "composition too). Scale, MEASURED ON THE PLAN ITSELF "
         "(SCALE.md round-11, scripts/scale_probe_zipf.py `twostage` — "
-        "the probe counts _containment_candidates and "
-        "_twostage_candidate_pairs, the graded plan's own relations): "
+        "the probe counts set_sim_candidates and set_sim_pairs, the "
+        "graded plan's own relations): "
         "the raw tau-0.2 prefix join censuses ~n^2.05 under a FIXED "
         "vocabulary (flat ~0.9% of all-pairs; the fixture's 1.1% at "
         "sf0.1 is this regime's extreme), ~n^1.62 under Heaps V~sqrt(n) "
@@ -1731,10 +1605,11 @@ def _twostage_candidate_pairs(d: DataFrame) -> DataFrame:
         "prefix shingle). The form choice is REGIME-DEPENDENT and "
         "pure cost, never correctness: on Zipf/Heaps corpora the "
         "prefix form's raw relation is 40-70x sparser (SCALE.md "
-        "round-15 table, both forms measured) and remains the 100 TB "
-        "recipe there via the unchanged _containment_pairs machinery; "
-        "measure Heaps beta + prefix selectivity before choosing "
-        "(the r12 dial, extended)"
+        "round-15 table, both forms measured). set_sim_pairs picks the "
+        "form by prefix width alone (COUNT when 2·num < den), so the "
+        "prefix form at tau 0.2 is a code change away; measure Heaps "
+        "beta + prefix selectivity before making it (the r12 dial, "
+        "extended)"
     ),
 )
 def q_dedup_containment_2stage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1742,12 +1617,18 @@ def q_dedup_containment_2stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-2-gram shingle candidates at tau 0.2 and exact char-5-gram
     re-score on candidates only — the scale recipe as one plan."""
     d = table_parallel(spark, sf_dir, "documents")
-    # stage 1: word-shingle candidate pairs at the low candidate tau
-    # (_twostage_candidate_pairs — shared with the Zipf census probe;
-    # r15: the exact inverted-index COUNT form, see its docstring).
-    # It already hash-repartitions the survivor stream to core count,
-    # so stage 2's compute-bound char-gram attach runs full-core.
-    cand = _twostage_candidate_pairs(d)
+    # stage 1: word-shingle candidate pairs at the low candidate tau, the
+    # COUNT form of set_sim_pairs (a fat prefix; see set_sim_candidates),
+    # shared with the Zipf census probe. Survivors are hash-repartitioned
+    # to core count: the groupBy leaves them in AQE-byte-coalesced
+    # partitions, which would starve stage 2's compute-bound attach.
+    cand = (
+        set_sim_pairs(
+            _twostage_items(d), "containment", TWOSTAGE_CAND_NUM, TWOSTAGE_CAND_DEN
+        )
+        .select("id_a", "id_b")
+        .repartition(spark.sparkContext.defaultParallelism, "id_a", "id_b")
+    )
     # stage 2: exact char-gram containment on candidate ids only.
     # Hashed gram arrays (the _ranked_token_arrays trade: long
     # intersects ~5x faster than string intersects, 64-bit collisions

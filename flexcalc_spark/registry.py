@@ -126,17 +126,20 @@ def register(
 # Rotation applied by scripts/rotate_grade_order.py from
 # CORRECTNESS history through r15 — stalest evidence
 # first, prior relative order preserved inside each tier.
-# Tiers at rotation time (never-graded/failed/changed: 16, r9: 14, r10: 33, r11: 38, r12: 39, r13: 42, r14: 30, r15: 44).
+# Tiers at rotation time (never-graded/failed/changed: 23, r9: 14, r10: 33, r11: 38, r12: 39, r13: 42, r14: 29, r15: 38).
 # Front of the next graded window: q_source_avro, q_source_jsonl_zst, q_dedup_containment_2stage, ...
 GRADE_ORDER: list[str] = [
     "q_source_avro", "q_source_jsonl_zst", "q_dedup_containment_2stage",
     "q_knn_lsh", "q_dedup_embed_lsh_wide", "q_dedup_embed_lsh", "q_pagerank",
     "q_join_spatial", "q_sink_compacted", "q_source_csv_dirty",
     "q_source_xml", "q_source_evolving", "q_sink_partitioned", "q_sink_csv",
-    "q_stream_upsert", "q_stream_join", "q_join_asof", "q_join_salted",
-    "q_agg_distinct", "q_agg_approx", "q_agg_approx_percentile", "q_pivot",
-    "q_unpivot", "q_histogram", "q_agg_collect", "q_agg_minmax_by",
-    "q_agg_global", "q_agg_groupby", "q_agg_stats", "q_agg_percentile",
+    "q_stream_upsert", "q_stream_join", "q_dedup_incremental",
+    "q_dedup_containment_shingle", "q_dedup_containment",
+    "q_split_dedup_safe", "q_dedup_neardup", "q_dedup_ngram",
+    "q_dedup_clusters", "q_join_asof", "q_join_salted", "q_agg_distinct",
+    "q_agg_approx", "q_agg_approx_percentile", "q_pivot", "q_unpivot",
+    "q_histogram", "q_agg_collect", "q_agg_minmax_by", "q_agg_global",
+    "q_agg_groupby", "q_agg_stats", "q_agg_percentile",
     "q_agg_weighted_centroid", "q_rollup", "q_cube", "q_grouping_sets",
     "q_scan_project", "q_sketch_hll", "q_sliding_distinct",
     "q_quality_entropy", "q_anomaly_zscore", "q_retention",
@@ -183,12 +186,10 @@ GRADE_ORDER: list[str] = [
     "q_changepoint", "q_seasonal_decompose", "q_histogram_equidepth",
     "q_mad_outliers", "q_histogram_equidepth_approx",
     "q_mad_outliers_approx", "q_dpp_prune", "q_trajectory_sim",
-    "q_decontaminate", "q_dedup_incremental", "q_data_profile", "q_incr_mv",
-    "q_dedup_minhash", "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw",
-    "q_dedup_containment_shingle", "q_dedup_containment", "q_label_prop",
-    "q_split_dedup_safe", "q_dedup_neardup", "q_dedup_ngram",
-    "q_dedup_clusters", "q_bfs_hops", "q_join_bucketed", "q_pack_sequences",
-    "q_mix_sample", "q_sketch_cms", "q_snapshot_diff", "q_join_nullsafe",
+    "q_decontaminate", "q_data_profile", "q_incr_mv", "q_dedup_minhash",
+    "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw", "q_label_prop",
+    "q_bfs_hops", "q_join_bucketed", "q_pack_sequences", "q_mix_sample",
+    "q_sketch_cms", "q_snapshot_diff", "q_join_nullsafe",
     "q_agg_weighted_median", "q_sql_tpch22", "q_window_session",
     "q_ct_centre", "q_ct_histogram", "q_ct_bbox", "q_ct_threshold",
     "q_ct_moments", "q_ct_preprocess", "q_multimodal_features",

@@ -102,23 +102,23 @@ def gen_zipf_corpus(
 
 def jaccard_census(spark: SparkSession, sf_dir: str) -> dict:
     """Candidate count from the EXACT graded neardup machinery
-    (_ranked_token_arrays + _prefix_candidates_from_ranked), single
-    group (conservative: no lang blocking)."""
+    (_ranked_token_arrays + set_sim_candidates), single group
+    (conservative: no lang blocking)."""
     from flexcalc_spark.operators.dedup import (
         JACCARD_DEN,
         JACCARD_NUM,
-        _prefix_candidates_from_ranked,
         _ranked_token_arrays,
         _tok_sets,
+        set_sim_candidates,
     )
 
     t = (
         _tok_sets(spark, sf_dir)
-        .select("doc_id", F.lit("all").alias("grp"), F.col("toks").alias("items"))
+        .select("doc_id", F.col("toks").alias("items"))
         .cache()
     )
     ranked = _ranked_token_arrays(t).cache()
-    cand = _prefix_candidates_from_ranked(ranked, JACCARD_NUM, JACCARD_DEN)
+    cand = set_sim_candidates(ranked, "jaccard", JACCARD_NUM, JACCARD_DEN)
     t0 = time.perf_counter()
     n_cand = cand.count()
     dt = time.perf_counter() - t0
@@ -163,12 +163,11 @@ def jaccard_census(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def containment_census(
-    spark: SparkSession, sf_dir: str, gram: str = "char",
-    num: int | None = None, den: int | None = None,
+    spark: SparkSession, sf_dir: str, gram: str = "char"
 ) -> dict:
-    """Candidate count from the containment probe-prefix x full-index
-    gram join (the q_dedup_containment candidate stage verbatim:
-    rarest-first prefix, size + PPJoin positional prunes).
+    """Candidate count of the q_dedup_containment candidate stage: the
+    graded plan's own set_sim_candidates relation (rarest-first probe
+    prefix vs full index, size + PPJoin positional prunes).
 
     gram='char': the graded key's char-5-grams. gram='word2': word
     2-gram shingles — same thresholds, same machinery — the measured
@@ -179,11 +178,10 @@ def containment_census(
         CONTAIN_GRAM,
         CONTAIN_NUM,
         _ranked_token_arrays,
+        set_sim_candidates,
     )
     from flexcalc_spark.tables import table_parallel
 
-    num = CONTAIN_NUM if num is None else num
-    den = CONTAIN_DEN if den is None else den
     d = table_parallel(spark, sf_dir, "documents")
     if gram == "char":
         grams_expr = F.expr(
@@ -200,7 +198,6 @@ def containment_census(
         d.filter(F.length("text") >= CONTAIN_GRAM)
         .select(
             "doc_id",
-            F.lit("all").alias("grp"),
             F.array_distinct(grams_expr).alias("items"),
         )
         .cache()
@@ -210,38 +207,7 @@ def containment_census(
         .repartition(spark.sparkContext.defaultParallelism)
         .cache()
     )
-    prefix_len = F.expr(
-        f"size(hitems) - (({num} * size(hitems) + {den - 1})"
-        f" div {den}) + 1"
-    )
-    probe = ranked.select(
-        F.col("doc_id").alias("id_a"),
-        F.size("hitems").alias("sz_a"),
-        F.posexplode(F.slice(F.col("hitems"), F.lit(1), prefix_len)).alias(
-            "pa0", "it"
-        ),
-    ).select("id_a", "sz_a", (F.col("pa0") + 1).alias("pa"), "it")
-    index = ranked.select(
-        F.col("doc_id").alias("id_b"),
-        F.size("hitems").alias("sz_b"),
-        F.posexplode("hitems").alias("pb0", "it"),
-    ).select("id_b", "sz_b", (F.col("pb0") + 1).alias("pb"), "it")
-    t_a = F.expr(
-        f"({num} * sz_a + {den - 1}) div {den}"
-    )
-    pos_ok = (
-        F.lit(1)
-        + F.least(F.col("sz_a") - F.col("pa"), F.col("sz_b") - F.col("pb"))
-        >= t_a
-    )
-    size_ok = F.col("sz_b") * den >= F.col("sz_a") * num
-    cand = (
-        probe.join(index, "it")
-        .filter((F.col("id_a") != F.col("id_b")) & size_ok & pos_ok)
-        .groupBy("id_a", "id_b")
-        .agg(F.lit(1))
-        .select("id_a", "id_b")
-    )
+    cand = set_sim_candidates(ranked, "containment", CONTAIN_NUM, CONTAIN_DEN)
     t0 = time.perf_counter()
     n_cand = cand.count()
     dt = time.perf_counter() - t0
@@ -253,33 +219,39 @@ def containment_census(
 
 def twostage_census(spark: SparkSession, sf_dir: str) -> dict:
     """The ACTUAL q_dedup_containment_2stage plan (VERDICT r10 item 3):
-    candidate count from the graded key's own stage 1
-    (dedup._twostage_candidate_pairs, shared code — not a probe
-    reconstruction) plus the full two-stage plan end-to-end (final
-    pair count and wall time including the char-gram re-score)."""
+    the raw relation and the survivors of the graded key's own stage 1
+    (set_sim_candidates / set_sim_pairs in the COUNT form, shared code —
+    not a probe reconstruction) plus the full two-stage plan end-to-end
+    (final pair count and wall time including the char-gram re-score)."""
     from flexcalc_spark.operators.dedup import (
-        _twostage_candidate_pairs,
+        TWOSTAGE_CAND_DEN,
+        TWOSTAGE_CAND_NUM,
+        _ranked_token_arrays,
         _twostage_items,
-        _twostage_pair_counts,
         q_dedup_containment_2stage,
+        set_sim_candidates,
+        set_sim_pairs,
     )
     from flexcalc_spark.tables import table_parallel
 
     d = table_parallel(spark, sf_dir, "documents")
-    # raw pair-count relation census (r15: the graded plan's stage 1 is
-    # the exact inverted-index COUNT form — the raw relation is every
-    # doc pair sharing >= 1 shingle, counted from the plan's own helper
-    # per the r13 extraction rule; it is a SUPERSET of the old
-    # prefix-probe raw relation, same fixed-V ~n^2 / Heaps ~n classes)
-    items = _twostage_items(d).cache()
+    # raw pair-count relation: every doc pair sharing >= 1 shingle (the
+    # COUNT form probes every item; same fixed-V ~n^2 / Heaps ~n classes
+    # as the prefix probe it replaced). The count form is order-free, so
+    # the ranked arrays serve as its hashed items.
+    ranked = _ranked_token_arrays(_twostage_items(d)).cache()
     t0 = time.perf_counter()
-    n_raw = _twostage_pair_counts(items).count()
+    n_raw = set_sim_candidates(
+        ranked, "containment", TWOSTAGE_CAND_NUM, TWOSTAGE_CAND_DEN
+    ).count()
     raw_s = time.perf_counter() - t0
-    items.unpersist()
+    ranked.unpersist()
     # stage-2 input census: candidates surviving the exact word-level
-    # re-score at tau 0.2 (what the char-gram stage actually touches)
+    # verify at tau 0.2 (what the char-gram stage actually touches)
     t0 = time.perf_counter()
-    n_cand = _twostage_candidate_pairs(d).count()
+    n_cand = set_sim_pairs(
+        _twostage_items(d), "containment", TWOSTAGE_CAND_NUM, TWOSTAGE_CAND_DEN
+    ).count()
     cand_s = time.perf_counter() - t0
     t0 = time.perf_counter()
     n_pairs = q_dedup_containment_2stage(spark, sf_dir).count()
@@ -309,8 +281,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     base = tempfile.mkdtemp(prefix="zipf_corpus_")
     print(f"corpus root: {base}")
-    base_modes = modes & {"jaccard", "contain", "contain_w2",
-                          "contain_w2_tau02"}
+    base_modes = modes & {"jaccard", "contain", "contain_w2"}
     for n in SIZES if base_modes else []:
         out = f"{base}/n{n}"
         gen_zipf_corpus(spark, n, out)
@@ -333,16 +304,6 @@ def main() -> None:
             c = containment_census(spark, out, gram="word2")
             print(
                 f"contain_w2 n={n}: cand={c['cand']} "
-                f"frac={c['cand'] / allp:.3e} {c['s']:.1f}s"
-            )
-        if "contain_w2_tau02" in modes:
-            # the q_dedup_containment_2stage CANDIDATE stage (round 10):
-            # word-2-gram units at candidate tau 1/5 — probe prefix
-            # ~80% of shingles instead of ~20%. Measures what the
-            # wide-recall prefix costs in candidate density vs n.
-            c = containment_census(spark, out, gram="word2", num=1, den=5)
-            print(
-                f"contain_w2_tau02 n={n}: cand={c['cand']} "
                 f"frac={c['cand'] / allp:.3e} {c['s']:.1f}s"
             )
     if "twostage" in modes:

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from flexcalc_spark import ct
@@ -99,24 +99,36 @@ def test_approx_percentile_brackets_exact(spark):
         assert abs(a.price_p95 - exact[k].price_p95) / exact[k].price_p95 < 0.05
 
 
+def _overlap_qualifies(measure, a, b, num, den):
+    """Brute-force set_sim_pairs predicate on Python sets."""
+    isz = len(a & b)
+    if measure == "jaccard":
+        return bool(a | b) and isz * den >= num * len(a | b)
+    return bool(a) and isz * den >= num * len(a)
+
+
 @given(
     n_docs=st.integers(4, 14),
     vocab=st.integers(3, 10),
     num_den=st.sampled_from([(19, 20), (49, 50), (4, 5)]),
+    measure=st.sampled_from(["jaccard", "containment"]),
     seed=st.integers(0, 10_000),
 )
+@example(n_docs=8, vocab=6, num_den=(4, 5), measure="containment", seed=7)
 @_slow
-def test_prefix_filter_candidates_are_complete(spark, n_docs, vocab, num_den, seed):
+def test_prefix_filter_candidates_are_complete(
+    spark, n_docs, vocab, num_den, measure, seed
+):
     """The PPJoin prefix-filter candidate set must contain EVERY pair
-    with jaccard >= num/den (the guaranteed-recall theorem the graded
-    neardup/ngram plans rely on), on arbitrary random token sets."""
+    reaching the measure's threshold (the guaranteed-recall theorem the
+    graded Jaccard and containment plans rely on), on arbitrary random
+    token sets."""
     from flexcalc_spark.operators.dedup import (
-        _prefix_candidates_from_ranked,
         _ranked_token_arrays,
+        set_sim_candidates,
     )
 
     num, den = num_den
-    tau = num / den
     rng = np.random.RandomState(seed)
     docs = []
     for i in range(n_docs):
@@ -130,9 +142,11 @@ def test_prefix_filter_candidates_are_complete(spark, n_docs, vocab, num_den, se
 
     exact = set()
     for i in range(len(docs)):
-        for j in range(i + 1, len(docs)):
+        for j in range(len(docs)):
+            if i == j or (measure == "jaccard" and j < i):
+                continue
             a, b = set(docs[i][2]), set(docs[j][2])
-            if a | b and len(a & b) / len(a | b) >= tau:
+            if _overlap_qualifies(measure, a, b, num, den):
                 exact.add((docs[i][0], docs[j][0]))
 
     items = spark.createDataFrame(
@@ -140,8 +154,8 @@ def test_prefix_filter_candidates_are_complete(spark, n_docs, vocab, num_den, se
     )
     cand = {
         (r.id_a, r.id_b)
-        for r in _prefix_candidates_from_ranked(
-            _ranked_token_arrays(items), num, den
+        for r in set_sim_candidates(
+            _ranked_token_arrays(items), measure, num, den
         ).collect()
     }
     missing = exact - cand
@@ -156,34 +170,40 @@ def test_prefix_filter_candidates_are_complete(spark, n_docs, vocab, num_den, se
 @given(
     n_docs=st.integers(6, 14),
     vocab=st.integers(8, 40),
+    num_den=st.sampled_from([(19, 20), (4, 5), (1, 5)]),
+    measure=st.sampled_from(["jaccard", "containment"]),
     seed=st.integers(0, 2**31 - 1),
 )
-def test_containment_sig_prefilter_output_complete(spark, n_docs, vocab, seed):
-    """The r15 bitmap pre-filter inside _containment_pairs must not
-    change the output set: on arbitrary random token-set docs the full
-    pipeline (prefix candidates -> sig pre-filter -> exact intersect)
-    must equal the brute-force directed-containment set. Also pins the
-    sig construction itself: the SQL bit_or bitmap must equal a Python
-    OR-fold of pmod(hash, SIG_BITS) bits over the doc's own hitems."""
+# the COUNT form for both measures, whatever the random draws
+@example(n_docs=8, vocab=10, num_den=(1, 5), measure="containment", seed=3)
+@example(n_docs=8, vocab=10, num_den=(1, 5), measure="jaccard", seed=3)
+def test_containment_sig_prefilter_output_complete(
+    spark, n_docs, vocab, num_den, measure, seed
+):
+    """set_sim_pairs must emit exactly the brute-force pair set with its
+    exact (isz, sz_a, sz_b), for both measures and both forms: prefix
+    candidates -> (for containment) the bitmap bound -> exact intersect,
+    and (at 1/5) the COUNT form. Also pins the sig construction itself:
+    the SQL bit_or bitmap must equal a Python OR-fold of pmod(hash,
+    SIG_BITS) bits over the doc's own hitems."""
     from flexcalc_spark.operators.dedup import (
-        CONTAIN_DEN, CONTAIN_NUM, SIG_BITS,
-        _containment_pairs, _ranked_token_arrays,
+        SIG_BITS, _ranked_token_arrays, set_sim_pairs,
     )
 
+    num, den = num_den
     rng = np.random.RandomState(seed)
     docs = []
     for i in range(n_docs):
         size = rng.randint(1, vocab + 1)
         toks = sorted(rng.choice(vocab, size=size, replace=False))
-        docs.append((i, "all", [f"t{t}" for t in toks]))
+        docs.append((i, [f"t{t}" for t in toks]))
     # a contained twin (subset) and an exact twin so qualifying pairs exist
-    base = docs[0][2]
-    docs.append((n_docs, "all", list(base)))
-    docs.append((n_docs + 1, "all", list(base[: max(1, len(base) * 4 // 5)])))
+    base = docs[0][1]
+    docs.append((n_docs, list(base)))
+    docs.append((n_docs + 1, list(base[: max(1, len(base) * 4 // 5)])))
 
-    items = spark.createDataFrame(
-        docs, "doc_id long, grp string, items array<string>"
-    )
+    # no grp column: the ungrouped input of the graded containment keys
+    items = spark.createDataFrame(docs, "doc_id long, items array<string>")
 
     # sig construction pin (mechanism-distinct: fold the hitems column
     # itself in Python and compare word-for-word)
@@ -199,16 +219,14 @@ def test_containment_sig_prefilter_output_complete(spark, n_docs, vocab, seed):
     want = set()
     for i in range(len(docs)):
         for j in range(len(docs)):
-            if i == j:
+            if i == j or (measure == "jaccard" and j < i):
                 continue
-            a, b = set(docs[i][2]), set(docs[j][2])
-            if len(a & b) * CONTAIN_DEN >= CONTAIN_NUM * len(a):
-                want.add(
-                    (docs[i][0], docs[j][0], len(a & b) * 1_000_000 // len(a))
-                )
+            a, b = set(docs[i][1]), set(docs[j][1])
+            if _overlap_qualifies(measure, a, b, num, den):
+                want.add((docs[i][0], docs[j][0], len(a & b), len(a), len(b)))
     got = {
-        (r.id_a, r.id_b, r.cont_ppm)
-        for r in _containment_pairs(items, CONTAIN_NUM, CONTAIN_DEN).collect()
+        (r.id_a, r.id_b, r.isz, r.sz_a, r.sz_b)
+        for r in set_sim_pairs(items, measure, num, den).collect()
     }
     assert got == want, f"got-want={got - want} want-got={want - got}"
 

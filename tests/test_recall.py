@@ -586,15 +586,15 @@ def test_containment_2stage_single_word_docs(spark, tmp_path):
 
 
 def test_twostage_stage1_count_form_equivalence(spark):
-    """The r15 count-form stage 1 (_twostage_candidate_pairs via the
-    inverted-index COUNT) must emit exactly the brute-force word-level
+    """The r15 count-form stage 1 (set_sim_pairs' inverted-index COUNT
+    form at the candidate tau) must emit exactly the brute-force word-level
     containment survivor set at the candidate tau — same semantics the
     old prefix+array_intersect formulation computed. Run through the
     REAL pipeline over a fixture slice (doc_id < 120 at sf0.001)."""
     from pyspark.sql import functions as F
 
     from flexcalc_spark.operators.dedup import (
-        TWOSTAGE_CAND_DEN, TWOSTAGE_CAND_NUM, _twostage_candidate_pairs,
+        TWOSTAGE_CAND_DEN, TWOSTAGE_CAND_NUM, _twostage_items, set_sim_pairs,
     )
     from flexcalc_spark.tables import table
 
@@ -616,6 +616,9 @@ def test_twostage_stage1_count_form_equivalence(spark):
         and len(sets[a] & sets[b]) * TWOSTAGE_CAND_DEN
         >= TWOSTAGE_CAND_NUM * len(sets[a])
     }
-    got = {(r.id_a, r.id_b) for r in _twostage_candidate_pairs(d).collect()}
+    stage1 = set_sim_pairs(
+        _twostage_items(d), "containment", TWOSTAGE_CAND_NUM, TWOSTAGE_CAND_DEN
+    )
+    got = {(r.id_a, r.id_b) for r in stage1.collect()}
     assert want, "slice produced no qualifying pairs — widen the slice"
     assert got == want, f"got-want={got - want} want-got={want - got}"
