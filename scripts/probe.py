@@ -5,12 +5,17 @@
         best call's counts (jobs, stages, tasks, shuffle and Python-worker
         bytes, plan shape) and span self-times (construction, scans, plan
         memo, optimize, physical planning, write), as perfbench traces them.
+        With N >= 2, also driver.retained_mb_per_call: the driver's live
+        heap (perfbench.tracing.heap_live_mb) after the last call minus
+        after the first, over N - 1 — what each call leaves behind.
     python scripts/probe.py [KEY ...] --sf DIR [--runs N] --ab TREE
         Interleaved A/B of this tree against the source tree TREE (a
         checkout of another commit): N rounds, each running both trees in
         fresh child processes (3 untraced calls per key each), the first
         tree alternating. Reports every timed call, each side's per-key
-        MIN, whether the canonical plans are equal
+        MIN and their ratio, the paired ratio of each round (this tree's
+        MIN over the other's in that round) and the median of those,
+        whether the canonical plans are equal
         (flexcalc_spark.plans.canonical_plan) and, if not, a diff of the
         plans with their ids taken out.
     python scripts/probe.py --window --sf DIR
@@ -38,6 +43,7 @@ import gc
 import json
 import multiprocessing
 import os
+import statistics
 import sys
 import time
 import traceback
@@ -50,7 +56,7 @@ sys.path.insert(0, ROOT)
 # tree first on sys.path before anything imports flexcalc_spark.
 from perfbench.check import Oracle, canon_frame  # noqa: E402
 from perfbench.run import stop_spark  # noqa: E402
-from perfbench.tracing import Tracer, self_times  # noqa: E402
+from perfbench.tracing import Tracer, heap_live_mb, self_times  # noqa: E402
 
 CHUNK = 90
 WINDOW = 50
@@ -88,7 +94,8 @@ def _error(exc: Exception) -> dict:
 
 def _traced(keys: list[str], sf_dir: str, runs: int) -> dict:
     """Child: ``runs`` traced calls per key in one session; per key the
-    fastest call's counts and span self-times, and every call's wall."""
+    fastest call's counts and span self-times, every call's wall and,
+    for ``runs`` >= 2, the live heap each call retained."""
     from flexcalc_spark import tables
 
     tracer = Tracer()
@@ -100,9 +107,9 @@ def _traced(keys: list[str], sf_dir: str, runs: int) -> dict:
         _noop(spark, queries[WARM_KEY], sf_dir)
         out = {}
         for key in keys:
-            walls, best = [], None
+            walls, heaps, best = [], [], None
             try:
-                for _ in range(runs):
+                for i in range(runs):
                     _settle(spark)
                     counts0, spans0 = dict(tracer.counts), len(tracer.spans)
                     tracer.active = True
@@ -113,11 +120,15 @@ def _traced(keys: list[str], sf_dir: str, runs: int) -> dict:
                         best = {k: v - counts0.get(k, 0.0) for k, v in tracer.counts.items()
                                 if v != counts0.get(k, 0.0)}
                         best.update(wall_s=wall, self_s=self_times(tracer.spans[spans0:]))
+                    if runs >= 2 and i in (0, runs - 1):
+                        heaps.append(heap_live_mb(spark))
             except Exception as exc:  # noqa: BLE001 — one key's failure is its result
                 tracer.active = False
                 out[key] = _error(exc)
                 continue
             out[key] = {**best, "runs_s": walls}
+            if heaps:
+                out[key]["driver.retained_mb_per_call"] = (heaps[1] - heaps[0]) / (runs - 1)
         return out
     finally:
         stop_spark(spark)
@@ -202,23 +213,32 @@ def ab(keys: list[str], sf_dir: str, rounds: int, tree: str) -> dict:
 
     arms = {"this": ROOT, "other": os.path.abspath(tree)}
     runs: dict = {arm: {k: [] for k in keys} for arm in arms}
+    round_mins: dict = {arm: {k: [] for k in keys} for arm in arms}
     plans: dict = {arm: {} for arm in arms}
     for rnd in range(rounds):
         for arm in list(arms)[::1 if rnd % 2 == 0 else -1]:
             for key, res in in_children(_timed, keys, sf_dir, arms[arm]).items():
                 runs[arm][key].extend(res.get("runs_s", []))
+                round_mins[arm][key].append(min(res.get("runs_s") or [None]))
                 plans[arm][key] = res.get("plan", res.get("error"))
             print(f"round {rnd} {arm}: " + " ".join(
-                f"{k}={min(v):.3f}" for k, v in runs[arm].items() if v), file=sys.stderr)
+                f"{k}={v[-1]:.3f}" for k, v in round_mins[arm].items() if v[-1] is not None),
+                file=sys.stderr)
     out = {}
     for key in keys:
         mins = {arm: min(runs[arm][key], default=None) for arm in arms}
+        # one fast arm decides the MIN ratio; the median of the rounds'
+        # paired ratios does not
+        paired = [t / o for t, o in zip(round_mins["this"][key], round_mins["other"][key])
+                  if t is not None and o is not None]
         a, b = plans["this"][key], plans["other"][key]
         equal = canonical_plan(a, sf_dir) == canonical_plan(b, sf_dir)
         out[key] = {
             "runs_s": {arm: runs[arm][key] for arm in arms},
             "min_s": mins,
             "ratio": mins["this"] / mins["other"] if None not in mins.values() else None,
+            "round_ratios": paired,
+            "median_ratio": statistics.median(paired) if paired else None,
             "plans_equal": equal,
             "plan_diff": [] if equal else list(difflib.unified_diff(
                 strip_volatile(b, sf_dir).splitlines(),

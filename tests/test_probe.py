@@ -17,7 +17,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_probe_default_mode_prints_per_layer_json(tmp_path):
     out = subprocess.run(
         [sys.executable, os.path.join(ROOT, "scripts", "probe.py"),
-         "q_agg_groupby", "--sf", SF_DIR, "--runs", "1"],
+         "q_agg_groupby", "--sf", SF_DIR, "--runs", "2"],
         cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
@@ -26,6 +26,8 @@ def test_probe_default_mode_prints_per_layer_json(tmp_path):
     assert got["exec.jobs"] >= 1
     assert got["plan.nodes"] >= 1
     assert got["self_s"]["operators.construct"] > 0
+    assert len(got["runs_s"]) == 2
+    assert isinstance(got["driver.retained_mb_per_call"], float)
 
 
 def test_no_script_puts_a_literal_path_on_sys_path():
