@@ -1321,15 +1321,21 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 0.8 of A's gram set; prefix-filtered probe side vs full-token
     index side, exact re-score on hashed gram arrays."""
     d = table_parallel(spark, sf_dir, "documents")
+    return _containment_ppm(_char_gram_items(d))
+
+
+def _char_gram_items(d: DataFrame) -> DataFrame:
+    """Per-doc distinct char-5-gram sets of q_dedup_containment (docs of
+    at least CONTAIN_GRAM characters); the Zipf census probe counts the
+    candidates of these same items."""
     grams_expr = F.expr(
         f"transform(sequence(1, length(text) - {CONTAIN_GRAM - 1}),"
         f" i -> substring(text, i, {CONTAIN_GRAM}))"
     )
-    items = d.filter(F.length("text") >= CONTAIN_GRAM).select(
+    return d.filter(F.length("text") >= CONTAIN_GRAM).select(
         "doc_id",
         F.array_distinct(grams_expr).alias("items"),
     )
-    return _containment_ppm(items)
 
 
 def _containment_ppm(items: DataFrame) -> DataFrame:
@@ -1404,19 +1410,25 @@ def q_dedup_containment_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit through the same prefix-filter machinery as
     q_dedup_containment."""
     d = table_parallel(spark, sf_dir, "documents")
-    shingles = F.expr(
-        "transform(sequence(1, size(words) - 1),"
-        " i -> concat(element_at(words, i), ' ', element_at(words, i + 1)))"
-    )
-    items = (
+    return _containment_ppm(_shingle_items(d))
+
+
+# the word 2-grams of a `words` array column, as Spark SQL text
+WORD_BIGRAMS = (
+    "transform(sequence(1, size(words) - 1),"
+    " i -> concat(element_at(words, i), ' ', element_at(words, i + 1)))"
+)
+
+
+def _shingle_items(d: DataFrame) -> DataFrame:
+    """Per-doc distinct word-2-gram shingle sets of
+    q_dedup_containment_shingle (docs with at least 2 words); the Zipf
+    census probe counts the candidates of these same items."""
+    return (
         d.select("doc_id", F.split("text", " ").alias("words"))
         .filter(F.size("words") >= 2)
-        .select(
-            "doc_id",
-                F.array_distinct(shingles).alias("items"),
-        )
+        .select("doc_id", F.array_distinct(F.expr(WORD_BIGRAMS)).alias("items"))
     )
-    return _containment_ppm(items)
 
 
 # --- Leakage-safe train/eval split: whole clusters to one side ----------
@@ -1537,10 +1549,7 @@ TWOSTAGE_CAND_NUM, TWOSTAGE_CAND_DEN = 1, 5   # candidate tau = 0.2
 def _twostage_items(d: DataFrame) -> DataFrame:
     """Per-doc word-2-gram shingle sets for the 2stage candidate stage
     (shared by the graded plan and the Zipf census probe)."""
-    shingles = F.expr(
-        "transform(sequence(1, size(words) - 1),"
-        " i -> concat(element_at(words, i), ' ', element_at(words, i + 1)))"
-    )
+    shingles = F.expr(WORD_BIGRAMS)
     # single-word docs have no bigram; fall back to the word itself so
     # they still participate (a bigram always contains a space, a word
     # never does — the item namespaces are disjoint). Pairs whose ONLY

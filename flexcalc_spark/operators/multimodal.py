@@ -1,17 +1,20 @@
-"""Multimodal-column operator (north star §2.3 "(multimodal)").
+"""Multimodal-column operators (north star §2.3 "(multimodal)").
 
-Builds a media table deterministically from the ``embeddings`` fixture —
-each vector's float32 bytes become an opaque 8x8 'raw image' blob with
-typed JSON metadata — and runs the real decode/feature-extract pipeline
-(sources/binaryfiles.py::media_features, Arrow-batched mapInPandas).
-Because the blobs derive from a parquet table, the DuckDB oracle can
-compute the same features and the multimodal PLUMBING (BinaryType
-columns, metadata JSON, UDF batch shape) is hash-graded.
+Each media key packs the ``embeddings`` fixture into a media batch —
+each vector's float32 bytes become one opaque blob (an 8x8 image, four
+4x4 video frames or a 64-sample waveform) with typed JSON metadata — and
+runs the real decode/feature steps of sources/binaryfiles.py on it. The
+whole chain (pack -> decode/feature step -> key-local reduce) is ONE
+``map_batches`` call: one Arrow pass, so every row crosses the
+JVM/Python boundary once. Because the blobs derive from a parquet table,
+the DuckDB oracle computes the same features and the multimodal
+PLUMBING (BinaryType columns, metadata JSON, UDF batch shape) is
+hash-graded.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -21,34 +24,49 @@ from pyspark.sql import functions as F
 
 from flexcalc_spark.registry import register
 from flexcalc_spark.sources.binaryfiles import (
-    MEDIA_SCHEMA,
-    media_features,
-    media_resize,
+    FEATURE_SCHEMA,
+    RESIZED_SCHEMA,
+    features_batch,
+    frame_sample_batch,
+    map_batches,
+    resize_batch,
 )
 from flexcalc_spark.tables import table_parallel
 
 
-def media_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings -> media table: blob = float32 little-endian bytes of
-    the 64-dim vector, presented as an 8x8 raw image."""
-    e = table_parallel(spark, sf_dir, "embeddings")
+def pack_batch(pdf: pd.DataFrame, modality: str, meta_json: str) -> pd.DataFrame:
+    """(vec_id, embedding) batch -> media batch (MEDIA_SCHEMA columns):
+    blob = float32 little-endian bytes of the 64-dim vector."""
+    # one stacked float32 conversion for the whole batch; only the
+    # per-row tobytes (blob object creation) stays a loop
+    arr = np.stack(pdf["embedding"].to_numpy()).astype("<f4")
+    return pd.DataFrame(
+        {
+            "media_id": pdf["vec_id"].astype("int64"),
+            "modality": modality,
+            "fmt": "raw",
+            "meta_json": meta_json,
+            "content": [arr[i].tobytes() for i in range(len(pdf))],
+        }
+    )
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # one stacked float32 conversion for the whole batch; only the
-            # per-row tobytes (blob object creation) stays a loop
-            arr = np.stack(pdf["embedding"].to_numpy()).astype("<f4")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["vec_id"].astype("int64"),
-                    "modality": "image",
-                    "fmt": "raw",
-                    "meta_json": '{"h": 8, "w": 8, "dtype": "float32"}',
-                    "content": [arr[i].tobytes() for i in range(len(pdf))],
-                }
-            )
 
-    return e.select("vec_id", "embedding").mapInPandas(pack, MEDIA_SCHEMA)
+PACK_IMAGE = partial(
+    pack_batch, modality="image",
+    meta_json='{"h": 8, "w": 8, "dtype": "float32"}',
+)
+PACK_VIDEO = partial(
+    pack_batch, modality="video",
+    meta_json='{"n_frames": 4, "h": 4, "w": 4, "dtype": "float32"}',
+)
+PACK_AUDIO = partial(
+    pack_batch, modality="audio",
+    meta_json='{"n_samples": 64, "sr": 16000, "dtype": "float32"}',
+)
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table_parallel(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
 
 @register(
@@ -63,12 +81,13 @@ def media_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings
     """,
     family="multimodal",
-    scale_notes="opaque binary column + typed metadata + Arrow decode UDF: blobs never leave the executors, features are narrow rows. Undecodable modalities degrade to flagged rows, not job failures",
+    scale_notes="opaque binary column + typed metadata + Arrow decode UDF: pack -> decode -> features in one Arrow pass, so blobs never leave the executors and only narrow feature rows cross back to the JVM. Undecodable modalities degrade to flagged rows, not job failures",
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode + feature-extract over a multimodal media table."""
-    media = media_from_embeddings(spark, sf_dir)
-    feats = media_features(media)
+    feats = map_batches(
+        _embeddings(spark, sf_dir), FEATURE_SCHEMA, PACK_IMAGE, features_batch
+    )
     return feats.select(
         "media_id",
         "n_bytes",
@@ -91,12 +110,13 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings
     """,
     family="multimodal",
-    scale_notes="decode->resize in one Arrow pass; 2x2 block-mean preserves the global mean exactly, so the oracle checks the resample arithmetic, not just plumbing",
+    scale_notes="pack -> decode -> resize in one Arrow pass: the blob is built, decoded and downsampled executor-side and only (media_id, rh, rw, mean) rows cross back to the JVM; 2x2 block-mean preserves the global mean exactly, so the oracle checks the resample arithmetic, not just plumbing",
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize (2x block-mean downsample) over the media table."""
-    media = media_from_embeddings(spark, sf_dir)
-    resized = media_resize(media)
+    resized = map_batches(
+        _embeddings(spark, sf_dir), RESIZED_SCHEMA, PACK_IMAGE, resize_batch
+    )
     return resized.select(
         "media_id",
         F.col("rh").cast("bigint").alias("rh"),
@@ -105,26 +125,16 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def media_video_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings -> 'video' media table: the 64-dim vector presents as
-    4 concatenated 4x4 float32 frames (n_frames in the typed metadata)."""
-    e = table_parallel(spark, sf_dir, "embeddings")
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            arr = np.stack(pdf["embedding"].to_numpy()).astype("<f4")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["vec_id"].astype("int64"),
-                    "modality": "video",
-                    "fmt": "raw",
-                    "meta_json": '{"n_frames": 4, "h": 4, "w": 4,'
-                    ' "dtype": "float32"}',
-                    "content": [arr[i].tobytes() for i in range(len(pdf))],
-                }
-            )
-
-    return e.select("vec_id", "embedding").mapInPandas(pack, MEDIA_SCHEMA)
+def frame_means_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Frame rows (media_id, frame_idx, px) -> per-frame float64 mean."""
+    px = np.stack([np.frombuffer(bytes(b), dtype="<f4") for b in pdf["px"]])
+    return pd.DataFrame(
+        {
+            "media_id": pdf["media_id"].astype("int64"),
+            "frame_idx": pdf["frame_idx"].astype("int64"),
+            "frame_mean": px.astype(np.float64).mean(axis=1),
+        }
+    )
 
 
 @register(
@@ -140,45 +150,30 @@ def media_video_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     family="multimodal",
     scale_notes=(
         "video frame sampling (every k-th frame) over opaque binary "
-        "blobs: one Arrow mapInPandas pass splits each blob into frame "
-        "rows WITHOUT the blob ever leaving the executor, a second "
-        "columnar pass reduces each frame to its features — at 100 TB "
-        "the frame explosion multiplies rows by n_frames/k before any "
-        "shuffle, and per-frame features (narrow rows) are what moves. "
-        "Codec-compressed video raises NotImplementedError explicitly "
-        "(still-image decoders are all real now, so a per-frame decode "
-        "succeeding must not masquerade as video support; plug a real "
-        "codec in where the container has one); the raw-frames layout "
-        "here keeps the arithmetic oracle-checkable end-to-end"
+        "blobs in ONE Arrow pass: pack -> split each blob into frame "
+        "rows -> reduce each frame to its features, all inside one "
+        "batch function chain, so neither the blob nor the frame rows "
+        "ever leave the executor's Python worker — at 100 TB the frame "
+        "explosion multiplies rows by n_frames/k before any shuffle, "
+        "and only per-frame features (narrow rows) cross back to the "
+        "JVM. Codec-compressed video raises NotImplementedError "
+        "explicitly (still-image decoders are all real now, so a "
+        "per-frame decode succeeding must not masquerade as video "
+        "support; plug a real codec in where the container has one); "
+        "the raw-frames layout here keeps the arithmetic "
+        "oracle-checkable end-to-end"
     ),
 )
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sample (every 2nd frame) the video media table and reduce
     each sampled frame to its mean — (media_id, frame_idx, frame_mean)."""
-    from flexcalc_spark.sources.binaryfiles import media_frame_sample
-
-    media = media_video_from_embeddings(spark, sf_dir)
-    frames = media_frame_sample(media, every_k=2)
-
-    out_schema = "media_id long, frame_idx long, frame_mean double"
-
-    def reduce_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            px = np.stack(
-                [np.frombuffer(bytes(b), dtype="<f4") for b in pdf["px"]]
-            )
-            means = px.astype(np.float64).mean(axis=1)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "frame_idx": pdf["frame_idx"].astype("int64"),
-                    "frame_mean": means,
-                }
-            )
-
-    red = frames.mapInPandas(reduce_frames, out_schema)
+    red = map_batches(
+        _embeddings(spark, sf_dir),
+        "media_id long, frame_idx long, frame_mean double",
+        PACK_VIDEO,
+        partial(frame_sample_batch, every_k=2),
+        frame_means_batch,
+    )
     return red.select(
         "media_id",
         "frame_idx",
@@ -186,26 +181,26 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def media_audio_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings -> 'audio' media table: the 64-dim vector presents as
-    a 64-sample float32 waveform (sample rate in the typed metadata)."""
-    e = table_parallel(spark, sf_dir, "embeddings")
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            arr = np.stack(pdf["embedding"].to_numpy()).astype("<f4")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["vec_id"].astype("int64"),
-                    "modality": "audio",
-                    "fmt": "raw",
-                    "meta_json": '{"n_samples": 64, "sr": 16000,'
-                    ' "dtype": "float32"}',
-                    "content": [arr[i].tobytes() for i in range(len(pdf))],
-                }
-            )
-
-    return e.select("vec_id", "embedding").mapInPandas(pack, MEDIA_SCHEMA)
+def audio_windows_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Waveform media rows -> per 16-sample window (media_id,
+    window_idx, energy, n_zero_cross)."""
+    wave = np.stack(
+        [np.frombuffer(bytes(b), dtype="<f4") for b in pdf["content"]]
+    ).astype(np.float64)
+    n = len(wave)
+    win = wave.reshape(n, 4, 16)
+    # sequential (left-fold) sum via cumsum: bit-identical to the
+    # oracle's list_aggregate 'sum' fold, unlike pairwise np.sum
+    energy = np.cumsum(win * win, axis=2)[:, :, -1] / 16.0
+    zc = (win[:, :, :-1] * win[:, :, 1:] < 0).sum(axis=2)
+    return pd.DataFrame(
+        {
+            "media_id": np.repeat(pdf["media_id"].to_numpy(), 4),
+            "window_idx": np.tile(np.arange(4), n),
+            "energy": energy.reshape(-1),
+            "n_zero_cross": zc.reshape(-1).astype("int64"),
+        }
+    )
 
 
 @register(
@@ -231,56 +226,30 @@ def media_audio_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale_notes=(
         "audio feature extraction over opaque waveform blobs — the "
         "third modality (image features/resize, video frame-sample, "
-        "now audio windowing): ONE Arrow mapInPandas pass windows each "
-        "blob executor-side (16-sample hops) and emits narrow "
+        "now audio windowing): ONE Arrow pass packs each waveform blob "
+        "and windows it executor-side (16-sample hops), emitting narrow "
         "(media_id, window, energy, zero-crossings) rows; the blob "
-        "never shuffles. Real codecs (mp3/flac) plug into DECODERS "
-        "beside the real image/wav decoders; raw float frames keep the "
-        "windowed arithmetic oracle-checkable. Energy sums run "
-        "SEQUENTIALLY (cumsum) to match the oracle's left fold "
-        "bit-for-bit before the 1e-4 round"
+        "never crosses back to the JVM, let alone shuffles. Real codecs "
+        "(mp3/flac) plug into DECODERS beside the real image/wav "
+        "decoders; raw float frames keep the windowed arithmetic "
+        "oracle-checkable. Energy sums run SEQUENTIALLY (cumsum) to "
+        "match the oracle's left fold bit-for-bit before the 1e-4 round"
     ),
 )
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed audio features over the waveform media table: per
     16-sample window, mean energy and zero-crossing count."""
-    media = media_audio_from_embeddings(spark, sf_dir)
-
-    out_schema = (
-        "media_id long, window_idx long, energy double, n_zero_cross long"
-    )
-
-    def window_feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            wave = np.stack(
-                [np.frombuffer(bytes(b), dtype="<f4") for b in pdf["content"]]
-            ).astype(np.float64)
-            n, total = wave.shape
-            win = wave.reshape(n, 4, 16)
-            # sequential (left-fold) sum via cumsum: bit-identical to the
-            # oracle's list_aggregate 'sum' fold, unlike pairwise np.sum
-            energy = np.cumsum(win * win, axis=2)[:, :, -1] / 16.0
-            zc = (win[:, :, :-1] * win[:, :, 1:] < 0).sum(axis=2)
-            ids = pdf["media_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "media_id": np.repeat(ids, 4),
-                    "window_idx": np.tile(np.arange(4), n),
-                    "energy": energy.reshape(-1),
-                    "n_zero_cross": zc.reshape(-1).astype("int64"),
-                }
-            )
-
-    feats = media.select("media_id", "content").mapInPandas(
-        window_feats, out_schema
+    feats = map_batches(
+        _embeddings(spark, sf_dir),
+        "media_id long, window_idx long, energy double, n_zero_cross long",
+        PACK_AUDIO,
+        audio_windows_batch,
     )
     return feats.select(
         "media_id",
-        F.col("window_idx").cast("bigint").alias("window_idx"),
+        "window_idx",
         (F.round(F.col("energy"), 4) + 0.0).alias("energy"),
-        F.col("n_zero_cross").cast("bigint").alias("n_zero_cross"),
+        "n_zero_cross",
     )
 
 

@@ -670,19 +670,55 @@ def q_knn_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_POWER_ITERS = 400
 
 
+def gram_partial(x: np.ndarray) -> tuple[int, list, list]:
+    """(n, column sums, row-major Gram matrix) of one (n, d) float64
+    batch. The Gram is numpy's own einsum loop, not ``x.T @ x``: the
+    matmul goes to BLAS, whose CPU-specific kernel (chosen at load
+    time) rounds the dot products differently, so q_pca_embed's
+    eigenvector literals, and its plan, would change from host to host
+    in their last bits (pinned in tests/test_properties.py)."""
+    g = np.einsum("ni,nj->ij", x, x)
+    return x.shape[0], x.sum(axis=0).tolist(), g.reshape(-1).tolist()
+
+
+def top_eigvec(parts: list[tuple[int, list, list]]) -> tuple[list[float], int]:
+    """Top eigenvector of the covariance assembled from gram_partial
+    outputs: deterministic power iteration (fixed all-ones start, fixed
+    iteration count, sign fixed by the largest-|component| entry) with
+    no BLAS call, so the result is bit-identical on every CPU.
+    Returns (eigvec, n)."""
+    n = sum(p[0] for p in parts)
+    d = len(parts[0][1])
+    # math.fsum is exactly rounded, so the per-cell totals are
+    # independent of partition count/layout/collect order — a plain
+    # float sum would perturb the eigenvector with the summation order
+    # and could flip floor-quantized projections at grid boundaries.
+    s = np.array([math.fsum(p[1][i] for p in parts) for i in range(d)])
+    g = np.array(
+        [math.fsum(p[2][i] for p in parts) for i in range(d * d)]
+    ).reshape(d, d)
+    mean = s / n
+    cov = g / n - np.outer(mean, mean)
+    v = np.ones(d)
+    for _ in range(PCA_POWER_ITERS):
+        v = (cov * v).sum(axis=1)
+        v = v / math.sqrt(math.fsum(v * v))
+    # deterministic sign: the largest-|component| entry is positive
+    pivot = int(np.argmax(np.abs(v)))
+    if v[pivot] < 0:
+        v = -v
+    return v.tolist(), int(n)
+
+
 def pca_top_eigvec(spark: SparkSession, sf_dir: str):
     """Top principal direction of the embedding table.
 
     Distributed part: per-partition partial Gram/sum/count via an
-    Arrow-batched mapInPandas (dense 64x64 linear algebra belongs to
-    BLAS — the q_dedup_embed precedent), collected as one ~4 KB row
-    per partition. Driver part: assemble the exact covariance and run
-    deterministic power iteration (fixed all-ones start, fixed
-    iteration count, sign fixed by the largest-|component| entry) —
-    the k x d driver-collect pattern q_kmeans already uses.
-    Returns (eigvec: list[float], n: int)."""
-    import numpy as np
-
+    Arrow-batched mapInPandas (gram_partial; ~4 KB per partition —
+    the q_dedup_embed precedent), collected as one row per partition.
+    Driver part: top_eigvec assembles the exact covariance and runs
+    the power iteration — the k x d driver-collect pattern q_kmeans
+    already uses. Returns (eigvec: list[float], n: int)."""
     from flexcalc_spark.tables import table_parallel
 
     e = table_parallel(spark, sf_dir, "embeddings").select("embedding")
@@ -694,37 +730,13 @@ def pca_top_eigvec(spark: SparkSession, sf_dir: str):
             if not len(pdf):
                 continue
             x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [x.shape[0]],
-                    "s": [x.sum(axis=0).tolist()],
-                    "g": [(x.T @ x).reshape(-1).tolist()],
-                }
-            )
+            n, s, g = gram_partial(x)
+            yield pd.DataFrame({"n": [n], "s": [s], "g": [g]})
 
     rows = e.mapInPandas(
         partials, "n long, s array<double>, g array<double>"
     ).collect()
-    n = sum(r.n for r in rows)
-    # math.fsum is exactly rounded, so the per-cell totals are
-    # independent of partition count/layout/collect order — a plain
-    # float sum would perturb the eigenvector with the summation order
-    # and could flip floor-quantized projections at grid boundaries.
-    s = np.array([math.fsum(r.s[i] for r in rows) for i in range(64)])
-    g = np.array(
-        [math.fsum(r.g[i] for r in rows) for i in range(64 * 64)]
-    ).reshape(64, 64)
-    mean = s / n
-    cov = g / n - np.outer(mean, mean)
-    v = np.ones(64)
-    for _ in range(PCA_POWER_ITERS):
-        v = cov @ v
-        v = v / np.linalg.norm(v)
-    # deterministic sign: the largest-|component| entry is positive
-    pivot = int(np.argmax(np.abs(v)))
-    if v[pivot] < 0:
-        v = -v
-    return v.tolist(), int(n)
+    return top_eigvec([(r.n, r.s, r.g) for r in rows])
 
 
 @register(
@@ -735,8 +747,8 @@ def pca_top_eigvec(spark: SparkSession, sf_dir: str):
     family="vectors",
     scale_notes=(
         "PCA whitening direction at corpus scale: per-partition "
-        "partial Gram matrices (Arrow mapInPandas -> BLAS, ~4 KB per "
-        "partition regardless of row count) collect to an exact "
+        "partial Gram matrices (Arrow mapInPandas -> numpy einsum, ~4 KB "
+        "per partition regardless of row count) collect to an exact "
         "covariance on the driver, deterministic power iteration "
         "finds the top direction (fixed start/iterations/sign), and "
         "the projection SCORING runs back in-engine with the "

@@ -5,7 +5,13 @@ Reference parity: flexdata/data.py::read_stack reads a directory of 2-D
 TIFF slices into a dense array (R1). Spark-native rendering:
 ``spark.read.format("binaryFile")`` — each file becomes a row
 (path, modificationTime, length, content: binary) — followed by a decode
-kernel over ``mapInPandas``.
+step.
+
+Every per-batch step (decode_batch, resize_batch, features_batch,
+frame_sample_batch) is a plain pandas -> pandas function;
+``map_batches(df, schema, *fns)`` runs a chain of them in ONE Arrow-
+batched ``mapInPandas``, so a key that packs, decodes and reduces
+crosses the JVM/Python boundary once per row, not once per step.
 
 Decoding dispatches through ``DECODERS``: ``raw`` (np.frombuffer
 reshape), grayscale ``tiff`` (pure-Python IFD parse — both byte
@@ -43,6 +49,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -1005,23 +1012,42 @@ def _bounded_tar_stream(data: bytes, cap: int, path: str) -> bytes:
     return b"".join(out)
 
 
+def map_batches(
+    df: DataFrame, schema, *fns: Callable[[pd.DataFrame], pd.DataFrame]
+) -> DataFrame:
+    """Run a chain of pandas -> pandas batch functions in ONE Arrow-batched
+    mapInPandas: each row crosses JVM -> Python -> JVM once however many
+    steps the chain has (one mapInPandas per step ships every row across
+    that boundary once per step). An empty batch ends its chain and is
+    not yielded, so no batch function needs an empty-batch guard."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for fn in fns:
+                if not len(pdf):
+                    break
+                pdf = fn(pdf)
+            if len(pdf):
+                yield pdf
+
+    return df.mapInPandas(run, schema)
+
+
+def decode_batch(pdf: pd.DataFrame, decoder: Callable, meta: dict) -> pd.DataFrame:
+    """(path, content) batch -> (path, h, w, dtype, px), one file per row."""
+    # zip over the columns (not iterrows — no per-row Series); the
+    # decoder call is per-file by nature (headers differ), but the raw
+    # path is a zero-copy passthrough
+    out = [(path, *decoder(bytes(content), meta))
+           for path, content in zip(pdf["path"], pdf["content"])]
+    return pd.DataFrame(out, columns=DECODED_SCHEMA.fieldNames())
+
+
 def decode_files(df: DataFrame, fmt: str, meta: dict) -> DataFrame:
     """Decode binary file rows into (path, h, w, dtype, px) via the
-    format's decoder — Arrow-batched mapInPandas, one file per row."""
-    decoder = DECODERS[fmt]
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            # zip over the columns (not iterrows — no per-row Series); the
-            # decoder call is per-file by nature (headers differ), but the
-            # raw path is a zero-copy passthrough
-            for path, content in zip(pdf["path"], pdf["content"]):
-                h, w, dtype, px = decoder(bytes(content), meta)
-                out.append((path, h, w, dtype, px))
-            yield pd.DataFrame(out, columns=[f.name for f in DECODED_SCHEMA.fields])
-
-    return df.mapInPandas(mapper, DECODED_SCHEMA)
+    format's decoder (decode_batch in one Arrow pass)."""
+    decode = partial(decode_batch, decoder=DECODERS[fmt], meta=meta)
+    return map_batches(df, DECODED_SCHEMA, decode)
 
 
 def read_stack(
@@ -1095,16 +1121,16 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _media_raw_groups(pdf: pd.DataFrame, corrupt_out: list | None = None):
+def _media_raw_groups(pdf: pd.DataFrame, corrupt: list):
     """Yield (positions, stack) per homogeneous decodable group of a media
     batch: rows grouped by (fmt, meta_json), decoded with ONE frombuffer
     over the concatenated blobs into an (n, h, w) stack. Non-raw formats
     (no decoder in this container) are skipped — callers pre-fill their
     rows with the NOT_DECODABLE marker. Malformed blobs (wrong raw
     length, truncated/invalid tiff/png/jpeg/wav) degrade PER ROW too:
-    their positions are appended to ``corrupt_out`` (when given) and the
-    rows skipped — at a 100 TB bulk pass one bit-flipped file must
-    quarantine one row, never fail the batch (ADVICE r9)."""
+    their positions are appended to ``corrupt`` and the rows skipped —
+    at a 100 TB bulk pass one bit-flipped file must quarantine one row,
+    never fail the batch (ADVICE r9)."""
     pdf = pdf.reset_index(drop=True)
     for (fmt, mjson), g in pdf.groupby(["fmt", "meta_json"], sort=False):
         meta = json.loads(mjson)
@@ -1119,12 +1145,8 @@ def _media_raw_groups(pdf: pd.DataFrame, corrupt_out: list | None = None):
                 if len(b) == expected:
                     good_pos.append(p)
                     good_blobs.append(b)
-                elif corrupt_out is not None:
-                    corrupt_out.append(p)
                 else:
-                    raise ValueError(
-                        f"raw blob length {len(b)} != {expected} for {meta}"
-                    )
+                    corrupt.append(p)
             if good_pos:
                 stack = np.frombuffer(
                     b"".join(good_blobs), dtype=dt
@@ -1150,10 +1172,7 @@ def _media_raw_groups(pdf: pd.DataFrame, corrupt_out: list | None = None):
                 # sweep-pinned); catching Exception stays as defense in
                 # depth — any non-"unsupported variant" failure is
                 # row-level corruption, not a reason to kill a batch
-                if corrupt_out is not None:
-                    corrupt_out.append(p)
-                    continue
-                raise
+                corrupt.append(p)
         by_shape: dict[tuple, tuple[list, list]] = {}
         for p, (h, w, dt, px) in zip(idxs, decoded):
             ps, pxs = by_shape.setdefault((h, w, dt), ([], []))
@@ -1176,98 +1195,99 @@ def _resize_half_stack(stack: np.ndarray) -> np.ndarray:
     ) / 4.0
 
 
-def media_resize(df: DataFrame) -> DataFrame:
-    """Resize pass: decode + 2x block-mean downsample per media row.
+def _media_means(pdf: pd.DataFrame, reduce: Callable) -> tuple:
+    """Per-row (h, w, repr(mean)) arrays of a media batch, one vectorized
+    ``reduce(stack) -> (h, w, means)`` per _media_raw_groups group; rows
+    with no decoder read (-1, -1, 'NOT_DECODABLE'), malformed blobs
+    (-1, -1, 'CORRUPT')."""
+    n = len(pdf)
+    h = np.full(n, -1, dtype=np.int64)
+    w = np.full(n, -1, dtype=np.int64)
+    mean = np.full(n, "NOT_DECODABLE", dtype=object)
+    corrupt: list = []
+    for pos, stack in _media_raw_groups(pdf, corrupt):
+        h[pos], w[pos], means = reduce(stack)
+        mean[pos] = [repr(float(m)) for m in means]
+    mean[corrupt] = "CORRUPT"
+    return h, w, mean
+
+
+def _resized(stack: np.ndarray) -> tuple:
+    small = _resize_half_stack(stack)
+    return small.shape[1], small.shape[2], small.mean(axis=(1, 2))
+
+
+def _thumb_and_mean(stack: np.ndarray) -> tuple:
+    # float64 mean: matches the oracle's double AVG to ulps
+    means = stack.astype(np.float64).mean(axis=(1, 2))
+    return stack.shape[1] // 2, stack.shape[2] // 2, means
+
+
+def resize_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Resize step: decode + 2x block-mean downsample per media row.
     Block-mean preserves the global mean exactly (in double math), which
     is what the oracle of q_multimodal_resize checks."""
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            rh = np.full(n, -1, dtype=np.int64)
-            rw = np.full(n, -1, dtype=np.int64)
-            rmean = np.full(n, "NOT_DECODABLE", dtype=object)
-            corrupt: list = []
-            # one frombuffer + one block-mean per homogeneous (fmt, meta)
-            # group — columnar numpy over the Arrow batch
-            for pos, stack in _media_raw_groups(pdf, corrupt_out=corrupt):
-                small = _resize_half_stack(stack)
-                rh[pos], rw[pos] = small.shape[1], small.shape[2]
-                means = small.mean(axis=(1, 2))
-                for j, p in enumerate(pos):
-                    rmean[p] = repr(float(means[j]))
-            for p in corrupt:
-                rmean[p] = "CORRUPT"
-            pdf = pdf.reset_index(drop=True)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "rh": rh, "rw": rw,
-                 "resized_mean": rmean}
-            )
-
-    return df.mapInPandas(mapper, RESIZED_SCHEMA)
+    rh, rw, rmean = _media_means(pdf, _resized)
+    return pd.DataFrame(
+        {"media_id": pdf["media_id"], "rh": rh, "rw": rw, "resized_mean": rmean}
+    )
 
 
-def media_frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
+def frame_sample_batch(pdf: pd.DataFrame, every_k: int = 2) -> pd.DataFrame:
     """Frame sampling for 'video' blobs: a raw video = n_frames
     concatenated raw frames (meta: n_frames, h, w, dtype); emit every
     k-th frame as its own row. Non-raw containers raise
     NotImplementedError explicitly — a still-image decoder succeeding
     on a single frame (tiff/png/jpeg are all real decoders now) must
     not be mistaken for video support and silently emit zero frames."""
+    out = []
+    for mid, fmt, mjson, content in zip(
+        pdf["media_id"], pdf["fmt"], pdf["meta_json"], pdf["content"]
+    ):
+        meta = json.loads(mjson)
+        if fmt != "raw":
+            raise NotImplementedError(
+                f"video container '{fmt}' not supported offline; only raw "
+                "concatenated frames decode (plug a codec library in "
+                "where available)"
+            )
+        n, h, w = int(meta["n_frames"]), int(meta["h"]), int(meta["w"])
+        frames = np.frombuffer(
+            bytes(content), dtype=np.dtype(meta["dtype"])
+        ).reshape(n, h, w)
+        for i in range(0, n, every_k):
+            out.append((mid, i, h, w, frames[i].tobytes()))
+    return pd.DataFrame(out, columns=FRAME_SCHEMA.fieldNames())
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, fmt, mjson, content in zip(
-                pdf["media_id"], pdf["fmt"], pdf["meta_json"], pdf["content"]
-            ):
-                meta = json.loads(mjson)
-                if fmt != "raw":
-                    raise NotImplementedError(
-                        f"video container '{fmt}' not supported offline; "
-                        "only raw concatenated frames decode (plug a "
-                        "codec library in where available)"
-                    )
-                n, h, w = int(meta["n_frames"]), int(meta["h"]), int(meta["w"])
-                dt = np.dtype(meta["dtype"])
-                frames = np.frombuffer(bytes(content), dtype=dt).reshape(n, h, w)
-                for i in range(0, n, every_k):
-                    out.append((mid, i, h, w, frames[i].tobytes()))
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
 
-    return df.mapInPandas(mapper, FRAME_SCHEMA)
+def features_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Feature-extraction step: decode (where a decoder exists), mean
+    intensity + 2x-downsampled thumbnail dims. Unsupported formats yield
+    'NOT_DECODABLE' and malformed blobs 'CORRUPT' rather than failing
+    the batch — the pipeline keeps flowing past stub modalities and
+    bit-flipped files alike."""
+    th, tw, mi = _media_means(pdf, _thumb_and_mean)
+    n_bytes = np.fromiter(
+        (len(c) for c in pdf["content"]), dtype=np.int64, count=len(pdf)
+    )
+    return pd.DataFrame(
+        {"media_id": pdf["media_id"], "n_bytes": n_bytes,
+         "mean_intensity": mi, "thumb_h": th, "thumb_w": tw}
+    )
+
+
+def media_resize(df: DataFrame) -> DataFrame:
+    """Resize pass over a media table (resize_batch in one Arrow pass)."""
+    return map_batches(df, RESIZED_SCHEMA, resize_batch)
+
+
+def media_frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
+    """Every k-th frame of each raw video row (frame_sample_batch)."""
+    return map_batches(
+        df, FRAME_SCHEMA, partial(frame_sample_batch, every_k=every_k)
+    )
 
 
 def media_features(df: DataFrame) -> DataFrame:
-    """Feature-extraction pass over a multimodal table: decode (where a
-    decoder exists), mean intensity + 2x-downsampled thumbnail dims.
-    Unsupported formats yield 'NOT_DECODABLE' and malformed blobs
-    'CORRUPT' rather than failing the batch — the pipeline keeps
-    flowing past stub modalities and bit-flipped files alike."""
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            n_bytes = np.fromiter(
-                (len(c) for c in pdf["content"]), dtype=np.int64, count=n
-            )
-            th = np.full(n, -1, dtype=np.int64)
-            tw = np.full(n, -1, dtype=np.int64)
-            mi = np.full(n, "NOT_DECODABLE", dtype=object)
-            corrupt: list = []
-            for pos, stack in _media_raw_groups(pdf, corrupt_out=corrupt):
-                h, w = stack.shape[1], stack.shape[2]
-                # float64 mean: matches the oracle's double AVG to ulps
-                means = stack.astype(np.float64).mean(axis=(1, 2))
-                th[pos], tw[pos] = h // 2, w // 2
-                for j, p in enumerate(pos):
-                    mi[p] = repr(float(means[j]))
-            for p in corrupt:
-                mi[p] = "CORRUPT"
-            pdf = pdf.reset_index(drop=True)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "n_bytes": n_bytes,
-                 "mean_intensity": mi, "thumb_h": th, "thumb_w": tw}
-            )
-
-    return df.mapInPandas(mapper, FEATURE_SCHEMA)
+    """Feature-extraction pass over a media table (features_batch)."""
+    return map_batches(df, FEATURE_SCHEMA, features_batch)

@@ -165,43 +165,28 @@ def jaccard_census(spark: SparkSession, sf_dir: str) -> dict:
 def containment_census(
     spark: SparkSession, sf_dir: str, gram: str = "char"
 ) -> dict:
-    """Candidate count of the q_dedup_containment candidate stage: the
+    """Candidate count of a containment key's candidate stage: the
     graded plan's own set_sim_candidates relation (rarest-first probe
-    prefix vs full index, size + PPJoin positional prunes).
+    prefix vs full index, size + PPJoin positional prunes) over the
+    key's own items.
 
-    gram='char': the graded key's char-5-grams. gram='word2': word
-    2-gram shingles — same thresholds, same machinery — the measured
-    scale LEVER: shingle probability is the product of two word
-    probabilities, so rarest-first prefixes are genuinely rare."""
+    gram='char': q_dedup_containment's char-5-grams. gram='word2':
+    q_dedup_containment_shingle's word 2-gram shingles — same
+    thresholds, same machinery — the measured scale LEVER: shingle
+    probability is the product of two word probabilities, so
+    rarest-first prefixes are genuinely rare."""
     from flexcalc_spark.operators.dedup import (
         CONTAIN_DEN,
-        CONTAIN_GRAM,
         CONTAIN_NUM,
+        _char_gram_items,
         _ranked_token_arrays,
+        _shingle_items,
         set_sim_candidates,
     )
     from flexcalc_spark.tables import table_parallel
 
     d = table_parallel(spark, sf_dir, "documents")
-    if gram == "char":
-        grams_expr = F.expr(
-            f"transform(sequence(1, length(text) - {CONTAIN_GRAM - 1}),"
-            f" i -> substring(text, i, {CONTAIN_GRAM}))"
-        )
-    else:
-        grams_expr = F.expr(
-            "transform(sequence(1, size(split(text, ' ')) - 1),"
-            " i -> concat(element_at(split(text, ' '), CAST(i AS INT)), ' ',"
-            " element_at(split(text, ' '), CAST(i + 1 AS INT))))"
-        )
-    items = (
-        d.filter(F.length("text") >= CONTAIN_GRAM)
-        .select(
-            "doc_id",
-            F.array_distinct(grams_expr).alias("items"),
-        )
-        .cache()
-    )
+    items = (_char_gram_items(d) if gram == "char" else _shingle_items(d)).cache()
     ranked = (
         _ranked_token_arrays(items)
         .repartition(spark.sparkContext.defaultParallelism)

@@ -88,3 +88,19 @@ def test_plans_match_manifest(spark):
                      if got.get(k) != want["plans"].get(k))
     detail = {k: {"manifest": want["plans"].get(k), "now": got.get(k)} for k in changed[:5]}
     assert not changed, f"plans differ from PLANS.json for {changed}: {detail}"
+
+
+def test_manifest_keys_cross_into_python_at_most_once():
+    """One Python crossing per key: every Python-eval node (MapInPandas,
+    ArrowEvalPython, ArrowAggregatePython, BatchEvalPythonUDTF,
+    FlatMapGroupsInPandas, ...) ships each of its rows JVM -> Python ->
+    JVM, so a key chains its Python steps inside one node
+    (binaryfiles.map_batches) instead of stacking nodes."""
+    with open(MANIFEST) as f:
+        plans = json.load(f)["plans"]
+    crossings = {
+        k: n for k, p in plans.items()
+        if (n := sum(c for t, c in p["nodes"].items()
+                     if "Python" in t or "InPandas" in t)) > 1
+    }
+    assert not crossings, f"keys with more than one Python-eval node: {crossings}"

@@ -3,6 +3,11 @@ kernels and sketch operators over generated inputs."""
 
 from __future__ import annotations
 
+import os
+import platform
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -512,6 +517,33 @@ def test_pca_matches_numpy_eigh(spark):
     assert len(out) == 10                      # labels 0..9
     assert all(r.var_q >= 0 for r in out)
     assert sum(r.n for r in out) == emb.shape[0]
+
+
+@pytest.mark.skipif(platform.machine() != "x86_64",
+                    reason="OPENBLAS_CORETYPE names x86_64 kernels")
+def test_pca_eigvec_independent_of_blas_kernel():
+    """q_pca_embed inlines its eigenvector as plan literals, so the vector
+    must not depend on the OpenBLAS kernel numpy picked for the CPU: the
+    key's helpers, run in one child per forced kernel over three batches
+    of the fixture embeddings, must agree bit for bit (``x.T @ x`` and
+    ``cov @ v`` give three different vectors here)."""
+    code = (
+        "import numpy as np, pyarrow.parquet as pq\n"
+        "from flexcalc_spark.operators.vectors import gram_partial, top_eigvec\n"
+        f"col = pq.read_table({SF_DIR + '/embeddings.parquet'!r}).column('embedding')\n"
+        "x = np.array(col.to_pylist(), dtype=np.float64)\n"
+        "print(repr(top_eigvec([gram_partial(b) for b in np.array_split(x, 3)])))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = {
+        core: subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True,
+            text=True, check=True,
+            env=dict(os.environ, OPENBLAS_CORETYPE=core),
+        ).stdout
+        for core in ("Prescott", "Sandybridge", "Haswell")
+    }
+    assert len(set(outs.values())) == 1, outs
 
 
 @given(
