@@ -46,11 +46,14 @@ def _ship_package(spark: SparkSession) -> None:
     reference (they live in an importable module, not __main__), so the
     worker processes must be able to ``import flexcalc_spark``. The
     driver process may import us from any cwd (sys.path manipulation in
-    __spark_entry__.py), but workers inherit neither that sys.path nor
-    the cwd — without this, every UDF key dies with
-    ModuleNotFoundError when the driver runs outside /root/repo.
-    sc.addPyFile ships a zip of the package and prepends it to every
-    worker's sys.path. Idempotent per SparkContext.
+    __spark_entry__.py), but workers do not inherit that sys.path — without
+    this, every UDF key dies with ModuleNotFoundError when the driver
+    runs outside the repo root. sc.addPyFile ships a zip of the package,
+    which every worker puts at sys.path[1], behind sys.path[0]: the
+    worker's cwd, which is the cwd the JVM started in. So a
+    ``flexcalc_spark/`` directory there shadows the zip (scripts/probe.py
+    starts each A/B arm's JVM in that arm's tree). Idempotent per
+    SparkContext.
     """
     sc = spark.sparkContext
     # applicationId is stable per context; id(sc._jsc) could be reused by
@@ -144,7 +147,7 @@ def register(
 # Rotation applied by scripts/rotate_grade_order.py from
 # CORRECTNESS history through r15 — stalest evidence
 # first, prior relative order preserved inside each tier.
-# Tiers at rotation time (never-graded/failed/changed: 28, r9: 14, r10: 32, r11: 37, r12: 38, r13: 42, r14: 29, r15: 36).
+# Tiers at rotation time (never-graded/failed/changed: 34, r9: 14, r10: 32, r11: 37, r12: 38, r13: 42, r14: 23, r15: 36).
 # Front of the next graded window: q_source_avro, q_source_jsonl_zst, q_dedup_containment_2stage, ...
 GRADE_ORDER: list[str] = [
     "q_source_avro", "q_source_jsonl_zst", "q_dedup_containment_2stage",
@@ -156,14 +159,16 @@ GRADE_ORDER: list[str] = [
     "q_split_dedup_safe", "q_dedup_neardup", "q_dedup_ngram",
     "q_dedup_clusters", "q_multimodal_frames", "q_multimodal_audio",
     "q_pca_embed", "q_multimodal_features", "q_multimodal_resize",
-    "q_join_asof", "q_join_salted", "q_agg_distinct", "q_agg_approx",
-    "q_agg_approx_percentile", "q_pivot", "q_unpivot", "q_histogram",
-    "q_agg_collect", "q_agg_minmax_by", "q_agg_global", "q_agg_groupby",
-    "q_agg_stats", "q_agg_percentile", "q_agg_weighted_centroid", "q_rollup",
-    "q_cube", "q_grouping_sets", "q_scan_project", "q_sketch_hll",
-    "q_sliding_distinct", "q_quality_entropy", "q_anomaly_zscore",
-    "q_retention", "q_session_stats", "q_cooccur", "q_agg_skew_distinct",
-    "q_join_bloom", "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
+    "q_source_json", "q_source_orc", "q_source_warc", "q_source_archive",
+    "q_source_nested", "q_dpp_prune", "q_join_asof", "q_join_salted",
+    "q_agg_distinct", "q_agg_approx", "q_agg_approx_percentile", "q_pivot",
+    "q_unpivot", "q_histogram", "q_agg_collect", "q_agg_minmax_by",
+    "q_agg_global", "q_agg_groupby", "q_agg_stats", "q_agg_percentile",
+    "q_agg_weighted_centroid", "q_rollup", "q_cube", "q_grouping_sets",
+    "q_scan_project", "q_sketch_hll", "q_sliding_distinct",
+    "q_quality_entropy", "q_anomaly_zscore", "q_retention",
+    "q_session_stats", "q_cooccur", "q_agg_skew_distinct", "q_join_bloom",
+    "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
     "q_table_checksum", "q_sql_tpch3", "q_ngram_lm", "q_data_audit",
     "q_zorder_layout", "q_inverted_index", "q_sql_tpch10", "q_session_paths",
     "q_skyline", "q_corr_matrix", "q_global_rank", "q_ab_test",
@@ -198,11 +203,10 @@ GRADE_ORDER: list[str] = [
     "q_vocab", "q_corpus_filter", "q_tfidf", "q_knn_cosine", "q_centroids",
     "q_kmeans", "q_dedup_exact", "q_dedup_embed", "q_stream_dedup",
     "q_stateful_sessions", "q_funnel", "q_rfm", "q_transitions",
-    "q_time_rollup", "q_concurrency", "q_source_json", "q_source_orc",
-    "q_rfm_approx", "q_source_warc", "q_source_archive", "q_source_nested",
+    "q_time_rollup", "q_concurrency", "q_rfm_approx",
     "q_trajectory_dtw_radius", "q_autocorr", "q_changepoint",
     "q_seasonal_decompose", "q_histogram_equidepth", "q_mad_outliers",
-    "q_histogram_equidepth_approx", "q_mad_outliers_approx", "q_dpp_prune",
+    "q_histogram_equidepth_approx", "q_mad_outliers_approx",
     "q_trajectory_sim", "q_decontaminate", "q_data_profile", "q_incr_mv",
     "q_dedup_minhash", "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw",
     "q_label_prop", "q_bfs_hops", "q_join_bucketed", "q_pack_sequences",

@@ -54,9 +54,10 @@ array→list, map→dict, union→branch value, record→dict.
 
 Scale: the Spark integration below is file-granular like every
 container format without a splittable-input plugin — ``binaryFile``
-scan, one container per task, Arrow-batched ``mapInPandas`` decode; the
-writer emits one container per DataFrame partition. At 100 TB the
-per-file unit is the right one anyway (Avro ingest directories are
+scan, one container decoded per ``binaryfiles.map_files`` call; the
+writer emits one container per DataFrame partition through
+``binaryfiles.write_parts``. At 100 TB the per-file unit is the right
+one anyway (Avro ingest directories are
 many-file by construction — producers roll files on time/size); a 4 MB
 pandas batch decodes in ~0.1 s, so decode parallelism = file count,
 identical posture to the TIFF/JPEG sources (binaryfiles.py). Blobs stay
@@ -68,6 +69,7 @@ from __future__ import annotations
 import json
 import struct
 import zlib
+from functools import partial
 
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
@@ -935,85 +937,41 @@ def _read_container_inner(
 
 
 def write_avro(df, out_dir: str, schema: object, codec: str = "deflate"):
-    """Distributed Avro sink: one container file per DataFrame partition.
+    """Distributed Avro sink: one ``part-NNNNN.avro`` container per
+    non-empty DataFrame partition, written on executors by
+    ``binaryfiles.write_parts`` (partition-id names, atomic rename);
+    returns the lazy (path, n_records) DataFrame — run an action on it
+    to force the write."""
+    from flexcalc_spark.sources.binaryfiles import write_parts
 
-    Runs entirely on executors via ``mapInPandas`` (the driver never
-    sees row data); returns a lazy (path, n_records) DataFrame — run an
-    action on it to force the write. Filenames are keyed by partition
-    id and written via attempt-unique temp + atomic rename
-    (``binaryfiles.atomic_write_bytes``), so re-executed AND
-    concurrently-speculated task attempts can never interleave bytes
-    in the final container. ``out_dir`` must be
-    on storage every executor can reach (local[\\*] /tmp here; a shared
-    or fused filesystem on a real cluster — same contract as every
-    POSIX-path sink in this repo).
-    """
-    import os
-
-    import pandas as pd
-
-    from flexcalc_spark.registry import _ship_package
-
-    _ship_package(df.sparkSession)
-    field_names = [f["name"] for f in schema["fields"]]
-
-    def writer(batches):
-        from pyspark import TaskContext
-
-        recs: list = []
-        for pdf in batches:
-            # NaN/NaT -> None so nullable (union) fields encode as null
-            clean = pdf[field_names].astype(object).where(pdf[field_names].notna(), None)
-            recs.extend(clean.to_dict("records"))
-        if not recs:
-            return
-        from flexcalc_spark.sources.binaryfiles import atomic_write_bytes
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}.avro")
-        atomic_write_bytes(path, write_container(schema, recs, codec=codec))
-        yield pd.DataFrame({"path": [path], "n_records": [len(recs)]})
-
-    return df.mapInPandas(writer, "path string, n_records bigint")
+    names = [f["name"] for f in schema["fields"]]
+    return write_parts(
+        df, out_dir, ".avro", partial(_records, names=names),
+        partial(write_container, schema, codec=codec),
+    )
 
 
-def read_avro(
-    spark,
-    path: str,
-    spark_schema: str,
-    columns: list | None = None,
-    reader_schema: object | None = None,
-):
-    """Distributed Avro source: ``binaryFile`` scan (one container per
-    row/task) + Arrow-batched ``mapInPandas`` decode. ``spark_schema``
-    is the explicit result schema (DDL string) — explicit like every
-    hot-path read in this repo; ``columns`` defaults to its field
-    names. ``reader_schema`` applies the spec's schema resolution per
-    file, so a directory of containers written under EVOLVING schemas
-    reads as one relation. Decode parallelism = file count, the same
-    posture as the TIFF/JPEG binary sources (binaryfiles.py scale
-    note)."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    from flexcalc_spark.registry import _ship_package
-
-    _ship_package(spark)
-    cols = columns or [f.name for f in StructType.fromDDL(spark_schema).fields]
-
-    def decoder(batches):
-        for pdf in batches:
-            for blob in pdf["content"]:
-                _, recs = read_container(
-                    bytes(blob), reader_schema=reader_schema
-                )
-                if recs:
-                    out = pd.DataFrame.from_records(recs)
-                    yield out[[c for c in cols]]
-
-    bf = spark.read.format("binaryFile").load(os.path.join(path, "*.avro"))
-    return bf.select("content").mapInPandas(decoder, spark_schema)
+def _records(pdf, names: list) -> list:
+    """One batch's ``names`` columns as record dicts; NaN/NaT -> None,
+    so nullable (union) fields encode as null."""
+    clean = pdf[names].astype(object)
+    return clean.where(pdf[names].notna(), None).to_dict("records")
 
 
+def read_avro(spark, path: str, spark_schema: str, reader_schema: object | None = None):
+    """Distributed Avro source: the directory's ``*.avro`` containers
+    through ``binaryfiles.map_files``, one container decoded per call.
+    ``spark_schema`` is the explicit result schema (DDL string), explicit
+    like every hot-path read in this repo. ``reader_schema`` applies the
+    spec's schema resolution per file, so a directory of containers
+    written under EVOLVING schemas reads as one relation. Decode
+    parallelism = file count."""
+    from flexcalc_spark.sources.binaryfiles import map_files, read_binary_dir
+
+    decode = partial(_container_records, reader_schema=reader_schema)
+    return map_files(read_binary_dir(spark, path, "*.avro"), spark_schema, decode)
+
+
+def _container_records(path: str, blob: bytes, reader_schema: object | None) -> list:
+    """One container file's records, for ``map_files``."""
+    return read_container(blob, reader_schema=reader_schema)[1]

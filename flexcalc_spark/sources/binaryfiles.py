@@ -13,6 +13,14 @@ frame_sample_batch) is a plain pandas -> pandas function;
 batched ``mapInPandas``, so a key that packs, decodes and reduces
 crosses the JVM/Python boundary once per row, not once per step.
 
+Container formats (Avro, WARC, tar, jsonl.zst) share one executor-side
+IO seam: ``write_parts(df, out_dir, suffix, rows, pack)`` writes one
+``part-NNNNN<suffix>`` file per non-empty partition through
+``atomic_write_bytes``, and ``map_files(df, schema, decode)`` decodes
+a binaryFile scan one file per call (``read_binary_dir`` /
+``stream_binary_dir``). A format module keeps only its codec, a row
+function and a pack function.
+
 Decoding dispatches through ``DECODERS``: ``raw`` (np.frombuffer
 reshape), grayscale ``tiff`` (pure-Python IFD parse — both byte
 orders, 8/16/32-bit int and 32/64-bit float; Compression none/LZW/
@@ -827,6 +835,88 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFram
     )
 
 
+def stream_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
+    """``read_binary_dir`` as a stream: each newly landed file of the
+    directory becomes a row of a micro-batch."""
+    return (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, length long,"
+            " content binary"
+        )
+        .option("pathGlobFilter", glob)
+        .load(path)
+    )
+
+
+def write_parts(
+    df: DataFrame,
+    out_dir: str,
+    suffix: str,
+    rows: Callable[[pd.DataFrame], list],
+    pack: Callable[[list], bytes],
+) -> DataFrame:
+    """Distributed container sink: one ``part-NNNNN<suffix>`` file per
+    non-empty partition of ``df``, holding ``pack`` of the records that
+    ``rows`` makes of the partition's batches.
+
+    Runs on executors (the driver never sees row data) and returns a lazy
+    (path, n_records) DataFrame: run an action on it to write. Names are
+    keyed by partition id and written through ``atomic_write_bytes``, so
+    a re-executed or speculated task attempt rewrites the same bytes
+    under the same name. ``out_dir`` must be on storage every executor
+    can reach."""
+    from flexcalc_spark.registry import _ship_package
+
+    _ship_package(df.sparkSession)
+
+    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        records = [r for pdf in batches for r in rows(pdf)]
+        if not records:
+            return
+        pid = TaskContext.get().partitionId()
+        path = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
+        atomic_write_bytes(path, pack(records))
+        yield pd.DataFrame({"path": [path], "n_records": [len(records)]})
+
+    return df.mapInPandas(write, "path string, n_records bigint")
+
+
+def map_files(
+    df: DataFrame, schema, decode: Callable[[str, bytes], list]
+) -> DataFrame:
+    """Binary file rows -> ``schema`` rows: ``decode(path, content)``
+    runs once per file and returns that file's rows (tuples in schema
+    order, or dicts keyed by field name). Rows are yielded per file, so
+    peak executor memory is one file's rows, never the Arrow batch's;
+    a file with no rows yields nothing. File count is the decode
+    parallelism."""
+    from flexcalc_spark.registry import _ship_package
+
+    _ship_package(df.sparkSession)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _file_frames(batches, decode, names)
+
+    return df.select("path", "content").mapInPandas(per_file, schema)
+
+
+def _file_frames(
+    batches: Iterator[pd.DataFrame], decode: Callable, names: list[str]
+) -> Iterator[pd.DataFrame]:
+    """map_files' worker side: one frame per file that decodes to rows."""
+    for pdf in batches:
+        for path, content in zip(pdf["path"], pdf["content"]):
+            rows = decode(path, bytes(content))
+            if len(rows):
+                yield pd.DataFrame(rows, columns=names)
+
+
 # archive members: (archive, member, content)
 MEMBER_SCHEMA = StructType(
     [
@@ -850,27 +940,11 @@ def expand_archives(df: DataFrame) -> DataFrame:
     Scale: member expansion is where the file-count explosion is
     CONTAINED — listing cost is per-archive, decode parallelism is
     per-archive-task, and members never hit the object-store namespace.
-    Corrupt archives raise ValueError per blob (degrade per row in
-    callers that need bulk behavior, the media_features pattern)."""
-    from flexcalc_spark.registry import _ship_package
-
-    _ship_package(df.sparkSession)
-
-    def expander(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                rows = _expand_blob(path, bytes(blob))
-                # yield PER ARCHIVE: peak executor memory is ~2x one
-                # archive's expansion (the pre-bounded decompressed
-                # tar stream + the member rows), never the whole Arrow
-                # batch's; a cap-enforcing streaming reader is the
-                # named upgrade if that 2x ever matters
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["archive", "member", "content"]
-                    )
-
-    return df.select("path", "content").mapInPandas(expander, MEMBER_SCHEMA)
+    Peak executor memory is ~2x one archive's expansion (the
+    pre-bounded decompressed tar stream + the member rows). Corrupt
+    archives raise ValueError per blob (degrade per row in callers that
+    need bulk behavior, the media_features pattern)."""
+    return map_files(df, MEMBER_SCHEMA, _expand_blob)
 
 
 def _expand_blob(path: str, data: bytes) -> list[tuple[str, str, bytes]]:

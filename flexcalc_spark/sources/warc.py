@@ -22,8 +22,8 @@ Pure-stdlib implementation of the PUBLIC format:
   deterministic, so the round-trip key can carry a full hash oracle.
 
 Scale: WARC files are the file-granular unit (CommonCrawl ships ~1 GB
-segments); the Spark read is ``binaryFile`` + Arrow-batched
-``mapInPandas``, one file per task — identical posture to the
+segments); the Spark read is a ``binaryFile`` scan parsed one file per
+``binaryfiles.map_files`` call — identical posture to the
 avro/TIFF/JPEG sources. Record-level gzip members mean a future
 splittable reader can seek to any member boundary; at this engine's
 file-per-task grain that optimization is unnecessary.
@@ -235,53 +235,27 @@ _RESPONSE_SCHEMA = (
 )
 
 
-def _response_parser(batches):
-    """mapInPandas kernel shared by the batch and streaming readers:
-    container blobs -> (uri, date, status, content_type, text) rows for
-    every ``response`` record; non-response records are skipped (the
-    CommonCrawl consumer contract). Yields PER BLOB so peak executor
-    memory is one segment's extracted text, not the Arrow batch's
-    (the expand_archives precedent)."""
-    import pandas as pd
-
-    for pdf in batches:
-        for blob in pdf["content"]:
-            rows = []
-            for rec in parse_warc(bytes(blob)):
-                if rec["type"] != "response":
-                    continue
-                status, hh, body = parse_http_response(rec["payload"])
-                rows.append(
-                    (
-                        rec["uri"],
-                        rec["date"],
-                        status,
-                        hh.get("content-type", ""),
-                        html_to_text(body),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["uri", "date", "status", "content_type",
-                             "text"],
-                )
+def _response_rows(path: str, blob: bytes) -> list[tuple]:
+    """One container -> (uri, date, status, content_type, text) per
+    ``response`` record; non-response records are skipped (the
+    CommonCrawl consumer contract)."""
+    rows = []
+    for rec in parse_warc(blob):
+        if rec["type"] != "response":
+            continue
+        status, hh, body = parse_http_response(rec["payload"])
+        rows.append((rec["uri"], rec["date"], status,
+                     hh.get("content-type", ""), html_to_text(body)))
+    return rows
 
 
 def read_warc(spark, path: str):
-    """Distributed WARC source: binaryFile scan + Arrow-batched parse.
+    """Distributed WARC source: the directory's ``*.warc.gz`` files
+    through ``binaryfiles.map_files``, one container parsed per call."""
+    from flexcalc_spark.sources.binaryfiles import map_files, read_binary_dir
 
-    Public entry point: ships the package to Python workers itself, so
-    a vanilla session outside the repo can call it directly (the
-    mapInPandas kernel is pickled by reference and must be importable
-    worker-side — final review finding)."""
-    import os
-
-    from flexcalc_spark.registry import _ship_package
-
-    _ship_package(spark)
-    bf = spark.read.format("binaryFile").load(os.path.join(path, "*.warc.gz"))
-    return bf.select("content").mapInPandas(_response_parser, _RESPONSE_SCHEMA)
+    bf = read_binary_dir(spark, path, "*.warc.gz")
+    return map_files(bf, _RESPONSE_SCHEMA, _response_rows)
 
 
 def stream_warc(spark, path: str):
@@ -291,69 +265,41 @@ def stream_warc(spark, path: str):
     how a continuously-arriving CommonCrawl-style feed lands in
     practice. Stateless parse, so append mode; equality with the batch
     reader is pinned in tests/test_streaming.py."""
-    from flexcalc_spark.registry import _ship_package
+    from flexcalc_spark.sources.binaryfiles import map_files, stream_binary_dir
 
-    _ship_package(spark)
-    bf = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long,"
-            " content binary"
-        )
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-    )
-    return bf.select("content").mapInPandas(_response_parser, _RESPONSE_SCHEMA)
+    bf = stream_binary_dir(spark, path, "*.warc.gz")
+    return map_files(bf, _RESPONSE_SCHEMA, _response_rows)
+
+
+def _document_record(row) -> bytes:
+    """One documents row (doc_id, text, lang, source) as an HTML-wrapped
+    HTTP response record whose Target-URI carries (source, lang, doc_id).
+    The head carries no text content (it would leak into the extraction
+    census); the script tag holds a bare '<' so the subtree-drop path is
+    load-bearing. NULL text writes an empty body: the record still
+    exists (the oracle's COUNT sees it) and contributes 0 chars (its SUM
+    skips the NULL) — str(None) would add 4."""
+    text = "" if row.text is None else str(row.text)
+    body = (
+        "<html><head><title></title>"
+        "<script>var x = 1 < 2;</script></head><body><p>"
+        + _html.escape(text)
+        + "</p></body></html>"
+    ).encode()
+    uri = f"http://corpus.local/{row.source}/{row.lang}/{int(row.doc_id)}"
+    return build_record("response", http_response(body), uri=uri)
 
 
 def write_warc_partitions(df, out_dir: str):
     """Distributed WARC sink for the documents shape (doc_id, text,
-    lang, source): one ``part-NNNNN.warc.gz`` per partition, each doc
-    an HTML-wrapped HTTP response record whose Target-URI carries
-    (source, lang, doc_id). Same executor-side/partition-id-idempotent
-    contract as avrocodec.write_avro. Lazy — run an action on the
-    returned (path, n_records) DataFrame."""
-    import os
+    lang, source): one ``part-NNNNN.warc.gz`` of ``_document_record``s
+    per non-empty partition, written on executors by
+    ``binaryfiles.write_parts``. Lazy — run an action on the returned
+    (path, n_records) DataFrame."""
+    from flexcalc_spark.sources.binaryfiles import write_parts
 
-    import pandas as pd
-
-    from flexcalc_spark.registry import _ship_package
-
-    _ship_package(df.sparkSession)
-
-    def writer(batches):
-        from pyspark import TaskContext
-
-        recs: list[bytes] = []
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                # head carries no text content (it would leak into the
-                # extraction census); the script tag holds a bare '<'
-                # so the subtree-drop path is load-bearing. NULL text
-                # writes an empty body: the record still exists (the
-                # oracle's COUNT sees it) and contributes 0 chars (its
-                # SUM skips the NULL) — str(None) would add 4.
-                text = "" if row.text is None else str(row.text)
-                body = (
-                    "<html><head><title></title>"
-                    "<script>var x = 1 < 2;</script></head><body><p>"
-                    + _html.escape(text)
-                    + "</p></body></html>"
-                ).encode()
-                uri = (
-                    f"http://corpus.local/{row.source}/{row.lang}/"
-                    f"{int(row.doc_id)}"
-                )
-                recs.append(
-                    build_record("response", http_response(body), uri=uri)
-                )
-        if not recs:
-            return
-        from flexcalc_spark.sources.binaryfiles import atomic_write_bytes
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
-        atomic_write_bytes(path, write_warc(recs, compress=True))
-        yield pd.DataFrame({"path": [path], "n_records": [len(recs)]})
-
-    return df.mapInPandas(writer, "path string, n_records bigint")
+    return write_parts(
+        df, out_dir, ".warc.gz",
+        lambda pdf: [_document_record(r) for r in pdf.itertuples(index=False)],
+        write_warc,
+    )

@@ -859,17 +859,15 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the foreachBatch idempotent-upsert stream, then read the
     sink state back: per-(day, event_type) counts and grid sums equal
     to the batch aggregate."""
-    import os
     import shutil
 
     from flexcalc_spark.operators.sinks import _scratch_dir
 
-    # pid-fingerprinted scratch: atexit cleanup + stale-sibling sweep
+    # pid-suffixed scratch: atexit cleanup + stale-sibling sweep
     # (the hand-rolled hash(sf_dir) path leaked one dir per process —
     # str hash is seed-salted, so no later run ever reused it; r13
     # review, the r8/r10 scratch-litter class)
-    out = _scratch_dir("stream_upsert", sf_dir,
-                       fingerprint=str(os.getpid()))
+    out = _scratch_dir("stream_upsert", sf_dir)
     # Dynamic partition overwrite only rewrites day partitions present
     # in the final batch — stale day dirs from an aborted SAME-process
     # run against an older fixture generation would survive and union

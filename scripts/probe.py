@@ -28,7 +28,9 @@
         the test suite, whose tests/test_plan_manifest.py diffs it.
 
 No key means every registered key. Timing sessions are perfbench's:
-local[nproc] with 2 x nproc shuffle partitions. Calls run end to end,
+local[nproc] with 2 x nproc shuffle partitions. A child starts its JVM in
+its tree's directory (Python workers import from that cwd ahead of the
+shipped package) and runs WARM_KEY and one Python worker per core first. Calls run end to end,
 construction included, into the noop sink; the cache is cleared between
 calls. A run over many keys starts a fresh child process per 90 keys: one
 JVM running a whole sweep accumulated enough state to die of a broadcast
@@ -67,6 +69,10 @@ PLANS_PATH = os.path.join(ROOT, "PLANS.json")
 
 
 def _session(tree: str, cpus: int = NPROC, shuffle: int = 2 * NPROC):
+    # Python workers import from their cwd (sys.path[0]) before the
+    # shipped package zip, and they inherit the JVM's cwd: start it in
+    # ``tree`` so each A/B arm's workers run that arm's code
+    os.chdir(tree)
     sys.path.insert(0, tree)
     from flexcalc_spark import registry
     from flexcalc_spark.session import get_session
@@ -80,6 +86,15 @@ def _noop(spark, fn, sf_dir: str):
     df = fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     return df
+
+
+def _warm(spark, queries, sf_dir: str) -> None:
+    """First calls of a session: WARM_KEY warms the JVM and codegen, and
+    one identity mapInPandas over NPROC partitions starts a Python worker
+    per core, so no timed Arrow key pays a worker start."""
+    _noop(spark, queries[WARM_KEY], sf_dir)
+    warm = spark.range(NPROC, numPartitions=NPROC).mapInPandas(lambda it: it, "id long")
+    warm.write.format("noop").mode("overwrite").save()
 
 
 def _settle(spark) -> None:
@@ -104,7 +119,7 @@ def _traced(keys: list[str], sf_dir: str, runs: int) -> dict:
     try:
         spark, queries = _session(ROOT)
         tracer.attach(spark)
-        _noop(spark, queries[WARM_KEY], sf_dir)
+        _warm(spark, queries, sf_dir)
         out = {}
         for key in keys:
             walls, heaps, best = [], [], None
@@ -143,7 +158,7 @@ def _timed(keys: list[str], sf_dir: str, tree: str) -> dict:
         spark, queries = _session(tree)
         from flexcalc_spark.plans import plan_text
 
-        _noop(spark, queries[WARM_KEY], sf_dir)
+        _warm(spark, queries, sf_dir)
         out = {}
         for key in keys:
             times = []

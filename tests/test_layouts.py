@@ -103,9 +103,7 @@ def test_compacted_sink_writes_exactly_four_files(spark):
     from flexcalc_spark.operators.sinks import _scratch_dir
 
     registry.QUERIES["q_sink_compacted"](spark, SF_DIR).collect()
-    out = _scratch_dir(
-        "sink_compact", SF_DIR, fingerprint=str(_os.getpid())
-    )
+    out = _scratch_dir("sink_compact", SF_DIR)
     parts = _glob.glob(_os.path.join(out, "part-*.parquet"))
     assert len(parts) == 4, parts
 

@@ -6,6 +6,7 @@ import ast
 import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -46,3 +47,38 @@ def test_no_script_puts_a_literal_path_on_sys_path():
                             for a in node.args)):
                 bad.append(f"{os.path.basename(path)}:{node.lineno}")
     assert not bad, f"literal sys.path entries: {bad}"
+
+
+def test_ab_arm_workers_run_their_own_tree(tmp_path):
+    """An A/B arm's Python workers import the arm's tree, not the cwd
+    the probe was started from: workers put their cwd (the JVM's) ahead
+    of the shipped package zip, so _session starts the JVM in its tree."""
+    tree = tmp_path / "tree"
+    shutil.copytree(os.path.join(ROOT, "flexcalc_spark"), tree / "flexcalc_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import probe
+
+spark, _ = probe._session(sys.argv[2], cpus=1, shuffle=1)
+
+
+def where(batches):
+    import flexcalc_spark
+    import pandas as pd
+
+    for _ in batches:
+        yield pd.DataFrame({"f": [flexcalc_spark.__file__]})
+
+
+print("WORKER", spark.range(1, numPartitions=1).mapInPandas(where, "f string").first()[0])
+probe.stop_spark(spark)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code, os.path.join(ROOT, "scripts"), str(tree)],
+        cwd=ROOT, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    worker_file = [ln for ln in out.stdout.splitlines() if ln.startswith("WORKER ")][-1]
+    assert worker_file.split(" ", 1)[1].startswith(str(tree)), worker_file

@@ -716,9 +716,7 @@ def test_stream_upsert_scratch_registered_for_cleanup(spark):
     # calling it would be vacuous (r13 review) — the KEY must have
     # registered the path
     registered = set(sinks._SCRATCH)
-    expect = sinks._scratch_dir(
-        "stream_upsert", SF_DIR, fingerprint=str(os.getpid())
-    )
+    expect = sinks._scratch_dir("stream_upsert", SF_DIR)
     assert expect in registered
     assert os.path.isdir(expect)
 
