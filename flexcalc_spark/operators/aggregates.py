@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flexcalc_spark.registry import register
-from flexcalc_spark.tables import table, register_views
+from flexcalc_spark.registry import register, register_sql
+from flexcalc_spark.tables import table
 
 GRID = 1_000_000.0       # 1e-6 integer grid for order-independent sums
 
@@ -405,17 +405,14 @@ _GROUPING_SETS_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_grouping_sets",
-    oracle=_GROUPING_SETS_SQL,
+    _GROUPING_SETS_SQL,
     family="aggregates",
     scale_notes="explicit grouping sets; same ANSI text runs on both engines",
+    doc="""GROUPING SETS via spark.sql over registered temp views — the SQL
+    text is engine-portable and doubles as its own oracle.""",
 )
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS via spark.sql over registered temp views — the SQL
-    text is engine-portable and doubles as its own oracle."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GROUPING_SETS_SQL)
 
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]

@@ -1,26 +1,33 @@
-"""Pure-SQL API surface: the engine's spark.sql entry point.
+"""Pure-SQL API surface: all 22 TPC-H shapes and WITH RECURSIVE through
+``spark.sql``.
 
-Every other graded key drives the DataFrame API; this key proves the
-SQL-first path a migrating user actually types — register the fixture
-scans as temp views, run one ANSI query text through ``spark.sql`` —
-lands on the same Catalyst plan (broadcast dims, partial aggregates,
-TakeOrderedAndProject) as its DataFrame twin would. Shape is TPC-H
-Q3-like: top-10 urgent orders by discounted revenue.
+Every other graded key drives the DataFrame API; these keys prove the
+SQL-first path a migrating user actually types lands on the plans the
+DataFrame twins get (broadcast dimensions, partial aggregates,
+decorrelated subqueries, TakeOrderedAndProject). Each query is one ANSI
+text over the fixture tables, adapted to the fixture schema (partsupp is
+derived from lineitem; commit/receipt-date and phone predicates map to
+ship-lag and nation-key codes; each text's comment names the swap).
 
-Determinism: revenue rides the 1e-6 integer-grid sum (registry rules)
-written directly in the SQL text; LIMIT carries the full tiebreak.
+Most keys register through ``registry.register_sql``: the text is the
+DuckDB oracle and, with ``{mat}`` as ``AS``, Spark's query over temp
+views of the tables it names. Q4, Q12 and Q21 compare dates in exact
+epoch µs, which DuckDB derives with ``epoch_us`` and Spark with
+``tables.epoch_us_of``, so they run their Spark text through
+``_epoch_us_sql``; Q4's Spark text is a hand-reduced form of its
+oracle's EXISTS.
 
-Reference cite (mount empty, SURVEY §0): the public flexcalc toolbox
-has no SQL surface — this key exists because a Spark-native engine
-exposes one for free and users expect it.
+Determinism: money sums ride the 1e-6 integer grid (registry rules)
+written directly in the SQL text, ratios divide exact grid sums, and
+every LIMIT carries the full tiebreak.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flexcalc_spark.registry import register
-from flexcalc_spark.tables import table
+from flexcalc_spark.registry import register, register_sql, run_sql
+from flexcalc_spark.tables import epoch_us_of, table
 
 _REVENUE = (
     "ROUND(CAST(SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount))"
@@ -28,9 +35,9 @@ _REVENUE = (
 )
 
 
-@register(
+register_sql(
     "q_sql_tpch3",
-    oracle=f"""
+    f"""
         SELECT l_orderkey,
                {_REVENUE} AS revenue,
                o_orderpriority
@@ -50,32 +57,17 @@ _REVENUE = (
         "penalty. The revenue sum is the 1e-6 integer grid written "
         "directly in SQL — the determinism rules are dialect-portable"
     ),
+    doc="""TPC-H Q3-like top-10 urgent-order revenue, expressed purely as
+    SQL text over registered temp views.""",
 )
-def q_sql_tpch3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-like top-10 urgent-order revenue, expressed purely as
-    SQL text over registered temp views."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(
-        f"""
-        SELECT l_orderkey,
-               {_REVENUE} AS revenue,
-               o_orderpriority
-        FROM v_orders JOIN v_lineitem ON l_orderkey = o_orderkey
-        WHERE o_orderpriority = '1-URGENT'
-        GROUP BY l_orderkey, o_orderpriority
-        ORDER BY revenue DESC, l_orderkey
-        LIMIT 10
-        """
-    )
 
 
 _Q10_BODY = f"""
     SELECT c_custkey, c_name, n_name,
            {_REVENUE} AS revenue
-    FROM {{c}} JOIN {{o}} ON c_custkey = o_custkey
-         JOIN {{l}} ON l_orderkey = o_orderkey
-         JOIN {{n}} ON c_nationkey = n_nationkey
+    FROM customer JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON l_orderkey = o_orderkey
+         JOIN nation ON c_nationkey = n_nationkey
     WHERE l_returnflag = 'R'
     GROUP BY c_custkey, c_name, n_name
     ORDER BY revenue DESC, c_custkey
@@ -83,11 +75,9 @@ _Q10_BODY = f"""
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch10",
-    oracle=_Q10_BODY.format(
-        c="customer", o="orders", l="lineitem", n="nation"
-    ),
+    _Q10_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q10 shape through the SQL surface: a 4-table join where "
@@ -101,40 +91,29 @@ _Q10_BODY = f"""
         "revenue grid-sum and the LIMIT tiebreak are written directly "
         "in the SQL text (dialect-portable determinism)"
     ),
+    doc="""TPC-H Q10-like: top-20 customers by returned-item revenue with
+    nation attached, expressed purely as SQL text.""",
 )
-def q_sql_tpch10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10-like: top-20 customers by returned-item revenue with
-    nation attached, expressed purely as SQL text."""
-    for t in ("customer", "orders", "lineitem", "nation"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q10_BODY.format(
-            c="v_customer", o="v_orders", l="v_lineitem", n="v_nation"
-        )
-    )
 
 
 _Q5_BODY = f"""
     SELECT n_name,
            {_REVENUE} AS revenue
-    FROM {{c}} JOIN {{o}} ON c_custkey = o_custkey
-         JOIN {{l}} ON l_orderkey = o_orderkey
-         JOIN {{s}} ON l_suppkey = s_suppkey
+    FROM customer JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON l_orderkey = o_orderkey
+         JOIN supplier ON l_suppkey = s_suppkey
                    AND c_nationkey = s_nationkey
-         JOIN {{n}} ON s_nationkey = n_nationkey
-         JOIN {{r}} ON n_regionkey = r_regionkey
+         JOIN nation ON s_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
     WHERE r_name = 'ASIA'
     GROUP BY n_name
     ORDER BY revenue DESC, n_name
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch5",
-    oracle=_Q5_BODY.format(
-        c="customer", o="orders", l="lineitem", s="supplier",
-        n="nation", r="region",
-    ),
+    _Q5_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q5 shape (local-supplier volume): a 6-table join where "
@@ -146,19 +125,9 @@ _Q5_BODY = f"""
         "text, no hand-scheduling. Grid-sum revenue, ordered output "
         "with name tiebreak (5 rows, no LIMIT needed)"
     ),
+    doc="""TPC-H Q5-like: revenue by nation for ASIA-region customers whose
+    order lines ship from a same-nation supplier; pure SQL text.""",
 )
-def q_sql_tpch5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-like: revenue by nation for ASIA-region customers whose
-    order lines ship from a same-nation supplier; pure SQL text."""
-    for t in ("customer", "orders", "lineitem", "supplier", "nation",
-              "region"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q5_BODY.format(
-            c="v_customer", o="v_orders", l="v_lineitem", s="v_supplier",
-            n="v_nation", r="v_region",
-        )
-    )
 
 
 # Seed = supplier 1's node id in the part-supplier bipartite encoding
@@ -166,10 +135,10 @@ def q_sql_tpch5(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RECURSIVE_BODY = """
     WITH RECURSIVE edges AS (
         SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM {l})
+        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
         UNION ALL
         SELECT l_suppkey * 2 + 1 AS src, l_partkey * 2 AS dst
-        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM {l})
+        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
     ),
     reach AS (
         SELECT CAST(3 AS BIGINT) AS node, 0 AS depth
@@ -183,9 +152,9 @@ _RECURSIVE_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_recursive",
-    oracle=_RECURSIVE_BODY.format(l="lineitem"),
+    _RECURSIVE_BODY,
     family="sql",
     scale_notes=(
         "recursive CTE (Spark 4 WITH RECURSIVE) running 2-hop BFS over "
@@ -199,22 +168,19 @@ _RECURSIVE_BODY = """
         "frontier dedup per level and checkpointing; this key certifies "
         "the recursive SQL execution itself against DuckDB"
     ),
+    doc="""2-hop BFS reachability (min hops per node) from supplier 1 via
+    WITH RECURSIVE over the bipartite lineitem graph; pure SQL text.""",
 )
-def q_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-hop BFS reachability (min hops per node) from supplier 1 via
-    WITH RECURSIVE over the bipartite lineitem graph; pure SQL text."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(_RECURSIVE_BODY.format(l="v_lineitem"))
 
 
 _Q18_BODY = f"""
     SELECT c_custkey, o_orderkey,
            {_REVENUE.replace("l_extendedprice * (1 - l_discount)",
                              "l_quantity")} AS total_qty
-    FROM {{c}} JOIN {{o}} ON c_custkey = o_custkey
-         JOIN {{l}} ON l_orderkey = o_orderkey
+    FROM customer JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON l_orderkey = o_orderkey
     WHERE o_orderkey IN (
-        SELECT l_orderkey FROM {{l}}
+        SELECT l_orderkey FROM lineitem
         GROUP BY l_orderkey
         HAVING SUM(CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT))
                > 150000000
@@ -225,9 +191,9 @@ _Q18_BODY = f"""
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch18",
-    oracle=_Q18_BODY.format(c="customer", o="orders", l="lineitem"),
+    _Q18_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q18 shape (large-volume orders): the IN subquery with a "
@@ -238,15 +204,9 @@ _Q18_BODY = f"""
         "compares the same 1e-6 grid BIGINT both engines compute; "
         "TakeOrderedAndProject caps output at 20 with a full tiebreak"
     ),
+    doc="""TPC-H Q18-like: top-20 (customer, order) by total quantity among
+    orders whose total quantity exceeds 150; pure SQL text.""",
 )
-def q_sql_tpch18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18-like: top-20 (customer, order) by total quantity among
-    orders whose total quantity exceeds 150; pure SQL text."""
-    for t in ("customer", "orders", "lineitem"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q18_BODY.format(c="v_customer", o="v_orders", l="v_lineitem")
-    )
 
 
 _Q7_BODY = f"""
@@ -256,11 +216,11 @@ _Q7_BODY = f"""
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS BIGINT) AS l_year,
                l_extendedprice, l_discount
-        FROM {{s}} JOIN {{l}} ON s_suppkey = l_suppkey
-             JOIN {{o}} ON o_orderkey = l_orderkey
-             JOIN {{c}} ON c_custkey = o_custkey
-             JOIN {{n}} n1 ON s_nationkey = n1.n_nationkey
-             JOIN {{n}} n2 ON c_nationkey = n2.n_nationkey
+        FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
+             JOIN orders ON o_orderkey = l_orderkey
+             JOIN customer ON c_custkey = o_custkey
+             JOIN nation n1 ON s_nationkey = n1.n_nationkey
+             JOIN nation n2 ON c_nationkey = n2.n_nationkey
         WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
            OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
     ) shipping
@@ -269,11 +229,9 @@ _Q7_BODY = f"""
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch7",
-    oracle=_Q7_BODY.format(
-        s="supplier", l="lineitem", o="orders", c="customer", n="nation"
-    ),
+    _Q7_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q7 (volume shipping) through the SQL surface: the "
@@ -287,18 +245,9 @@ _Q7_BODY = f"""
         "aggregating then filtering nations — never arises because "
         "Catalyst pushes the disjunction through the joins"
     ),
+    doc="""TPC-H Q7-like bilateral shipping volume between NATION_1 and
+    NATION_2 by year, expressed purely as SQL text.""",
 )
-def q_sql_tpch7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7-like bilateral shipping volume between NATION_1 and
-    NATION_2 by year, expressed purely as SQL text."""
-    for t in ("supplier", "lineitem", "orders", "customer", "nation"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q7_BODY.format(
-            s="v_supplier", l="v_lineitem", o="v_orders",
-            c="v_customer", n="v_nation",
-        )
-    )
 
 
 # Promo share per month: both engines derive the ratio from the SAME
@@ -315,15 +264,15 @@ _Q14_BODY = """
              / SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount))
                               * 1000000.0 + 0.5) AS BIGINT))
                AS promo_share
-    FROM {l} JOIN {p} ON p_partkey = l_partkey
+    FROM lineitem JOIN part ON p_partkey = l_partkey
     GROUP BY l_year, l_month
     ORDER BY l_year, l_month
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch14",
-    oracle=_Q14_BODY.format(l="lineitem", p="part"),
+    _Q14_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q14 (promo effect) through the SQL surface: one "
@@ -336,19 +285,15 @@ _Q14_BODY = """
         "rides the same shuffle as any rollup; the part join is the "
         "only fact-side movement"
     ),
+    doc="""TPC-H Q14-like monthly PROMO revenue share, expressed purely as
+    SQL text.""",
 )
-def q_sql_tpch14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14-like monthly PROMO revenue share, expressed purely as
-    SQL text."""
-    for t in ("lineitem", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q14_BODY.format(l="v_lineitem", p="v_part"))
 
 
 _Q19_BODY = f"""
     SELECT {_REVENUE} AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM {{l}} JOIN {{p}} ON p_partkey = l_partkey
+    FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 1 AND 20)
        OR (p_brand = 'Brand#23' AND p_size BETWEEN 10 AND 30
@@ -358,9 +303,9 @@ _Q19_BODY = f"""
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch19",
-    oracle=_Q19_BODY.format(l="lineitem", p="part"),
+    _Q19_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q19 (discounted revenue, the OR-of-ANDs predicate "
@@ -373,13 +318,9 @@ _Q19_BODY = f"""
         "plan). Single-row grid-sum output; the count column keeps "
         "the row non-degenerate for hashing"
     ),
+    doc="""TPC-H Q19-like OR-of-ANDs discounted revenue, expressed purely
+    as SQL text.""",
 )
-def q_sql_tpch19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19-like OR-of-ANDs discounted revenue, expressed purely
-    as SQL text."""
-    for t in ("lineitem", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q19_BODY.format(l="v_lineitem", p="v_part"))
 
 
 # Market share: numerator and denominator are exact grid sums, so the
@@ -394,13 +335,13 @@ _Q8_BODY = """
                CAST(FLOOR((l_extendedprice * (1 - l_discount))
                           * 1000000.0 + 0.5) AS BIGINT) AS rev_g,
                n2.n_name AS nation
-        FROM {p} JOIN {l} ON p_partkey = l_partkey
-             JOIN {s} ON s_suppkey = l_suppkey
-             JOIN {o} ON l_orderkey = o_orderkey
-             JOIN {c} ON o_custkey = c_custkey
-             JOIN {n} n1 ON c_nationkey = n1.n_nationkey
-             JOIN {r} ON n1.n_regionkey = r_regionkey
-             JOIN {n} n2 ON s_nationkey = n2.n_nationkey
+        FROM part JOIN lineitem ON p_partkey = l_partkey
+             JOIN supplier ON s_suppkey = l_suppkey
+             JOIN orders ON l_orderkey = o_orderkey
+             JOIN customer ON o_custkey = c_custkey
+             JOIN nation n1 ON c_nationkey = n1.n_nationkey
+             JOIN region ON n1.n_regionkey = r_regionkey
+             JOIN nation n2 ON s_nationkey = n2.n_nationkey
         WHERE r_name = 'ASIA' AND p_type = 'PROMO'
     ) all_nations
     GROUP BY o_year
@@ -408,12 +349,9 @@ _Q8_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch8",
-    oracle=_Q8_BODY.format(
-        p="part", l="lineitem", s="supplier", o="orders",
-        c="customer", n="nation", r="region",
-    ),
+    _Q8_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q8 (national market share) through the SQL surface — "
@@ -427,19 +365,22 @@ _Q8_BODY = """
         "engines — the published query's decimal expression survives "
         "without decimal types"
     ),
+    doc="""TPC-H Q8-like yearly PROMO market share of NATION_1 suppliers
+    within ASIA-region customers, purely as SQL text.""",
 )
-def q_sql_tpch8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8-like yearly PROMO market share of NATION_1 suppliers
-    within ASIA-region customers, purely as SQL text."""
-    for t in ("part", "lineitem", "supplier", "orders", "customer",
-              "nation", "region"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q8_BODY.format(
-            p="v_part", l="v_lineitem", s="v_supplier", o="v_orders",
-            c="v_customer", n="v_nation", r="v_region",
-        )
-    )
+
+
+def _epoch_us_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run ``text`` over the views ``orders_us`` and ``lineitem_us``:
+    orders and lineitem with their dates as exact epoch µs (``o_us``,
+    ``l_us``; the oracle's ``epoch_us``, schema-dispatched because the
+    fixture's timestamp precision has changed before), plus the fixture
+    tables the text names."""
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    o.withColumn("o_us", epoch_us_of(o, "o_orderdate")).createOrReplaceTempView("orders_us")
+    li.withColumn("l_us", epoch_us_of(li, "l_shipdate")).createOrReplaceTempView("lineitem_us")
+    return run_sql(spark, sf_dir, text)
 
 
 # Q4's commit/receipt columns don't exist in the fixture; the adapted
@@ -448,9 +389,9 @@ def q_sql_tpch8(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q4_BODY = """
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS order_count
-    FROM {o}
+    FROM orders
     WHERE EXISTS (
-        SELECT 1 FROM {l}
+        SELECT 1 FROM lineitem
         WHERE l_orderkey = o_orderkey
           AND epoch_us(l_shipdate) - epoch_us(o_orderdate)
               > CAST(90 AS BIGINT) * 86400000000
@@ -462,7 +403,7 @@ _Q4_BODY = """
 
 @register(
     "q_sql_tpch4",
-    oracle=_Q4_BODY.format(o="orders", l="lineitem"),
+    oracle=_Q4_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q4 shape (order priority checking): the oracle keeps "
@@ -484,27 +425,20 @@ def q_sql_tpch4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4-like late-shipment order census by priority; the
     uniform-threshold EXISTS is hand-reduced to a per-order MAX
     aggregate + equi join (oracle stays the EXISTS formulation)."""
-    from flexcalc_spark.tables import epoch_us_of
-
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    # epoch-µs derivation must match DuckDB's epoch_us on BOTH columns
-    # (schema-dispatched: fixture timestamp precision has changed before)
-    o.withColumn("o_us", epoch_us_of(o, "o_orderdate")).createOrReplaceTempView("v_orders")
-    li.withColumn("l_us", epoch_us_of(li, "l_shipdate")).createOrReplaceTempView("v_lineitem")
-    return spark.sql(
+    return _epoch_us_sql(
+        spark, sf_dir,
         """
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS order_count
-        FROM v_orders
+        FROM orders_us
         JOIN (
             SELECT l_orderkey, MAX(l_us) AS max_l_us
-            FROM v_lineitem GROUP BY l_orderkey
+            FROM lineitem_us GROUP BY l_orderkey
         ) latest ON latest.l_orderkey = o_orderkey
         WHERE max_l_us - o_us > CAST(90 AS BIGINT) * 86400000000
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
     )
 
 
@@ -517,7 +451,7 @@ _Q13_BODY = """
     FROM (
         SELECT c_custkey,
                CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-        FROM {c} LEFT JOIN {o}
+        FROM customer LEFT JOIN orders
           ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         GROUP BY c_custkey
     ) c_orders
@@ -526,9 +460,9 @@ _Q13_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch13",
-    oracle=_Q13_BODY.format(c="customer", o="orders"),
+    _Q13_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q13 (customer order-count distribution) through the SQL "
@@ -541,13 +475,9 @@ _Q13_BODY = """
         "over a dimension-sized table; the second grouping is "
         "|distinct counts| rows. Full ORDER BY tiebreak, no LIMIT"
     ),
+    doc="""TPC-H Q13-like distribution of non-urgent order counts per
+    customer (c_count, custdist), purely as SQL text.""",
 )
-def q_sql_tpch13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13-like distribution of non-urgent order counts per
-    customer (c_count, custdist), purely as SQL text."""
-    for t in ("customer", "orders"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q13_BODY.format(c="v_customer", o="v_orders"))
 
 
 # Q21's commit/receipt columns don't exist in the fixture; "supplier
@@ -557,13 +487,13 @@ def q_sql_tpch13(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q21_DAYS = 90
 
 
-def _q21_text(l: str, o: str, s: str, n: str, lus: str, ous: str) -> str:
-    late = f"{{a}}.{lus} - {{b}}.{ous} > CAST({_Q21_DAYS} AS BIGINT) * 86400000000"
+def _q21_text(l: str, o: str) -> str:
+    late = f"{{a}}.l_us - {{b}}.o_us > CAST({_Q21_DAYS} AS BIGINT) * 86400000000"
     return f"""
     SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-    FROM {s} JOIN {l} l1 ON s_suppkey = l1.l_suppkey
+    FROM supplier JOIN {l} l1 ON s_suppkey = l1.l_suppkey
          JOIN {o} o1 ON o1.o_orderkey = l1.l_orderkey
-         JOIN {n} ON s_nationkey = n_nationkey
+         JOIN nation ON s_nationkey = n_nationkey
     WHERE o1.o_orderstatus = 'F'
       AND {late.format(a="l1", b="o1")}
       AND n_name = 'NATION_1'
@@ -591,7 +521,6 @@ def _q21_text(l: str, o: str, s: str, n: str, lus: str, ous: str) -> str:
           " epoch_us(l_shipdate) AS l_us FROM lineitem)",
         o="(SELECT o_orderkey, o_orderstatus,"
           " epoch_us(o_orderdate) AS o_us FROM orders)",
-        s="supplier", n="nation", lus="l_us", ous="o_us",
     ),
     family="sql",
     scale_notes=(
@@ -611,23 +540,8 @@ def q_sql_tpch21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21-like: per-supplier census of F-status orders where
     this supplier's line shipped >90 days late and no other supplier's
     line did (s_name, numwait); pure SQL text."""
-    from flexcalc_spark.tables import epoch_us_of
-
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    li.withColumn(
-        "l_us", epoch_us_of(li, "l_shipdate")
-    ).createOrReplaceTempView("v_lineitem21")
-    o.withColumn(
-        "o_us", epoch_us_of(o, "o_orderdate")
-    ).createOrReplaceTempView("v_orders21")
-    table(spark, sf_dir, "supplier").createOrReplaceTempView("v_supplier")
-    table(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
-    return spark.sql(
-        _q21_text(
-            l="v_lineitem21", o="v_orders21",
-            s="v_supplier", n="v_nation", lus="l_us", ous="o_us",
-        )
+    return _epoch_us_sql(
+        spark, sf_dir, _q21_text(l="lineitem_us", o="orders_us")
     )
 
 
@@ -639,13 +553,13 @@ def q_sql_tpch21(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no cross-engine FP-average boundary, no integer-division dialect gap.
 _Q22_BODY = """
     WITH sel {mat} (
-        SELECT substring(CAST(c_nationkey + 100 AS {vc}), 2, 2)
+        SELECT substring(CAST(c_nationkey + 100 AS STRING), 2, 2)
                    AS cntrycode,
                c_acctbal, c_custkey,
                CAST(FLOOR(c_acctbal * 1000000.0 + 0.5) AS BIGINT)
                    AS bal_g
-        FROM {c}
-        WHERE substring(CAST(c_nationkey + 100 AS {vc}), 2, 2)
+        FROM customer
+        WHERE substring(CAST(c_nationkey + 100 AS STRING), 2, 2)
               IN ('01','03','05','07','09','11','13')
     )
     SELECT cntrycode,
@@ -656,17 +570,16 @@ _Q22_BODY = """
     WHERE bal_g * (SELECT COUNT(*) FROM sel WHERE c_acctbal > 0.0)
           > (SELECT SUM(bal_g) FROM sel WHERE c_acctbal > 0.0)
       AND c_custkey NOT IN (
-          SELECT o_custkey FROM {o} WHERE o_orderpriority = '1-URGENT'
+          SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       )
     GROUP BY cntrycode
     ORDER BY cntrycode
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch22",
-    oracle=_Q22_BODY.format(c="customer", o="orders", vc="VARCHAR",
-                            mat="AS MATERIALIZED"),
+    _Q22_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q22 (global sales opportunity) through the SQL surface: "
@@ -681,24 +594,11 @@ _Q22_BODY = """
         "boundary customers between engines. One customer-table scan "
         "+ one urgent-orders projection; output is 7 code groups"
     ),
-)
-def q_sql_tpch22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22-like: above-average-balance customers with no urgent
+    doc="""TPC-H Q22-like: above-average-balance customers with no urgent
     orders, grouped by derived country code (cntrycode, numcust,
-    totacctbal); pure SQL text."""
-    for t in ("customer", "orders"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q22_BODY.format(c="v_customer", o="v_orders", vc="STRING", mat="AS")
-    )
+    totacctbal); pure SQL text.""",
+)
 
-
-# ---------------------------------------------------------------------
-# Round-7 completion of the TPC-H shape set: with Q1/Q2/Q6/Q9/Q11/Q12/
-# Q15/Q16/Q17/Q20 below, all 22 published planner shapes are graded
-# through the SQL surface (adapted to the fixture schema: partsupp is
-# derived from lineitem; commit/receipt-date and phone predicates map
-# to ship-lag and nation-key codes — each docstring names the swap).
 
 _Q1_BODY = """
     SELECT l_returnflag, l_linestatus,
@@ -725,7 +625,7 @@ _Q1_BODY = """
                    AS ch_g,
                CAST(FLOOR(l_discount * 1000000.0 + 0.5) AS BIGINT)
                    AS dc_g
-        FROM {l}
+        FROM lineitem
         WHERE year(l_shipdate) <= 1998
     ) g
     GROUP BY l_returnflag, l_linestatus
@@ -733,9 +633,9 @@ _Q1_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch1",
-    oracle=_Q1_BODY.format(l="lineitem"),
+    _Q1_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q1 (pricing summary — THE scan-aggregate benchmark) "
@@ -748,38 +648,34 @@ _Q1_BODY = """
         "output rows from any number of input splits, shuffle bytes "
         "= |partitions| x 4 rows"
     ),
+    doc="""TPC-H Q1-like pricing summary (grid-exact sums and averages
+    per returnflag/linestatus), purely as SQL text.""",
 )
-def q_sql_tpch1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-like pricing summary (grid-exact sums and averages
-    per returnflag/linestatus), purely as SQL text."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(_Q1_BODY.format(l="v_lineitem"))
 
 
-# Derived part-supplier cost table (the fixture has no partsupp):
-# min observed unit price per (part, supplier), on the 1e-6 grid.
-_Q2_PS = """
-    SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-           MIN(CAST(FLOOR(l_extendedprice / l_quantity * 1000000.0
-                          + 0.5) AS BIGINT)) AS cost_g
-    FROM {l} GROUP BY l_partkey, l_suppkey
-"""
-
+# ps is a derived part-supplier cost table (the fixture has no
+# partsupp): min observed unit price per (part, supplier), on the 1e-6
+# grid.
 _Q2_BODY = """
-    WITH ps {mat} ({ps})
+    WITH ps {mat} (
+        SELECT l_partkey AS partkey, l_suppkey AS suppkey,
+               MIN(CAST(FLOOR(l_extendedprice / l_quantity * 1000000.0
+                              + 0.5) AS BIGINT)) AS cost_g
+        FROM lineitem GROUP BY l_partkey, l_suppkey
+    )
     SELECT s_acctbal, s_name, n_name,
            CAST(p_partkey AS BIGINT) AS p_partkey, cost_g
-    FROM {p}
+    FROM part
     JOIN ps ON p_partkey = ps.partkey
-    JOIN {s} ON s_suppkey = ps.suppkey
-    JOIN {n} ON s_nationkey = n_nationkey
-    JOIN {r} ON n_regionkey = r_regionkey
+    JOIN supplier ON s_suppkey = ps.suppkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
     WHERE p_size = 15 AND p_type = 'LARGE' AND r_name = 'EUROPE'
       AND cost_g = (
           SELECT MIN(ps2.cost_g) FROM ps ps2
-          JOIN {s} s2 ON s2.s_suppkey = ps2.suppkey
-          JOIN {n} n2 ON s2.s_nationkey = n2.n_nationkey
-          JOIN {r} r2 ON n2.n_regionkey = r2.r_regionkey
+          JOIN supplier s2 ON s2.s_suppkey = ps2.suppkey
+          JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+          JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
           WHERE ps2.partkey = p_partkey AND r2.r_name = 'EUROPE'
       )
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
@@ -787,12 +683,9 @@ _Q2_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch2",
-    oracle=_Q2_BODY.format(
-        ps=_Q2_PS.format(l="lineitem"), p="part", s="supplier",
-        n="nation", r="region", mat="AS MATERIALIZED",
-    ),
+    _Q2_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q2 (minimum-cost supplier) through the SQL surface: "
@@ -807,18 +700,9 @@ _Q2_BODY = """
         "carries the full published tiebreak (acctbal DESC, nation, "
         "supplier, part)"
     ),
+    doc="""TPC-H Q2-like: suppliers offering the region-minimum derived
+    cost for size-15 LARGE parts in EUROPE; pure SQL text.""",
 )
-def q_sql_tpch2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2-like: suppliers offering the region-minimum derived
-    cost for size-15 LARGE parts in EUROPE; pure SQL text."""
-    for t in ("lineitem", "part", "supplier", "nation", "region"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q2_BODY.format(
-            ps=_Q2_PS.format(l="v_lineitem"), p="v_part", s="v_supplier",
-            n="v_nation", r="v_region", mat="AS",
-        )
-    )
 
 
 _Q6_BODY = """
@@ -826,16 +710,16 @@ _Q6_BODY = """
                        * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
                  / 1000000.0, 4) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM {l}
+    FROM lineitem
     WHERE year(l_shipdate) = 1998
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch6",
-    oracle=_Q6_BODY.format(l="lineitem"),
+    _Q6_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q6 (forecasting revenue change) through the SQL "
@@ -846,12 +730,9 @@ _Q6_BODY = """
         "canary for scan-side predicate evaluation staying inside "
         "whole-stage codegen"
     ),
+    doc="""TPC-H Q6-like single-row filtered revenue aggregate, purely as
+    SQL text.""",
 )
-def q_sql_tpch6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-like single-row filtered revenue aggregate, purely as
-    SQL text."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(_Q6_BODY.format(l="v_lineitem"))
 
 
 # Profit proxy: the fixture has no supplycost, so cost is rendered as
@@ -867,11 +748,11 @@ _Q9_BODY = """
                CAST(FLOOR((l_extendedprice * (1 - l_discount)
                            - p_retailprice * l_quantity * 0.1)
                           * 1000000.0 + 0.5) AS BIGINT) AS amount_g
-        FROM {l}
-        JOIN {p} ON p_partkey = l_partkey
-        JOIN {s} ON s_suppkey = l_suppkey
-        JOIN {o} ON o_orderkey = l_orderkey
-        JOIN {n} ON s_nationkey = n_nationkey
+        FROM lineitem
+        JOIN part ON p_partkey = l_partkey
+        JOIN supplier ON s_suppkey = l_suppkey
+        JOIN orders ON o_orderkey = l_orderkey
+        JOIN nation ON s_nationkey = n_nationkey
         WHERE p_name LIKE '%red%'
     ) profit
     GROUP BY nation, o_year
@@ -879,11 +760,9 @@ _Q9_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch9",
-    oracle=_Q9_BODY.format(
-        l="lineitem", p="part", s="supplier", o="orders", n="nation"
-    ),
+    _Q9_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q9 (product-type profit) through the SQL surface: the "
@@ -896,18 +775,9 @@ _Q9_BODY = """
         "cross-engine exact. The widest profit rollup in the suite: "
         "|nations| x |years| output rows"
     ),
+    doc="""TPC-H Q9-like profit by nation and order year over red parts
+    (derived cost = 10% of retail x quantity); pure SQL text.""",
 )
-def q_sql_tpch9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9-like profit by nation and order year over red parts
-    (derived cost = 10% of retail x quantity); pure SQL text."""
-    for t in ("lineitem", "part", "supplier", "orders", "nation"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q9_BODY.format(
-            l="v_lineitem", p="v_part", s="v_supplier", o="v_orders",
-            n="v_nation",
-        )
-    )
 
 
 _Q11_BODY = """
@@ -915,9 +785,9 @@ _Q11_BODY = """
         SELECT n_name,
                SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount)
                               * 1000000.0 + 0.5) AS BIGINT)) AS v
-        FROM {l}
-        JOIN {s} ON s_suppkey = l_suppkey
-        JOIN {n} ON s_nationkey = n_nationkey
+        FROM lineitem
+        JOIN supplier ON s_suppkey = l_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
         GROUP BY n_name
     )
     SELECT n_name, ROUND(CAST(v AS DOUBLE) / 1000000.0, 4) AS value
@@ -927,9 +797,9 @@ _Q11_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch11",
-    oracle=_Q11_BODY.format(l="lineitem", s="supplier", n="nation"),
+    _Q11_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q11 (important stock identification) through the SQL "
@@ -943,15 +813,9 @@ _Q11_BODY = """
         "boundary. Value sums are map-side combined; output is "
         "|nations| rows"
     ),
+    doc="""TPC-H Q11-like: nations holding > 5% of total supplied value
+    (n_name, value); pure SQL text.""",
 )
-def q_sql_tpch11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11-like: nations holding > 5% of total supplied value
-    (n_name, value); pure SQL text."""
-    for t in ("lineitem", "supplier", "nation"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q11_BODY.format(l="v_lineitem", s="v_supplier", n="v_nation")
-    )
 
 
 # Q12's shipmode/commitdate columns don't exist; the adapted census
@@ -966,7 +830,7 @@ _Q12_BODY = """
                          THEN 1 ELSE 0 END) AS BIGINT)
                AS low_line_count
     FROM {o} JOIN {l} ON o_orderkey = l_orderkey
-    WHERE {lus} - {ous} > CAST(30 AS BIGINT) * 86400000000
+    WHERE l_us - o_us > CAST(30 AS BIGINT) * 86400000000
     GROUP BY l_returnflag
     ORDER BY l_returnflag
 """
@@ -979,7 +843,6 @@ _Q12_BODY = """
           " epoch_us(o_orderdate) AS o_us FROM orders)",
         l="(SELECT l_orderkey, l_returnflag,"
           " epoch_us(l_shipdate) AS l_us FROM lineitem)",
-        lus="l_us", ous="o_us",
     ),
     family="sql",
     scale_notes=(
@@ -995,20 +858,8 @@ _Q12_BODY = """
 def q_sql_tpch12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12-like high/low-priority line census among late-shipped
     lines, grouped by return flag; pure SQL text."""
-    from flexcalc_spark.tables import epoch_us_of
-
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    o.withColumn(
-        "o_us", epoch_us_of(o, "o_orderdate")
-    ).createOrReplaceTempView("v_orders12")
-    li.withColumn(
-        "l_us", epoch_us_of(li, "l_shipdate")
-    ).createOrReplaceTempView("v_lineitem12")
-    return spark.sql(
-        _Q12_BODY.format(
-            o="v_orders12", l="v_lineitem12", lus="l_us", ous="o_us"
-        )
+    return _epoch_us_sql(
+        spark, sf_dir, _Q12_BODY.format(o="orders_us", l="lineitem_us")
     )
 
 
@@ -1017,23 +868,22 @@ _Q15_BODY = """
         SELECT l_suppkey,
                SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount)
                               * 1000000.0 + 0.5) AS BIGINT)) AS total_g
-        FROM {l}
+        FROM lineitem
         WHERE year(l_shipdate) = 1996 AND quarter(l_shipdate) = 1
         GROUP BY l_suppkey
     )
     SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey, s_name,
            ROUND(CAST(total_g AS DOUBLE) / 1000000.0, 4)
                AS total_revenue
-    FROM {s} JOIN rev ON s_suppkey = l_suppkey
+    FROM supplier JOIN rev ON s_suppkey = l_suppkey
     WHERE total_g = (SELECT MAX(total_g) FROM rev)
     ORDER BY s_suppkey
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch15",
-    oracle=_Q15_BODY.format(l="lineitem", s="supplier",
-                            mat="AS MATERIALIZED"),
+    _Q15_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q15 (top supplier) through the SQL surface: the "
@@ -1045,13 +895,9 @@ _Q15_BODY = """
         "the max all emit (the published semantics) so no arbitrary "
         "pick exists. Supplier-sized work after one fact aggregation"
     ),
+    doc="""TPC-H Q15-like: supplier(s) with the maximum quarterly revenue
+    (s_suppkey, s_name, total_revenue); pure SQL text.""",
 )
-def q_sql_tpch15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15-like: supplier(s) with the maximum quarterly revenue
-    (s_suppkey, s_name, total_revenue); pure SQL text."""
-    for t in ("lineitem", "supplier"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q15_BODY.format(l="v_lineitem", s="v_supplier", mat="AS"))
 
 
 # Q16's "customer complaints" supplier exclusion maps to negative
@@ -1060,22 +906,22 @@ _Q16_BODY = """
     SELECT p_brand, CAST(p_size AS BIGINT) AS p_size,
            CAST(COUNT(DISTINCT suppkey) AS BIGINT) AS supplier_cnt
     FROM (SELECT DISTINCT l_partkey AS partkey, l_suppkey AS suppkey
-          FROM {l}) ps
-    JOIN {p} ON p_partkey = partkey
+          FROM lineitem) ps
+    JOIN part ON p_partkey = partkey
     WHERE p_brand <> 'Brand#5'
       AND p_type <> 'PROMO'
       AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
       AND suppkey NOT IN (
-          SELECT s_suppkey FROM {s} WHERE s_acctbal < 0.0
+          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0
       )
     GROUP BY p_brand, p_size
     ORDER BY supplier_cnt DESC, p_brand, p_size
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch16",
-    oracle=_Q16_BODY.format(l="lineitem", p="part", s="supplier"),
+    _Q16_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q16 (parts/supplier relationship) through the SQL "
@@ -1087,15 +933,9 @@ _Q16_BODY = """
         "The derived pair table replaces partsupp — same "
         "|E|-bounded census shape"
     ),
+    doc="""TPC-H Q16-like supplier-count census per (brand, size) with
+    negative-balance suppliers excluded; pure SQL text.""",
 )
-def q_sql_tpch16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16-like supplier-count census per (brand, size) with
-    negative-balance suppliers excluded; pure SQL text."""
-    for t in ("lineitem", "part", "supplier"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q16_BODY.format(l="v_lineitem", p="v_part", s="v_supplier")
-    )
 
 
 # The 0.2-of-average cut is exact integer cross-multiplication:
@@ -1107,12 +947,12 @@ _Q17_BODY = """
                    AS qty_g,
                CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5) AS BIGINT)
                    AS ep_g
-        FROM {l}
+        FROM lineitem
     )
     SELECT ROUND(CAST(SUM(ep_g) AS DOUBLE) / 1000000.0 / 7.0, 4)
                AS avg_yearly,
            CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM li JOIN {p} ON p_partkey = l_partkey
+    FROM li JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#23' AND p_type = 'MEDIUM'
       AND 5 * qty_g * (SELECT COUNT(*) FROM li l2
                        WHERE l2.l_partkey = li.l_partkey)
@@ -1121,10 +961,9 @@ _Q17_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch17",
-    oracle=_Q17_BODY.format(l="lineitem", p="part",
-                            mat="AS MATERIALIZED"),
+    _Q17_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q17 (small-quantity-order revenue) through the SQL "
@@ -1137,13 +976,9 @@ _Q17_BODY = """
         "no engine's division order can flip a boundary row. Brand/"
         "type filters broadcast-prune before the fact joins"
     ),
+    doc="""TPC-H Q17-like: revenue from Brand#23 MEDIUM lines below 20% of
+    their part's average quantity (avg_yearly, n_lines); SQL text.""",
 )
-def q_sql_tpch17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17-like: revenue from Brand#23 MEDIUM lines below 20% of
-    their part's average quantity (avg_yearly, n_lines); SQL text."""
-    for t in ("lineitem", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q17_BODY.format(l="v_lineitem", p="v_part", mat="AS"))
 
 
 # Q20's availqty dominance comparison renders scale-stably as
@@ -1155,14 +990,14 @@ _Q20_BODY = """
         SELECT l_partkey AS partkey, l_suppkey AS suppkey,
                SUM(CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT))
                    AS q
-        FROM {l} GROUP BY l_partkey, l_suppkey
+        FROM lineitem GROUP BY l_partkey, l_suppkey
     )
     SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey, s_name, n_name
-    FROM {s} JOIN {n} ON s_nationkey = n_nationkey
+    FROM supplier JOIN nation ON s_nationkey = n_nationkey
     WHERE s_suppkey IN (
         SELECT suppkey FROM ps
         WHERE partkey IN (
-            SELECT p_partkey FROM {p} WHERE p_name LIKE 'red%'
+            SELECT p_partkey FROM part WHERE p_name LIKE 'red%'
         )
           AND q * (SELECT COUNT(*) FROM ps c
                    WHERE c.partkey = ps.partkey)
@@ -1173,10 +1008,9 @@ _Q20_BODY = """
 """
 
 
-@register(
+register_sql(
     "q_sql_tpch20",
-    oracle=_Q20_BODY.format(l="lineitem", s="supplier", n="nation",
-                            p="part", mat="AS MATERIALIZED"),
+    _Q20_BODY,
     family="sql",
     scale_notes=(
         "TPC-H Q20 (potential part promotion) through the SQL "
@@ -1191,16 +1025,7 @@ _Q20_BODY = """
         "derives from lineitem with one map-side-combined "
         "aggregation, replacing partsupp"
     ),
-)
-def q_sql_tpch20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20-like: suppliers shipping the majority of some red
+    doc="""TPC-H Q20-like: suppliers shipping the majority of some red
     part's volume vs the average supplier (s_suppkey, s_name,
-    n_name); pure SQL text."""
-    for t in ("lineitem", "supplier", "nation", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        _Q20_BODY.format(
-            l="v_lineitem", s="v_supplier", n="v_nation", p="v_part",
-            mat="AS",
-        )
-    )
+    n_name); pure SQL text.""",
+)

@@ -12,9 +12,9 @@ surface and, more importantly, exercise **Catalyst's subquery planning**:
 - an IN subquery plans as a left-semi join.
 
 Each query is written as ONE ANSI SQL text that runs verbatim on both
-Spark and DuckDB (the string is its own oracle), so the subquery
-*semantics* — not a hand-decorrelated DataFrame translation — are what
-is graded.
+Spark and DuckDB (the string is its own oracle, registered through
+``registry.register_sql``), so the subquery *semantics* — not a
+hand-decorrelated DataFrame translation — are what is graded.
 
 Determinism: threshold comparisons ("above average") are evaluated in
 exact DECIMAL arithmetic rearranged to avoid division (x > sum/cnt is
@@ -28,10 +28,7 @@ surface (SURVEY §2.2) exercised at the SQL layer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from flexcalc_spark.registry import register
-from flexcalc_spark.tables import register_views
+from flexcalc_spark.registry import register_sql
 
 _SCALAR_SQL = """
     SELECT o_orderkey, o_totalprice
@@ -41,16 +38,13 @@ _SCALAR_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_subquery_scalar",
-    oracle=_SCALAR_SQL,
+    _SCALAR_SQL,
     family="subqueries",
     scale_notes="uncorrelated scalar subquery: Spark runs the aggregate as its own tiny job and inlines the result — the big scan happens once, with the threshold available as a literal; the x*cnt > sum rearrangement keeps the comparison in exact decimals (no FP boundary flips at any scale)",
+    doc="Orders priced above the global average (scalar subquery in WHERE).",
 )
-def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders priced above the global average (scalar subquery in WHERE)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SCALAR_SQL)
 
 
 _CORRELATED_SQL = """
@@ -66,17 +60,14 @@ _CORRELATED_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_subquery_correlated",
-    oracle=_CORRELATED_SQL,
+    _CORRELATED_SQL,
     family="subqueries",
     scale_notes="TPC-H Q17 shape: Catalyst decorrelates each correlated scalar subquery into a per-partkey aggregate joined back on l_partkey — one shuffle keyed on partkey instead of a per-row re-scan (which would be O(n²) reads at 100 TB); qty*5*cnt < sum keeps the 20%%-of-average threshold exact in decimals",
+    doc="""Lineitems below 20% of their part's average quantity (correlated
+    scalar subqueries, decorrelated by the optimizer).""",
 )
-def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lineitems below 20% of their part's average quantity (correlated
-    scalar subqueries, decorrelated by the optimizer)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CORRELATED_SQL)
 
 
 _IN_SQL = """
@@ -88,14 +79,11 @@ _IN_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_subquery_in",
-    oracle=_IN_SQL,
+    _IN_SQL,
     family="subqueries",
     scale_notes="IN subquery plans as a left-semi join on orderkey: the subquery side is filtered before the shuffle and the probe never multiplies rows — at 100 TB the l_quantity filter pushes into the lineitem scan so the semi-join build side is a fraction of the table",
+    doc="""Order counts by status among orders having a high-quantity lineitem
+    (IN subquery → left-semi join).""",
 )
-def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order counts by status among orders having a high-quantity lineitem
-    (IN subquery → left-semi join)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_IN_SQL)

@@ -298,11 +298,6 @@ def events_with_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register temp views for spark.sql-based queries (grouping sets &c)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
-
 def materialize_local(df: DataFrame) -> DataFrame:
     """Rebuild a SMALL result as a local DataFrame, so keys that read
     back from scratch dirs / memory sinks do not return lazy reads of

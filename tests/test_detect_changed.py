@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
 
 from detect_changed_keys import (  # noqa: E402
     _functions_of,
-    _module_fdefs,
+    _module_defs,
     _reachable,
 )
 
@@ -33,7 +33,7 @@ def test_reachable_traces_kernels_passed_by_reference():
         "    g = spark.groupBy('u')\n"
         "    return g.applyInPandas(_kernel, schema='x long')\n"
     )
-    fdefs = _module_fdefs(ast.parse(src))
+    fdefs = _module_defs(ast.parse(src))
     assert _reachable(fdefs, "q_plan") == {"q_plan", "_kernel"}
 
 
@@ -44,7 +44,7 @@ def test_reachable_traces_calls_transitively():
         "def q_plan(spark, sf):\n    return _b()\n"
         "def _unrelated():\n    return _c()\n"
     )
-    fdefs = _module_fdefs(ast.parse(src))
+    fdefs = _module_defs(ast.parse(src))
     assert _reachable(fdefs, "q_plan") == {"q_plan", "_b", "_c"}
 
 
@@ -93,9 +93,36 @@ def test_detect_flags_kernel_edit_end_to_end(tmp_path, monkeypatch):
     )
     new = old.replace("pdf * 1", "pdf * 2")
     old_fns, new_fns = _functions_of(old), _functions_of(new)
-    fdefs = _module_fdefs(ast.parse(new))
+    fdefs = _module_defs(ast.parse(new))
     hits = sorted(
         n for n in _reachable(fdefs, "q_plan")
         if old_fns.get(n) != new_fns.get(n)
     )
     assert hits == ["_kernel"]
+
+
+def test_changed_sql_constant_marks_its_key():
+    """A key's SQL text is usually a module-level constant (_Q10_BODY,
+    _SCALAR_SQL) that its decorator or register_sql statement names,
+    possibly through another constant (_REVENUE). Editing only the text
+    must flag the key; a functions-only diff saw no change at all."""
+    old = (
+        "_REVENUE = 'SUM(l_extendedprice)'\n"
+        "_BODY = f\"SELECT {_REVENUE} FROM lineitem WHERE l_returnflag = 'R'\"\n"
+        "_OTHER = 'SELECT 1'\n"
+        "register_sql('q_sql', _BODY, family='sql', scale_notes='', doc='')\n"
+        "@register('q_df', oracle=_BODY)\n"
+        "def q_df(spark, sf):\n    return None\n"
+    )
+    defs = _module_defs(ast.parse(old))
+    assert _reachable(defs, "q_sql") == {"q_sql", "_BODY", "_REVENUE"}
+    for new in (old.replace("'R'", "'A'"), old.replace("SUM(", "MAX(")):
+        old_fns, new_fns = _functions_of(old), _functions_of(new)
+        for root in ("q_sql", "q_df"):
+            hits = [n for n in _reachable(_module_defs(ast.parse(new)), root)
+                    if old_fns.get(n) != new_fns.get(n)]
+            assert hits, (root, new)
+    edited = old.replace("SELECT 1", "SELECT 2")
+    old_fns, new_fns = _functions_of(old), _functions_of(edited)
+    assert not [n for n in _reachable(defs, "q_sql")
+                if old_fns.get(n) != new_fns.get(n)]
