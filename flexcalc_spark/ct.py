@@ -4,13 +4,22 @@ re-expressed on the Spark slice-table model (SURVEY §1.2).
 Data model: a projection stack / volume is a DataFrame of 2-D slices
     (dataset_id: string, axis: int, idx: int, h: int, w: int,
      dtype: string, px: binary)
-with ``px`` the raw C-order bytes of one float32 slice. Spark partitions
-the stack slice-wise; elementwise kernels run as Arrow-vectorized
-``mapInPandas`` (one slice per row), whole-stack ops as
-``groupBy(dataset_id).applyInPandas``.
+with ``px`` the raw C-order bytes of one (h, w) slice. A row's ``dtype``
+tag always names the type its bytes are stored in: every reader decodes
+by the tag, every writer tags what it wrote (float32 unless the op
+narrows, as cast2type does).
 
-Reference parity (cites are module::symbol — the /root/reference mount is
-empty, see SURVEY §0):
+Every per-slice operator crosses into numpy through three helpers:
+- ``_decode``: one frombuffer of a group of slices sharing (h, w, dtype)
+  into an (n, h, w) stack;
+- ``_map_slices``: slice -> slice kernels over those stacks (one
+  Arrow-vectorized ``mapInPandas``); h, w and the tag follow the result;
+- ``_reduce_slices``: slice -> scalars kernels, one output row per slice,
+  which a relational aggregation then folds.
+Whole-stack ops assemble a dataset with ``groupBy(...).applyInPandas``.
+
+Reference parity (cites are module::symbol — the reference source is not
+available offline, see SURVEY §0):
 - R2  preprocess        <- flexcalc/process.py::preprocess
 - R3  residual_rings    <- flexcalc/process.py::residual_rings
 - R9  bounding_box      <- flexcalc/process.py::bounding_box
@@ -24,11 +33,11 @@ R25 (FDK/SIRT reconstruction) needs the ASTRA GPU toolbox, unavailable
 offline — ``reconstruct_hook`` documents the applyInPandas extension
 point and raises NotImplementedError.
 
-Scale: one slice row ~ h*w*4 bytes; a 4k-detector slice is 64 MB — rows
-stay under Arrow batch limits, stacks of any depth distribute across
-executors. Only the truly-3D ops (R12/R13/R15) assemble a whole dataset
-in one worker (SURVEY §4.3.4 constraint: one dataset must fit one
-worker), everything else is per-slice streaming.
+Scale: one float32 slice row is h*w*4 bytes; a 4k-detector slice is
+64 MB — rows stay under Arrow batch limits, stacks of any depth
+distribute across executors. Only the truly-3D ops (R3/R15/R17)
+assemble a whole dataset in one worker (SURVEY §4.3.4 constraint: one
+dataset must fit one worker), everything else is per-slice streaming.
 """
 
 from __future__ import annotations
@@ -43,7 +52,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
-    LongType,
     DoubleType,
     StringType,
     StructField,
@@ -88,40 +96,79 @@ def array_from_slices(df: DataFrame) -> np.ndarray:
     )
 
 
+def _decode(g: pd.DataFrame, p: str = "") -> np.ndarray:
+    """The (n, h, w) stack of slice group ``g`` whose rows share one
+    (h, w, dtype): a single frombuffer over the concatenated ``p + "px"``
+    blobs, in the dtype the rows are tagged with (``p`` selects a
+    prefixed copy of the slice columns, e.g. the fixed side of a join)."""
+    h, w, dt = (g[p + c].iloc[0] for c in ("h", "w", "dtype"))
+    return np.frombuffer(
+        b"".join(bytes(b) for b in g[p + "px"]), dtype=np.dtype(dt)
+    ).reshape(len(g), int(h), int(w))
+
+
 def _batch_groups(pdf: pd.DataFrame):
-    """Yield (positions, arr) per homogeneous (h, w, dtype) group of an
-    Arrow batch: positions are integer row positions into ``pdf``, arr is
-    the group's slices stacked as one (n, h, w) ndarray (a single
-    frombuffer over the concatenated blobs — no per-row Python loop).
-    Kernels vectorize over the whole stack; mixed-shape batches simply
-    split into a few homogeneous stacks."""
+    """Yield (positions, stack) per homogeneous (h, w, dtype) group of a
+    batch: positions are integer row positions into ``pdf``, stack is
+    ``_decode`` of the group. Kernels vectorize over the whole stack;
+    mixed-shape batches simply split into a few homogeneous stacks."""
     pdf = pdf.reset_index(drop=True)
-    for (h, w, dt), g in pdf.groupby(["h", "w", "dtype"], sort=False):
-        arr = np.frombuffer(
-            b"".join(bytes(b) for b in g["px"]), dtype=np.dtype(dt)
-        ).reshape(len(g), int(h), int(w))
-        yield g.index.to_numpy(), arr
+    for _, g in pdf.groupby(["h", "w", "dtype"], sort=False):
+        yield g.index.to_numpy(), _decode(g)
 
 
-def _map_slices(df: DataFrame, kernel) -> DataFrame:
-    """Run an elementwise numpy kernel over every slice (mapInPandas).
-
-    ``kernel`` receives the whole homogeneous stack as one (n, h, w)
-    array — columnar numpy over the Arrow batch, not row-at-a-time."""
+def _map_slices(df: DataFrame, kernel, dtype=np.float32) -> DataFrame:
+    """Slice -> slice: ``kernel`` maps each homogeneous (n, h, w) stack
+    of a batch to an (n, h', w') stack, stored as ``dtype``; each row's
+    h, w and dtype tag follow the result."""
+    tag = np.dtype(dtype).name
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_px = [None] * len(pdf)
+            pdf = pdf.reset_index(drop=True)
+            px = [None] * len(pdf)
+            h, w = pdf["h"].to_numpy().copy(), pdf["w"].to_numpy().copy()
             for pos, arr in _batch_groups(pdf):
-                res = np.ascontiguousarray(kernel(arr), dtype=np.float32)
+                res = np.ascontiguousarray(kernel(arr), dtype=dtype)
+                h[pos], w[pos] = res.shape[1], res.shape[2]
                 for j, p in enumerate(pos):
-                    out_px[p] = res[j].tobytes()
-            pdf = pdf.reset_index(drop=True).copy()
-            pdf["px"] = out_px
-            pdf["dtype"] = "float32"
-            yield pdf
+                    px[p] = res[j].tobytes()
+            yield pdf.assign(h=h, w=w, dtype=tag, px=px)
 
     return df.mapInPandas(mapper, SLICE_SCHEMA)
+
+
+def _reduce_slices(df: DataFrame, schema: StructType, kernel) -> DataFrame:
+    """Slice -> scalars: ``kernel`` maps each homogeneous (n, h, w) stack
+    to one length-n array per ``schema`` column the slice table does not
+    carry; the columns it does carry (dataset_id, idx) pass through. One
+    output row per slice, in batch order; column dtypes promote across
+    groups (uint8 minima next to float32 ones stay exact)."""
+    names = schema.fieldNames()
+    kept = [c for c in names if c in SLICE_SCHEMA.fieldNames()]
+    computed = [c for c in names if c not in kept]
+
+    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf = pdf.reset_index(drop=True)
+            pos, outs = zip(*((p, kernel(a)) for p, a in _batch_groups(pdf)))
+            back = np.argsort(np.concatenate(pos))
+            by_col = zip(computed, zip(*outs), strict=True)
+            cols = {c: np.concatenate(vals)[back] for c, vals in by_col}
+            yield pdf[kept].assign(**cols)[names]
+
+    return df.mapInPandas(mapper, schema)
+
+
+def bin2x2(stack: np.ndarray) -> np.ndarray:
+    """2x2 block mean of an (n, h, w) stack in float64 — odd trailing
+    rows/columns drop, so the result is (n, h // 2, w // 2)."""
+    h, w = stack.shape[1] // 2 * 2, stack.shape[2] // 2 * 2
+    a = stack[:, :h, :w].astype(np.float64)
+    return (
+        a[:, 0::2, 0::2] + a[:, 0::2, 1::2]
+        + a[:, 1::2, 0::2] + a[:, 1::2, 1::2]
+    ) / 4.0
 
 
 # --------------------------------------------------------------------- R2
@@ -153,15 +200,10 @@ def residual_rings(df: DataFrame) -> DataFrame:
     applyInPandas per dataset (whole-stack op)."""
 
     def dering(pdf: pd.DataFrame) -> pd.DataFrame:
-        h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
-        imgs = np.frombuffer(
-            b"".join(bytes(b) for b in pdf["px"]), dtype=np.float32
-        ).reshape(len(pdf), h, w)
+        imgs = _decode(pdf)
         residual = imgs.mean(axis=0) - imgs.mean()
-        out = imgs - residual[None, :, :]
-        pdf = pdf.copy()
-        pdf["px"] = [out[i].astype(np.float32).tobytes() for i in range(len(pdf))]
-        return pdf
+        out = (imgs - residual[None, :, :]).astype(np.float32)
+        return pdf.assign(dtype="float32", px=[o.tobytes() for o in out])
 
     return df.groupBy("dataset_id").applyInPandas(dering, SLICE_SCHEMA)
 
@@ -171,7 +213,7 @@ def bounding_box(df: DataFrame, threshold: float = 0.0) -> DataFrame:
     """Content bounding box per dataset: min/max slice/row/col where
     px > threshold. flexcalc/process.py::bounding_box (R9).
 
-    Per-slice reduction in mapInPandas (tiny output per slice), then a
+    Per-slice reduction (_reduce_slices, tiny output per slice), then a
     relational min/max agg — no stack assembly."""
     reduced_schema = StructType(
         [
@@ -185,37 +227,21 @@ def bounding_box(df: DataFrame, threshold: float = 0.0) -> DataFrame:
         ]
     )
 
-    def reduce_slice(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            rmin = np.zeros(n, dtype=np.int64)
-            rmax = np.full(n, -1, dtype=np.int64)
-            cmin = np.zeros(n, dtype=np.int64)
-            cmax = np.full(n, -1, dtype=np.int64)
-            anyc = np.zeros(n, dtype=np.int64)
-            for pos, arr in _batch_groups(pdf):
-                h, w = arr.shape[1], arr.shape[2]
-                row_any = (arr > threshold).any(axis=2)       # (n, h)
-                col_any = (arr > threshold).any(axis=1)       # (n, w)
-                has = row_any.any(axis=1)
-                # first/last True via argmax on the bool mask and its flip
-                rmin[pos] = np.where(has, row_any.argmax(axis=1), 0)
-                rmax[pos] = np.where(has, h - 1 - row_any[:, ::-1].argmax(axis=1), -1)
-                cmin[pos] = np.where(has, col_any.argmax(axis=1), 0)
-                cmax[pos] = np.where(has, w - 1 - col_any[:, ::-1].argmax(axis=1), -1)
-                anyc[pos] = has.astype(np.int64)
-            pdf = pdf.reset_index(drop=True)
-            yield pd.DataFrame(
-                {
-                    "dataset_id": pdf["dataset_id"],
-                    "idx": pdf["idx"],
-                    "rmin": rmin, "rmax": rmax,
-                    "cmin": cmin, "cmax": cmax,
-                    "any_content": anyc,
-                }
-            )
+    def kernel(arr: np.ndarray) -> tuple:
+        h, w = arr.shape[1], arr.shape[2]
+        row_any = (arr > threshold).any(axis=2)       # (n, h)
+        col_any = (arr > threshold).any(axis=1)       # (n, w)
+        has = row_any.any(axis=1)
+        # first/last True via argmax on the bool mask and its flip
+        return (
+            np.where(has, row_any.argmax(axis=1), 0),
+            np.where(has, h - 1 - row_any[:, ::-1].argmax(axis=1), -1),
+            np.where(has, col_any.argmax(axis=1), 0),
+            np.where(has, w - 1 - col_any[:, ::-1].argmax(axis=1), -1),
+            has.astype(np.int64),
+        )
 
-    red = df.mapInPandas(reduce_slice, reduced_schema)
+    red = _reduce_slices(df, reduced_schema, kernel)
     content = red.filter(F.col("any_content") == 1)
     return content.groupBy("dataset_id").agg(
         F.min("idx").alias("z0"),
@@ -265,28 +291,19 @@ def register_translation(df_fixed: DataFrame, df_moving: DataFrame) -> tuple[flo
             ]
         )
 
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                n = len(pdf)
-                wsum = np.zeros(n)
-                wy = np.zeros(n)
-                wx = np.zeros(n)
-                for pos, arr in _batch_groups(pdf):
-                    a = arr.astype(np.float64)
-                    h, w = a.shape[1], a.shape[2]
-                    rowsum = a.sum(axis=2)                    # (n, h)
-                    colsum = a.sum(axis=1)                    # (n, w)
-                    wsum[pos] = rowsum.sum(axis=1)
-                    # sum(img[y,x]*y) = sum_y y * rowsum[y] — one matvec
-                    wy[pos] = rowsum @ np.arange(h, dtype=np.float64)
-                    wx[pos] = colsum @ np.arange(w, dtype=np.float64)
-                pdf = pdf.reset_index(drop=True)
-                yield pd.DataFrame(
-                    {"idx": pdf["idx"], "wsum": wsum, "wy": wy, "wx": wx}
-                )
+        def kernel(arr: np.ndarray) -> tuple:
+            a = arr.astype(np.float64)
+            rowsum = a.sum(axis=2)                    # (n, h)
+            colsum = a.sum(axis=1)                    # (n, w)
+            # sum(img[y,x]*y) = sum_y y * rowsum[y] — one matvec
+            return (
+                rowsum.sum(axis=1),
+                rowsum @ np.arange(a.shape[1], dtype=np.float64),
+                colsum @ np.arange(a.shape[2], dtype=np.float64),
+            )
 
         agg = (
-            df.mapInPandas(partials, parts_schema)
+            _reduce_slices(df, parts_schema, kernel)
             .agg(
                 F.sum("wsum").alias("w"),
                 F.sum(F.col("idx") * F.col("wsum")).alias("wz"),
@@ -312,16 +329,13 @@ def append_tile(df_total: DataFrame, df_tile: DataFrame) -> DataFrame:
     """
 
     def blend(pdf: pd.DataFrame) -> pd.DataFrame:
-        h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
-        imgs = np.frombuffer(
-            b"".join(bytes(b) for b in pdf["px"]), dtype=np.float32
-        ).reshape(len(pdf), h, w).astype(np.float64)
+        imgs = _decode(pdf).astype(np.float64)
         weights = (imgs != 0).astype(np.float64)
         wsum = weights.sum(axis=0)
         blended = np.where(wsum > 0, imgs.sum(axis=0) / np.maximum(wsum, 1), 0.0)
-        first = pdf.iloc[[0]].copy()
-        first["px"] = [blended.astype(np.float32).tobytes()]
-        return first
+        return pdf.iloc[[0]].assign(
+            dtype="float32", px=[blended.astype(np.float32).tobytes()]
+        )
 
     both = df_total.unionByName(df_tile)
     return both.groupBy("dataset_id", "axis", "idx").applyInPandas(
@@ -343,43 +357,22 @@ def cast2type(
         stats_schema = StructType(
             [StructField("lo", DoubleType()), StructField("hi", DoubleType())]
         )
-
-        def minmax(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                n = len(pdf)
-                lo = np.zeros(n)
-                hi = np.zeros(n)
-                for pos, arr in _batch_groups(pdf):
-                    lo[pos] = arr.min(axis=(1, 2))
-                    hi[pos] = arr.max(axis=(1, 2))
-                yield pd.DataFrame({"lo": lo, "hi": hi})
-
-        r = df.mapInPandas(minmax, stats_schema).agg(
-            F.min("lo").alias("lo"), F.max("hi").alias("hi")
-        ).collect()[0]
+        r = _reduce_slices(
+            df, stats_schema,
+            lambda arr: (arr.min(axis=(1, 2)), arr.max(axis=(1, 2))),
+        ).agg(F.min("lo").alias("lo"), F.max("hi").alias("hi")).collect()[0]
         bounds = (r["lo"], r["hi"])
     lo, hi = bounds
     target = np.dtype(dtype)
     maxval = np.iinfo(target).max
     span = max(hi - lo, 1e-12)
 
-    # Genuine narrowing: px bytes are stored in the TARGET dtype (rounded
-    # integers) and the row's dtype tag matches, so array_from_slices and
-    # any downstream kernel reconstruct the narrow array faithfully.
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_px = [None] * len(pdf)
-            for pos, arr in _batch_groups(pdf):
-                scaled = np.clip((arr - lo) / span, 0.0, 1.0) * maxval
-                coded = np.round(scaled).astype(target)
-                for j, p in enumerate(pos):
-                    out_px[p] = coded[j].tobytes()
-            pdf = pdf.reset_index(drop=True).copy()
-            pdf["px"] = out_px
-            pdf["dtype"] = str(target)
-            yield pdf
+    # genuine narrowing: the bytes are the rounded integers themselves
+    def kernel(arr: np.ndarray) -> np.ndarray:
+        scaled = np.clip((arr - lo) / span, 0.0, 1.0) * maxval
+        return np.round(scaled).astype(target)
 
-    return df.mapInPandas(mapper, SLICE_SCHEMA)
+    return _map_slices(df, kernel, target)
 
 
 # --------------------------------------------------------------------- R5
@@ -503,13 +496,9 @@ def optimize_axis_offset(
                 # homogeneous stacks reduces in one vectorized pass
                 pdf = pdf.reset_index(drop=True)
                 by = ["h", "w", "dtype", "f_h", "f_w", "f_dtype"]
-                for (h, w, dt, fh, fw, fdt), g in pdf.groupby(by, sort=False):
-                    a = np.frombuffer(
-                        b"".join(bytes(b) for b in g["px"]), dtype=np.dtype(dt)
-                    ).reshape(len(g), int(h), int(w)).astype(np.float64)
-                    r = np.frombuffer(
-                        b"".join(bytes(b) for b in g["f_px"]), dtype=np.dtype(fdt)
-                    ).reshape(len(g), int(fh), int(fw))
+                for _, g in pdf.groupby(by, sort=False):
+                    a = _decode(g).astype(np.float64)
+                    r = _decode(g, "f_")
                     ssd[g.index.to_numpy()] = ((a - r) ** 2).sum(axis=(1, 2))
                 yield pd.DataFrame({"ssd": ssd})
 
@@ -535,29 +524,7 @@ def bin_slices(df: DataFrame) -> DataFrame:
     """2x spatial binning per slice (detector pixel binning, the
     `sample=` parameter of R8): 2x2 block mean, halved h/w."""
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            px = [None] * n
-            hs = np.zeros(n, dtype=np.int64)
-            ws = np.zeros(n, dtype=np.int64)
-            for pos, arr in _batch_groups(pdf):
-                h2, w2 = arr.shape[1] // 2 * 2, arr.shape[2] // 2 * 2
-                a = arr[:, :h2, :w2].astype(np.float64)
-                small = (
-                    a[:, 0::2, 0::2] + a[:, 0::2, 1::2]
-                    + a[:, 1::2, 0::2] + a[:, 1::2, 1::2]
-                ) / 4.0
-                coded = small.astype(np.float32)
-                hs[pos], ws[pos] = small.shape[1], small.shape[2]
-                for j, p in enumerate(pos):
-                    px[p] = coded[j].tobytes()
-            pdf = pdf.reset_index(drop=True).copy()
-            pdf["px"], pdf["h"], pdf["w"] = px, hs, ws
-            pdf["dtype"] = "float32"
-            yield pdf
-
-    return df.mapInPandas(mapper, SLICE_SCHEMA)
+    return _map_slices(df, bin2x2)
 
 
 # -------------------------------------------------------------------- R22
@@ -583,32 +550,23 @@ def find_marker(df: DataFrame, radius: int = 2) -> tuple[int, int, int]:
         ]
     )
 
-    def peaks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            score = np.full(n, -np.inf)
-            py = np.zeros(n, dtype=np.int64)
-            px_ = np.zeros(n, dtype=np.int64)
-            for pos, arr in _batch_groups(pdf):
-                a = arr.astype(np.float64)
-                # valid-mode correlation via strided windows: einsum over
-                # the (n, h', w', size, size) view never materializes it
-                win = np.lib.stride_tricks.sliding_window_view(
-                    a, (size, size), axis=(1, 2)
-                )
-                corr = np.einsum("nhwuv,uv->nhw", win, template)
-                flat = corr.reshape(len(pos), -1)
-                arg = flat.argmax(axis=1)
-                score[pos] = flat[np.arange(len(pos)), arg]
-                py[pos] = arg // corr.shape[2] + radius
-                px_[pos] = arg % corr.shape[2] + radius
-            pdf = pdf.reset_index(drop=True)
-            yield pd.DataFrame(
-                {"idx": pdf["idx"], "score": score, "py": py, "px_": px_}
-            )
+    def kernel(arr: np.ndarray) -> tuple:
+        # valid-mode correlation via strided windows: einsum over the
+        # (n, h', w', size, size) view never materializes it
+        win = np.lib.stride_tricks.sliding_window_view(
+            arr.astype(np.float64), (size, size), axis=(1, 2)
+        )
+        corr = np.einsum("nhwuv,uv->nhw", win, template)
+        flat = corr.reshape(len(arr), -1)
+        arg = flat.argmax(axis=1)
+        return (
+            flat[np.arange(len(arr)), arg],
+            arg // corr.shape[2] + radius,
+            arg % corr.shape[2] + radius,
+        )
 
     top = (
-        df.mapInPandas(peaks, peak_schema)
+        _reduce_slices(df, peak_schema, kernel)
         .agg(
             F.expr("max_by(idx, score)").alias("z"),
             F.expr("max_by(py, score)").alias("y"),
@@ -672,12 +630,9 @@ def surface_triangles(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     def extract(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("idx")
         h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
-        vol = np.stack(
-            [
-                np.frombuffer(b, dtype=np.dtype(dt)).reshape(h, w)
-                for b, dt in zip(pdf["px"], pdf["dtype"])
-            ]
-        ) > threshold
+        vol = np.empty((len(pdf), h, w), dtype=bool)
+        for pos, arr in _batch_groups(pdf):
+            vol[pos] = arr > threshold
         ds = pdf["dataset_id"].iloc[0]
         solid = np.pad(vol, 1).astype(bool)
         tris = []

@@ -25,11 +25,11 @@ storage layout layer; this is the Spark-native bucketing surface
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flexcalc_spark.operators.sinks import _scratch_dir
 from flexcalc_spark.registry import register
 from flexcalc_spark.tables import table
 
@@ -80,9 +80,7 @@ def _write_bucketed(
 def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join orders x lineitem via bucketed-at-rest tables (no shuffle at
     join time), then aggregate per order priority."""
-    root = os.path.join(
-        tempfile.gettempdir(), f"flexcalc_spark_buckets_{os.getpid()}"
-    )
+    root = _scratch_dir("buckets", sf_dir)
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     to = _write_bucketed(o, "orders", "o_orderkey", root)

@@ -20,12 +20,10 @@ SURVEY §4.3.3 storage-layout row (the at-rest optimization family).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flexcalc_spark.operators.sinks import _scratch_dir
 from flexcalc_spark.registry import register
 from flexcalc_spark.tables import table
 
@@ -88,9 +86,7 @@ _BOX = "l_partkey BETWEEN 200 AND 700 AND l_suppkey BETWEEN 10 AND 60"
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rewrite lineitem z-ordered by (l_partkey, l_suppkey), re-read the
     clustered layout, and answer a two-column box query on it."""
-    out = os.path.join(
-        tempfile.gettempdir(), f"flexcalc_spark_zorder_{os.getpid()}"
-    )
+    out = _scratch_dir("zorder", sf_dir)
     li = table(spark, sf_dir, "lineitem")
     (
         li.withColumn("zkey", morton_expr("l_partkey", "l_suppkey"))

@@ -192,7 +192,7 @@ def register_sql(
 # Rotation applied by scripts/rotate_grade_order.py from
 # CORRECTNESS history through r15 — stalest evidence
 # first, prior relative order preserved inside each tier.
-# Tiers at rotation time (never-graded/failed/changed: 61, r9: 14, r10: 29, r11: 34, r12: 25, r13: 35, r14: 23, r15: 35).
+# Tiers at rotation time (never-graded/failed/changed: 63, r9: 14, r10: 28, r11: 34, r12: 25, r13: 35, r14: 23, r15: 34).
 # Front of the next graded window: q_source_avro, q_source_jsonl_zst, q_dedup_containment_2stage, ...
 GRADE_ORDER: list[str] = [
     "q_source_avro", "q_source_jsonl_zst", "q_dedup_containment_2stage",
@@ -212,18 +212,18 @@ GRADE_ORDER: list[str] = [
     "q_sql_tpch6", "q_sql_tpch9", "q_sql_tpch11", "q_sql_tpch12",
     "q_sql_tpch16", "q_sql_tpch2", "q_sql_tpch15", "q_sql_tpch17",
     "q_sql_tpch20", "q_subquery_scalar", "q_subquery_correlated",
-    "q_subquery_in", "q_sql_tpch22", "q_join_asof", "q_join_salted",
-    "q_agg_distinct", "q_agg_approx", "q_agg_approx_percentile", "q_pivot",
-    "q_unpivot", "q_histogram", "q_agg_collect", "q_agg_minmax_by",
-    "q_agg_global", "q_agg_groupby", "q_agg_stats", "q_agg_percentile",
-    "q_agg_weighted_centroid", "q_rollup", "q_cube", "q_scan_project",
-    "q_sketch_hll", "q_sliding_distinct", "q_quality_entropy",
-    "q_anomaly_zscore", "q_retention", "q_session_stats", "q_cooccur",
-    "q_agg_skew_distinct", "q_join_bloom", "q_grouped_sample",
-    "q_embed_project", "q_cdc_upsert", "q_table_checksum", "q_ngram_lm",
-    "q_data_audit", "q_zorder_layout", "q_inverted_index", "q_session_paths",
-    "q_skyline", "q_corr_matrix", "q_global_rank", "q_ab_test",
-    "q_regression_multi", "q_dedup_chunks", "q_anonymize",
+    "q_subquery_in", "q_sql_tpch22", "q_zorder_layout", "q_join_bucketed",
+    "q_join_asof", "q_join_salted", "q_agg_distinct", "q_agg_approx",
+    "q_agg_approx_percentile", "q_pivot", "q_unpivot", "q_histogram",
+    "q_agg_collect", "q_agg_minmax_by", "q_agg_global", "q_agg_groupby",
+    "q_agg_stats", "q_agg_percentile", "q_agg_weighted_centroid", "q_rollup",
+    "q_cube", "q_scan_project", "q_sketch_hll", "q_sliding_distinct",
+    "q_quality_entropy", "q_anomaly_zscore", "q_retention",
+    "q_session_stats", "q_cooccur", "q_agg_skew_distinct", "q_join_bloom",
+    "q_grouped_sample", "q_embed_project", "q_cdc_upsert",
+    "q_table_checksum", "q_ngram_lm", "q_data_audit", "q_inverted_index",
+    "q_session_paths", "q_skyline", "q_corr_matrix", "q_global_rank",
+    "q_ab_test", "q_regression_multi", "q_dedup_chunks", "q_anonymize",
     "q_join_interval_outer", "q_ct_fbp", "q_ewma", "q_debounce",
     "q_seq_pattern", "q_sample_weighted", "q_scd2_pit",
     "q_percentile_select", "q_join_fuzzy", "q_triangle_count",
@@ -255,8 +255,8 @@ GRADE_ORDER: list[str] = [
     "q_histogram_equidepth_approx", "q_mad_outliers_approx",
     "q_trajectory_sim", "q_decontaminate", "q_data_profile", "q_incr_mv",
     "q_dedup_minhash", "q_bm25", "q_bpe_tokenize", "q_trajectory_dtw",
-    "q_label_prop", "q_bfs_hops", "q_join_bucketed", "q_pack_sequences",
-    "q_mix_sample", "q_sketch_cms", "q_snapshot_diff", "q_join_nullsafe",
+    "q_label_prop", "q_bfs_hops", "q_pack_sequences", "q_mix_sample",
+    "q_sketch_cms", "q_snapshot_diff", "q_join_nullsafe",
     "q_agg_weighted_median", "q_window_session", "q_ct_centre",
     "q_ct_histogram", "q_ct_bbox", "q_ct_threshold", "q_ct_moments",
     "q_ct_preprocess", "q_sample_split", "q_sample_stratified",

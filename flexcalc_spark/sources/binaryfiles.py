@@ -76,7 +76,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from flexcalc_spark.ct import SLICE_SCHEMA
+from flexcalc_spark.ct import SLICE_SCHEMA, bin2x2
 
 # decoded: (path, h, w, dtype, px) — px raw C-order bytes
 DECODED_SCHEMA = StructType(
@@ -1259,16 +1259,6 @@ def _media_raw_groups(pdf: pd.DataFrame, corrupt: list):
             yield np.asarray(ps), stack
 
 
-def _resize_half_stack(stack: np.ndarray) -> np.ndarray:
-    """Batch 2x downsample by 2x2 block mean over an (n, h, w) stack."""
-    h, w = stack.shape[1] // 2 * 2, stack.shape[2] // 2 * 2
-    a = stack[:, :h, :w].astype(np.float64)
-    return (
-        a[:, 0::2, 0::2] + a[:, 0::2, 1::2]
-        + a[:, 1::2, 0::2] + a[:, 1::2, 1::2]
-    ) / 4.0
-
-
 def _media_means(pdf: pd.DataFrame, reduce: Callable) -> tuple:
     """Per-row (h, w, repr(mean)) arrays of a media batch, one vectorized
     ``reduce(stack) -> (h, w, means)`` per _media_raw_groups group; rows
@@ -1287,7 +1277,7 @@ def _media_means(pdf: pd.DataFrame, reduce: Callable) -> tuple:
 
 
 def _resized(stack: np.ndarray) -> tuple:
-    small = _resize_half_stack(stack)
+    small = bin2x2(stack)
     return small.shape[1], small.shape[2], small.mean(axis=(1, 2))
 
 

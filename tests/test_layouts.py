@@ -108,6 +108,30 @@ def test_compacted_sink_writes_exactly_four_files(spark):
     assert len(parts) == 4, parts
 
 
+def test_layout_keys_scratch_registered_for_cleanup(spark):
+    """q_zorder_layout and q_join_bucketed write their layouts under
+    sinks._scratch_dir, so this process's atexit hook removes them and
+    the dead-owner sweep reaps what a killed run left; the old
+    pid-only names (flexcalc_spark_zorder_<pid>) had no cleanup."""
+    import os as _os
+    import tempfile as _tempfile
+
+    from flexcalc_spark import registry
+    from flexcalc_spark.operators import sinks
+
+    for key in ("q_zorder_layout", "q_join_bucketed"):
+        registry.QUERIES[key](spark, SF_DIR).collect()
+    # snapshot before the _scratch_dir calls below, which register
+    # their own result
+    registered = set(sinks._SCRATCH)
+    for tag in ("zorder", "buckets"):
+        expect = sinks._scratch_dir(tag, SF_DIR)
+        assert expect in registered
+        assert _os.path.isdir(expect)
+        legacy = f"flexcalc_spark_{tag}_{_os.getpid()}"
+        assert not _os.path.exists(_os.path.join(_tempfile.gettempdir(), legacy))
+
+
 def test_scratch_sweep_owner_liveness(tmp_path, monkeypatch):
     """ADVICE r13: stay-lazy source keys re-collected hours later cannot
     refresh mtime (no Python runs at re-collect), so the age-floored

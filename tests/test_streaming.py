@@ -206,20 +206,15 @@ def test_stream_stream_left_outer_join_contract(spark):
     assert must_emit <= got_null_ids, (must_emit - got_null_ids)
 
 
-def test_foreachbatch_upsert_is_idempotent(spark):
+def test_foreachbatch_upsert_is_idempotent(spark, tmp_path):
     """The foreachBatch sink must be replay-safe: state after the drain
     equals the batch aggregate, and re-running the whole availableNow
     stream over the same input leaves the state IDENTICAL (the
     exactly-once-by-idempotence contract)."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
     from flexcalc_spark.tables import events_with_time
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"flexcalc_febatch_{os.getpid()}"
-    )
+    out = str(tmp_path / "febatch")
     sw.run_stream_foreachbatch_upsert(spark, SF_DIR, out)
 
     def state():
